@@ -1,26 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.util.Locale
+
+import scala.util.control.NonFatal
+
+import graft.core.LocalSession
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries TIMESTAMP(NANOS); see graft.core.Tables
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus
+    val spark = LocalSession()
     // Capture-condition self-annotation: a bench captured on a contended
     // machine or against a cold page cache is not comparable round-to-round,
     // and the manual checks (PERF.md) were easy to forget — so the artifact
     // now carries its own flags.
     val loadAvg = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val contended = loadAvg > 0.5 * cpus.toInt
+    val contended = loadAvg > 0.5 * cpus
     // Warm-up: JVM/codegen/scheduler first-stage costs land here, not on
     // whichever query happens to run first. Reading the same file twice
     // also measures page-cache state: a cold first read is >2× the second.
@@ -70,17 +66,24 @@ object Bench {
     val benched = SparkEntry.queries
       .filterNot(q => q._1 == "q55_marex_golden" || q._1 == "q60_marex_unstructured"
         || q._1 == "q72_merge_genealogy")
-    val results = benched.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val runs = benched.toSeq.sortBy(_._1).map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      val ok = try { fn(spark, sfDir).count(); true } catch {
+        case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          false
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       // Untimed inter-query GC (JMH-style hygiene): releases the previous
       // query's shuffle/checkpoint blocks so each measurement reflects the
       // query, not its predecessors' accumulated heap pressure — observed
       // spread without this was 49-99 s for an identical registry.
       System.gc()
-      name -> dt
+      (name, dt, ok)
     }
+    // a query that throws has no time: it is named, never summed
+    val results = runs.collect { case (name, dt, true) => name -> dt }
+    val failed = runs.collect { case (name, _, false) => "\"" + name + "\"" }
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // Two renderings of the SAME measurement (same queries, same values):
     //  - the PERSISTED file keeps full precision plus the capture-condition
@@ -95,15 +98,18 @@ object Bench {
     //    the recoverable suffix and parses whole in any larger window.
     def fullQs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    def shortQs = results.map { case (k, v) => f""""$k":$v%.3f""" }
+    // JSON numbers take a '.' decimal point whatever the JVM locale
+    def num(v: Double, decimals: Int): String = String.format(Locale.ROOT, s"%.${decimals}f", v)
+    def shortQs = results.map { case (k, v) => s""""$k":${num(v, 3)}""" }
       .mkString("{", ",", "}")
     val fullLine =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"sf":"$sfDir",""" +
-      f""""load_avg_start":$loadAvg%.2f,"contended":$contended,""" +
-      f""""warmup_first_s":$warm1%.3f,"warmup_second_s":$warm2%.3f,""" +
-      f""""cold_cache":$coldCacheFinal,"degraded_host":$degradedHost}"""
+      s""""failed":${failed.mkString("[", ",", "]")},""" +
+      s""""load_avg_start":${num(loadAvg, 2)},"contended":$contended,""" +
+      s""""warmup_first_s":${num(warm1, 3)},"warmup_second_s":${num(warm2, 3)},""" +
+      s""""cold_cache":$coldCacheFinal,"degraded_host":$degradedHost}"""
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$shortQs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":$shortQs,"sf":"$sfDir"}"""
     // Persist the full line to a file FIRST (its info line must precede the
     // contract line, which the driver tail-parses): the driver's
     // BENCH_r*.json keeps only a truncated log TAIL (round 10's artifact

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.marex._
@@ -20,7 +19,7 @@ import graft.marex._
 object ScaleDemo {
   def main(args: Array[String]): Unit = {
     val nYears = if (args.nonEmpty) args(0).toInt else 40
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.LocalSession.cpus
     // Shuffle partitions scale with the FIELD, not the core count: at the
     // production shape (720×1440 × 730 days ≈ 757 M samples) 32 partitions
     // puts ~24 M rows in one sort task and starves execution memory; target
@@ -35,16 +34,16 @@ object ScaleDemo {
     // targets ~1 M samples/partition (its kernel-payload rows are wider and
     // the split/merge loop keeps several checkpointed generations live);
     // the gridded detect path sustains 4 M.
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", (methodArg match {
-      case "unstructured" => math.max(cpus.toInt, (dimsNy * dimsNy * nYears / 1000000L).toInt)
+    val shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt).getOrElse(methodArg match {
+      case "unstructured" => math.max(cpus, (dimsNy * dimsNy * nYears / 1000000L).toInt)
       case "zappend" => // args(0) = months of daily slices in ONE store
-        math.max(cpus.toInt, (dimsNy * dimsNx * (nYears * 30L + 3) / 4000000L).toInt)
+        math.max(cpus, (dimsNy * dimsNx * (nYears * 30L + 3) / 4000000L).toInt)
       case "zshard" | "zgrow" => // args(0) = months of daily slices
-        math.max(cpus.toInt, (dimsNy * dimsNx * nYears * 30L / 4000000L).toInt)
+        math.max(cpus, (dimsNy * dimsNx * nYears * 30L / 4000000L).toInt)
       case "feed" => // args(0) = base days; total = 2× base
-        math.max(cpus.toInt, (dimsNy * dimsNx * nYears * 2L / 4000000L).toInt)
-      case _ => math.max(cpus.toInt, (dimsNy * dimsNx * 365L * nYears / 4000000L).toInt)
-    }).toString)
+        math.max(cpus, (dimsNy * dimsNx * nYears * 2L / 4000000L).toInt)
+      case _ => math.max(cpus, (dimsNy * dimsNx * 365L * nYears / 4000000L).toInt)
+    })
     // At production grids the per-pixel dimension tables (climatology /
     // threshold: |pixels|×366 rows ≈ 380 M at 0.25°) are NOT broadcastable
     // — a mis-estimated build side would collect GBs to the driver
@@ -57,12 +56,7 @@ object ScaleDemo {
       case "unstructured" => dimsNy * dimsNy // mesh cells = side²
       case _ => dimsNy * dimsNx
     }) > 100000L
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder0 = graft.core.LocalSession.builder(shufflePartitions)
       // the detect plan carries thousands of SQL metrics; at ~300 tasks the
       // per-task accumulator payloads alone cross the 1 GiB default during
       // eager checkpoints — size the cap like a production fat-driver node

@@ -1,36 +1,39 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.plans.HistogramQuantileAgg
 
 /** Histogram-approximate grouped quantile, the marEx thresholding primitive.
   *
   * Re-expresses the reference's fixed-bin histogram quantile
   * (`marEx/detect.py:2737–2865`: asymmetric bins — one catch-all bin below
   * `lo`, then `nBins` uniform bins of `width` — per-group counts, CDF, and
-  * linear interpolation between bin centers) as a fully relational Spark
-  * plan: a single shuffle to `groupBy(group..., bin)`, then per-group window
-  * cumsum and closed-form interpolation expressions. No UDAF and no driver
-  * collection, so it scales to any number of groups; the per-group state is
-  * `nBins` rows, independent of input size, and partial aggregation
-  * (map-side combine) collapses the input before the shuffle.
+  * linear interpolation between bin centers) as one grouped aggregate,
+  * [[graft.plans.HistogramQuantileAgg]]: partial aggregation collapses each
+  * group's input to a count buffer before the shuffle, so the per-group
+  * state is at most `nBins + 1` counts, independent of input size.
   *
   * Algorithm (deterministic, pure arithmetic — bit-identical across engines,
   * which the DuckDB-oracle gate relies on):
-  *   bin(v)    = 0 if v < lo else min(floor((v-lo)/width)+1, nBins)
+  *   bin(v)    = 0 if v < lo else min(floor((v-lo)/width)+1, nBins);
+  *               none for a null or NaN v (detect.py:2704–2732 masks NaN)
   *   center(b) = lo + (b-0.5)*width for b >= 1; center(0) = lo
   *   b*        = first bin (ascending) whose cdf >= q, cdf = cum_count/total
   *   result    = c_prev + (q - cdf_prev)/(cdf* - cdf_prev) * (center(b*) - c_prev)
   * where (cdf_prev, c_prev) come from the previous *present* bin, or (0, lo)
   * when b* is the first present bin. If b* = 0 the result is `lo` (all mass
   * below range), mirroring the reference's clamp (detect.py:2839–2864).
+  * A group with no counted sample emits no row.
   */
 object HistogramQuantile {
 
+  /** The histogram bin of `value`; null for a null or NaN value. */
   def binCol(value: Column, lo: Double, width: Double, nBins: Int): Column =
-    when(value < lo, lit(0))
-      .otherwise(least(floor((value - lo) / width).cast("int") + 1, lit(nBins)))
+    when(value.isNull || isnan(value), lit(null).cast("int"))
+      .when(value < lo, lit(0))
+      .otherwise(least(floor((value - lo) / width) + 1, lit(nBins.toLong)).cast("int"))
 
   /** Per-group approximate quantile.
     *
@@ -52,13 +55,9 @@ object HistogramQuantile {
       lo: Double,
       width: Double,
       nBins: Int,
-      out: String = "approx_quantile"): DataFrame = {
-    val binned = df
-      .withColumn("bin", binCol(col(valueCol), lo, width, nBins))
-      .groupBy(groupCols.map(col) :+ col("bin"): _*)
-      .agg(count(lit(1)).as("cnt"))
-    quantileFromCounts(binned, groupCols, q, lo, width, out)
-  }
+      out: String = "approx_quantile"): DataFrame =
+    perGroup(df, groupCols,
+      HistogramQuantileAgg.histogramQuantile(col(valueCol), q, lo, width, nBins), out)
 
   /** Quantile from pre-aggregated per-(group, bin) counts in columns
     * `bin`/`cnt`. Entry point for callers that pool histograms (sum counts
@@ -72,73 +71,11 @@ object HistogramQuantile {
       q: Double,
       lo: Double,
       width: Double,
-      out: String = "approx_quantile"): DataFrame = {
-    val gc = groupCols.map(col)
-    // ONE aggregate instead of exchange + global sort + WindowExec: the
-    // per-group histogram is bounded (≤ nBins+1 entries), so the CDF walk is
-    // a per-group array scan, not a window over every (group, bin) row.
-    // The previous formulation sorted the full per-bin row set and ran
-    // three window functions over it — WindowExec is outside whole-stage
-    // codegen and was the single most expensive stage of the hobday
-    // histogram query (8.1 s task CPU of its 17 s total at sf0.1).
-    //
-    // Bit-compatibility with the window form (and with the DuckDB oracle):
-    // the cumulative counts are exact LONG sums scanned in ascending-bin
-    // order (sort_array on unique bins = the window's orderBy), the CDFs
-    // are the same long→double divisions, and the interpolation expression
-    // below is token-identical — so every emitted double matches the old
-    // plan bit-for-bit (q13/q61/q108 oracle gates + DetectSpec lock this).
-    val hist = binned.groupBy(gc: _*)
-      .agg(sum(col("cnt")).cast("long").as("tot"),
-        sort_array(collect_list(struct(
-          col("bin").cast("int").as("bin"),
-          col("cnt").cast("long").as("cnt")))).as("h"))
+      out: String = "approx_quantile"): DataFrame =
+    perGroup(binned, groupCols,
+      HistogramQuantileAgg.fromCounts(col("bin"), col("cnt"), q, lo, width), out)
 
-    // CDF scan over the sorted histogram: find the first bin whose
-    // cdf = cum/tot reaches q, carrying (previous present bin, its cum).
-    // Accumulator: (done, pbin, pcum, sbin, scum, lbin, cum) — sbin/scum
-    // freeze at the crossing; lbin/cum keep running so pbin/pcum are the
-    // state just before it. cdf is monotone, so the first crossing is the
-    // window form's unique `cdf >= q && prev_cdf < q` row.
-    val init = struct(lit(false).as("done"),
-      lit(null).cast("int").as("pbin"), lit(0L).as("pcum"),
-      lit(null).cast("int").as("sbin"), lit(0L).as("scum"),
-      lit(null).cast("int").as("lbin"), lit(0L).as("cum"))
-    val scanned = hist.withColumn("st",
-      aggregate(col("h"), init, (acc, x) => {
-        val newCum = acc.getField("cum") + x.getField("cnt")
-        val crosses = !acc.getField("done") &&
-          newCum.cast("double") / col("tot").cast("double") >= q
-        when(acc.getField("done"), acc).otherwise(
-          when(crosses,
-            struct(lit(true).as("done"),
-              acc.getField("lbin").as("pbin"), acc.getField("cum").as("pcum"),
-              x.getField("bin").as("sbin"), newCum.as("scum"),
-              x.getField("bin").as("lbin"), newCum.as("cum")))
-          .otherwise(
-            struct(lit(false).as("done"),
-              lit(null).cast("int").as("pbin"), lit(0L).as("pcum"),
-              lit(null).cast("int").as("sbin"), lit(0L).as("scum"),
-              x.getField("bin").as("lbin"), newCum.as("cum"))))
-      }))
-
-    def center(b: Column): Column =
-      when(b >= 1, lit(lo) + (b.cast("double") - lit(0.5)) * lit(width)).otherwise(lit(lo))
-
-    val bin = col("st.sbin")
-    val cdf = col("st.scum").cast("double") / col("tot").cast("double")
-    val cdfPrev = when(col("st.pbin").isNull, lit(0.0))
-      .otherwise(col("st.pcum").cast("double") / col("tot").cast("double"))
-    val cPrev = when(col("st.pbin").isNull, lit(lo)).otherwise(center(col("st.pbin")))
-    scanned
-      .withColumn(out,
-        when(bin === 0, lit(lo)).otherwise(
-          cPrev + (lit(q) - cdfPrev) / (cdf - cdfPrev) * (center(bin) - cPrev)))
-      // degenerate-group parity with the window form it replaced: a group
-      // whose cdf never reaches q (possible only when tot is 0/NaN) emitted
-      // NO row under the old `cdf >= q` window filter; the aggregate scan
-      // would otherwise emit a NaN-quantile row for it (ADVICE r11)
-      .filter(col("st.sbin").isNotNull || col("st.scum") > 0)
-      .select(gc :+ col(out): _*)
-  }
+  private def perGroup(df: DataFrame, groupCols: Seq[String], agg: Column,
+      out: String): DataFrame =
+    df.groupBy(groupCols.map(col): _*).agg(agg.as(out)).filter(col(out).isNotNull)
 }

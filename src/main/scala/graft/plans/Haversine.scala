@@ -121,8 +121,7 @@ object GraftExtensions {
           throw new IllegalArgumentException(s"hist_quantile: $name must be numeric, got $other")
       }
     }
-    val v = if (exprs.head.dataType == DoubleType) exprs.head else Cast(exprs.head, DoubleType)
-    HistogramQuantileAgg(v, litNum(exprs(1), "q"), litNum(exprs(2), "lo"),
-      litNum(exprs(3), "width"), litNum(exprs(4), "nBins").toInt)
+    HistogramQuantileAgg.ofValues(GraftColumnBridge.column(exprs.head), litNum(exprs(1), "q"),
+      litNum(exprs(2), "lo"), litNum(exprs(3), "width"), litNum(exprs(4), "nBins").toInt)
   }
 }

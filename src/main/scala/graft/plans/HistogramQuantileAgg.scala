@@ -4,54 +4,67 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 
-/** Single-pass histogram quantile as a native Catalyst aggregate — the
-  * `TypedImperativeAggregate` form of [[graft.operators.HistogramQuantile]]
-  * (marEx D13, detect.py:2737–2865).
+import graft.operators.HistogramQuantile
+
+/** Fixed-bin histogram quantile as a mergeable native aggregate — the one
+  * implementation behind every histogram-quantile entry point (marEx D13,
+  * detect.py:2737–2865).
   *
-  * The relational form shuffles (group, bin) rows; this one shuffles a
-  * single fixed-size count buffer per group (nBins+1 longs), which wins when
-  * groups are few and wide — the classic sketch trade-off. The evaluation
-  * logic (CDF over *present* bins, linear interpolation between bin
-  * centers, clamp to `lo` when all mass is below range) is kept literally
-  * identical to the relational operator so the two are interchangeable.
+  * Input is `(bin, cnt)`: a bin index from [[HistogramQuantile.binCol]] and
+  * the number of samples it stands for (1 for a raw value, a pooled count
+  * for pre-binned histograms). A row with a null bin or count adds nothing.
+  * The buffer is a dense count array that grows to the largest bin seen, so
+  * pooled callers need not know `nBins`; it serialises only its present
+  * bins, so a partial-aggregate shuffle of many small groups ships a few
+  * (bin, count) pairs per group rather than the whole bin range.
+  *
+  * `eval` walks the CDF over present bins to the first bin whose
+  * cdf = cum/total reaches q and interpolates linearly between bin centers
+  * from the previous present bin, or from (cdf 0, `lo`) when there is none.
+  * All mass below range (bin 0) clamps to `lo` (detect.py:2839–2864); a
+  * group with no counted sample yields null.
   */
 case class HistogramQuantileAgg(
-    child: Expression,
+    bin: Expression,
+    cnt: Expression,
     q: Double,
     lo: Double,
     width: Double,
-    nBins: Int,
     override val mutableAggBufferOffset: Int = 0,
     override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends TypedImperativeAggregate[Array[Long]] with ImplicitCastInputTypes {
 
-  override def children: Seq[Expression] = Seq(child)
+  override def children: Seq[Expression] = Seq(bin, cnt)
+  override def inputTypes = Seq(IntegerType, LongType)
   override def nullable: Boolean = true
   override def dataType: DataType = DoubleType
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](nBins + 1)
+  override def createAggregationBuffer(): Array[Long] = Array.emptyLongArray
 
-  override def update(buf: Array[Long], input: org.apache.spark.sql.catalyst.InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val d = v.asInstanceOf[Double]
-      if (!d.isNaN) {
-        val bin = if (d < lo) 0
-        else math.min(math.floor((d - lo) / width).toInt + 1, nBins)
-        buf(bin) += 1
-      }
+  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
+    val b = bin.eval(input)
+    val c = cnt.eval(input)
+    if (b == null || c == null) buf
+    else {
+      val i = b.asInstanceOf[Int]
+      // double on growth: bins arriving in ascending order copy O(n) in total
+      val out = if (i < buf.length) buf
+        else java.util.Arrays.copyOf(buf, math.max(i + 1, 2 * buf.length))
+      out(i) += c.asInstanceOf[Long]
+      out
     }
-    buf
   }
 
   override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+    val out = if (b.length <= a.length) a else java.util.Arrays.copyOf(a, b.length)
     var i = 0
-    while (i < a.length) { a(i) += b(i); i += 1 }
-    a
+    while (i < b.length) { out(i) += b(i); i += 1 }
+    out
   }
 
   override def eval(buf: Array[Long]): Any = {
@@ -83,15 +96,20 @@ case class HistogramQuantileAgg(
     }
   }
 
+  /** Present bins only, ascending, as (int bin, long count) pairs. */
   override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(buf.length * 8)
-    buf.foreach(bb.putLong)
+    val present = buf.indices.filter(buf(_) != 0L)
+    val bb = ByteBuffer.allocate(present.length * 12)
+    present.foreach(i => bb.putInt(i).putLong(buf(i)))
     bb.array()
   }
 
   override def deserialize(bytes: Array[Byte]): Array[Long] = {
     val bb = ByteBuffer.wrap(bytes)
-    Array.fill(bytes.length / 8)(bb.getLong)
+    val n = bytes.length / 12
+    val buf = new Array[Long](if (n == 0) 0 else bb.getInt((n - 1) * 12) + 1)
+    (0 until n).foreach(_ => buf(bb.getInt()) = bb.getLong())
+    buf
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): HistogramQuantileAgg =
@@ -99,16 +117,23 @@ case class HistogramQuantileAgg(
   override def withNewInputAggBufferOffset(newOffset: Int): HistogramQuantileAgg =
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): HistogramQuantileAgg =
-    copy(child = newChildren.head)
+    copy(bin = newChildren(0), cnt = newChildren(1))
   override def prettyName: String = "histogram_quantile"
 }
 
 object HistogramQuantileAgg {
+  /** The aggregate over raw values: each non-null, non-NaN value counts once
+    * in its [[HistogramQuantile.binCol]] bin. */
+  def ofValues(value: Column, q: Double, lo: Double, width: Double, nBins: Int): HistogramQuantileAgg =
+    HistogramQuantileAgg(GraftColumnBridge.converted(HistogramQuantile.binCol(value, lo, width, nBins)),
+      Literal(1L), q, lo, width)
+
   /** Column-API entry point: `df.groupBy(...).agg(histogramQuantile($"v", 0.95, 0, 25, 200))`. */
-  def histogramQuantile(c: Column, q: Double, lo: Double, width: Double, nBins: Int): Column = {
-    val e = GraftColumnBridge.expr(c)
-    val d = if (e.dataType == DoubleType) e else Cast(e, DoubleType)
-    GraftColumnBridge.column(
-      HistogramQuantileAgg(d, q, lo, width, nBins).toAggregateExpression())
-  }
+  def histogramQuantile(c: Column, q: Double, lo: Double, width: Double, nBins: Int): Column =
+    GraftColumnBridge.column(ofValues(c, q, lo, width, nBins).toAggregateExpression())
+
+  /** The aggregate over pre-binned `(bin, cnt)` rows, e.g. pooled histograms. */
+  def fromCounts(bin: Column, cnt: Column, q: Double, lo: Double, width: Double): Column =
+    GraftColumnBridge.column(HistogramQuantileAgg(GraftColumnBridge.converted(bin),
+      GraftColumnBridge.converted(cnt), q, lo, width).toAggregateExpression())
 }
