@@ -2,7 +2,10 @@
 # Direct JVM runner for graft main classes (Bench/Verify/Explain) — same
 # classpath and JVM flags sbt's forked `runMain` uses, minus sbt startup.
 # Usage: scripts/run.sh graft.Bench [args...]
-CP="${GRAFT_CLASSES:-/root/repo/target/scala-2.13/classes}:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+# src/main/resources rides along: `sbt compile` does not copy it into the
+# class dir, and the DSv2 readers (zarr, netcdf) register through it.
+REPO="$(cd "$(dirname "$0")/.." && pwd)"
+CP="${GRAFT_CLASSES:-$REPO/target/scala-2.13/classes}:$REPO/src/main/resources:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 ADD_OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
          java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \

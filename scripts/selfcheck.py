@@ -9,9 +9,59 @@ bit-equal too (queries round on both sides), but we report near-misses
 separately to distinguish rounding noise from real bugs.
 
 Usage: python3 scripts/selfcheck.py [sfDir] [outDir]
+
+Parity mode compares two Verify output directories, e.g. a parent commit's
+against a change's: every query directory in either must exist in both with
+the same columns and, after sorting, the same rows; doubles compare by their
+bits, so -0.0 vs 0.0 or two NaN payloads count as differences.
+
+Usage: python3 scripts/selfcheck.py --parity parentOutDir changeOutDir [q1,q2,...]
 """
-import json, math, sys, glob, os
+import json, math, sys, glob, os, struct
 import duckdb
+
+
+def parity(dir_a, dir_b, only=None):
+    con = duckdb.connect()
+    def names(d):
+        return {os.path.basename(os.path.dirname(p)) for p in glob.glob(f"{d}/*/*.parquet")}
+    qs = names(dir_a) | names(dir_b)
+    qs = sorted(qs & only if only else qs)
+    def cell(v):
+        return ("f", struct.unpack("<q", struct.pack("<d", v))[0]) if isinstance(v, float) else v
+    def table(d, q):
+        if not glob.glob(f"{d}/{q}/*.parquet"):
+            return None, None
+        rel = con.execute(f"SELECT * FROM read_parquet('{d}/{q}/*.parquet')")
+        cols = [c[0] for c in rel.description]
+        order = sorted(range(len(cols)), key=lambda i: cols[i])
+        rows = [tuple(cell(r[i]) for i in order) for r in rel.fetchall()]
+        rows.sort(key=lambda row: tuple((x is None, str(type(x)), str(x)) for x in row))
+        return [cols[i] for i in order], rows
+    fails = []
+    for q in qs:
+        (ca, ra), (cb, rb) = table(dir_a, q), table(dir_b, q)
+        if ra is None or rb is None:
+            msg = f"missing in {dir_a if ra is None else dir_b}"
+        elif ca != cb:
+            msg = f"columns {ca} vs {cb}"
+        elif len(ra) != len(rb):
+            msg = f"row count {len(ra)} vs {len(rb)}"
+        else:
+            diff = [i for i, (x, y) in enumerate(zip(ra, rb)) if x != y]
+            msg = f"{len(diff)} rows differ, first row {diff[0]}: {ra[diff[0]]} vs {rb[diff[0]]}" if diff else None
+        if msg:
+            print(f"DIFF {q}: {msg}")
+            fails.append(q)
+        else:
+            print(f"SAME {q} ({len(ra)} rows)")
+    print(f"\n{len(qs) - len(fails)} same, {len(fails)} differ: {fails}")
+    return 1 if fails or not qs else 0
+
+
+if len(sys.argv) > 1 and sys.argv[1] == "--parity":
+    only = set(sys.argv[4].split(",")) if len(sys.argv) > 4 else None
+    sys.exit(parity(sys.argv[2], sys.argv[3], only))
 
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"

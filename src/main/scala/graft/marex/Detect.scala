@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.HistogramQuantile
+import graft.plans.HistogramQuantileAgg
 
 /** Detection stage: standardized anomalies → percentile thresholds → boolean
   * extreme-event field. Re-expresses marEx `detect.py` (D2–D17 in SURVEY.md
@@ -237,21 +238,36 @@ object Detect {
     nYears.toDouble * windowDays * math.pow(2 * spatialWindow + 1, 2) * (1 - q)
 
   /** D14: Hobday thresholds per (pixel, doy): percentile of the values within
-    * ±(w−1)/2 days of that doy across all years; each observation fans out to
-    * the target doys it feeds (detect.py:1858–2023).
+    * ±(w−1)/2 days of that doy across all years (detect.py:1858–2023).
+    *
+    * One shuffle on (y, x); each task then holds one pixel's per-doy samples
+    * and evaluates all 366 circular windows locally — the reference's
+    * per-chunk execution shape (detect.py:1921–1956 runs nanpercentile per
+    * doy-mask inside a chunk kernel). Exact mode sorts each window and
+    * interpolates at q·(n−1), as Spark `percentile` does. Approximate mode
+    * (D13) keeps the window as a count histogram of
+    * [[HistogramQuantile.binCol]] bins and slides it round the year, adding
+    * the day that enters and subtracting the day that leaves — integer
+    * counts make the subtraction exact, so every window equals its own
+    * histogram — then evaluates it with [[HistogramQuantileAgg.cdfWalk]].
+    * A (pixel, doy) row is emitted when its window holds at least one
+    * sample: a non-null value, and in approximate mode a non-NaN one.
     *
     * @param spatialWindow D15's spatial pooling half-width: each pixel's
     *        sample additionally includes its (2w+1)² spatial neighbors'
     *        values (5×5 in the reference, detect.py:2652–2668), with
-    *        periodic longitude when `nxWrap` is given. Implemented as a
-    *        second offset fan-out — counts pool exactly like the reference's
-    *        histogram pooling because the percentile runs on the pooled
-    *        sample.
+    *        periodic longitude when `nxWrap` is given. Each sample is
+    *        fanned out to the pixels it feeds before the shuffle, so pooled
+    *        windows are exactly the reference's pooled histograms
+    *        (detect.py:2494–2500); pixels beyond the grid edge keep their rows.
     * @return (y, x, doy, threshold) */
   def hobdayThreshold(anom: DataFrame, q: Double, windowDays: Int = 11,
       exact: Boolean = true, precision: Double = 0.01, maxAnomaly: Double = 5.0,
       spatialWindow: Int = 0, nxWrap: Option[Int] = None): DataFrame = {
+    val spark = anom.sparkSession
+    import spark.implicits._
     val h = (windowDays - 1) / 2
+    val nBins = math.ceil(maxAnomaly / precision).toInt
     def spatialFan(df: DataFrame): DataFrame = {
       val w = spatialWindow
       // ONE Generate over the precomputed (dy, dx) offset pairs: two chained
@@ -268,109 +284,59 @@ object Detect {
         .withColumnRenamed("ty", "y")
         .withColumnRenamed("tx", "x")
     }
-    if (exact) {
-      val fannedDoy = anom
-        .withColumn("d", explode(sequence(lit(-h), lit(h))))
-        .withColumn("doy", circDoy(dayofyear(col("time")), col("d")))
-      val fanned = if (spatialWindow <= 0) fannedDoy else spatialFan(fannedDoy)
-      fanned.groupBy("y", "x", "doy")
-        .agg(expr(s"percentile(anomaly, $q)").as("threshold"))
-    } else {
-      // D15 (2-D histogram path): bin and aggregate the raw rows FIRST —
-      // one partial-agg shuffle collapses |samples| rows to at most
-      // |pixels|×366×(nBins+1) counts — then pool those histograms over the
-      // circular doy window and spatial neighborhood (counts add linearly,
-      // so this is bit-identical to fanning raw rows, detect.py:2494–2500
-      // pools per-chunk histograms the same way). The windowDays×(2w+1)²
-      // fan-out thus runs on the bounded-size aggregate, not the data.
-      val nBins = math.ceil(maxAnomaly / precision).toInt
-      val binned0 = anom
-        .withColumn("doy0", dayofyear(col("time")))
-        .withColumn("bin",
-          HistogramQuantile.binCol(col("anomaly"), 0.0, precision, nBins))
-        .groupBy("y", "x", "doy0", "bin")
-        .agg(count(lit(1)).as("cnt"))
-      // Pool in two separable stages (window sums over a product index set
-      // commute): doy window first with a re-aggregation between, so the
-      // spatial fan multiplies the doy-pooled aggregate, not the 11× fanned
-      // rows — 11×B + (2w+1)²×B′ rows instead of 11×(2w+1)²×B.
-      val doyPooled = binned0
-        .withColumn("d", explode(sequence(lit(-h), lit(h))))
-        .withColumn("doy", circDoy(col("doy0"), col("d")))
-        .groupBy("y", "x", "doy", "bin")
-        .agg(sum("cnt").as("cnt"))
-      val pooled = if (spatialWindow <= 0) doyPooled
-        else spatialFan(doyPooled).groupBy("y", "x", "doy", "bin")
-          .agg(sum("cnt").as("cnt"))
-      HistogramQuantile.quantileFromCounts(pooled, Seq("y", "x", "doy"), q,
-        lo = 0.0, width = precision, out = "threshold")
-    }
-  }
-
-  /** D14 exact path, pixel-kernel formulation: one shuffle on (y, x), then
-    * each task holds one pixel's full (doy → values) map and computes all
-    * 366 circular-window percentiles locally — the reference's per-chunk
-    * execution shape (detect.py:1921–1956 runs nanpercentile per doy-mask
-    * inside a chunk kernel).
-    *
-    * Versus the fan-out formulation ([[hobdayThreshold]]): shuffle volume is
-    * |samples| instead of windowDays×|samples|, and the per-group state is a
-    * local sort instead of Catalyst's Percentile aggregation buffer.
-    * Measured at 40y×20×40 on local[32]: detect stage 185 s → 51 s
-    * (PERF.md). Results are identical (same linear-interpolation percentile
-    * at q·(n−1); equivalence asserted in DetectSpec).
-    * @return (y, x, doy, threshold) */
-  def hobdayThresholdKernel(anom: DataFrame, q: Double, windowDays: Int = 11): DataFrame = {
-    val spark = anom.sparkSession
-    import spark.implicits._
-    val h = (windowDays - 1) / 2
-    anom
-      .select(col("y").cast("int"), col("x").cast("int"),
-        dayofyear(col("time")).cast("int").as("doy"), col("anomaly").cast("double"))
+    // the kernel's sample: the anomaly itself, or (approximate) its bin
+    val sample = if (exact) col("anomaly")
+      else HistogramQuantile.binCol(col("anomaly"), 0.0, precision, nBins)
+    val samples = anom
+      .select(col("y"), col("x"), dayofyear(col("time")).as("doy"), sample.cast("double").as("s"))
+      .filter(col("s").isNotNull)
+    (if (spatialWindow <= 0) samples else spatialFan(samples))
+      .select(col("y").cast("int"), col("x").cast("int"), col("doy"), col("s"))
       .as[(Int, Int, Int, Double)]
       .groupByKey(r => (r._1, r._2))
       .flatMapGroups { (px: (Int, Int), it: Iterator[(Int, Int, Int, Double)]) =>
         val byDoy = Array.fill(367)(scala.collection.mutable.ArrayBuilder.make[Double])
-        val present = new Array[Boolean](367)
-        it.foreach { r => byDoy(r._3) += r._4; present(r._3) = true }
-        // target doys = every doy fed by at least one observation's window
-        val targets = new Array[Boolean](367)
-        var d = 1
-        while (d <= 366) {
-          if (present(d)) {
-            var o = -h
-            while (o <= h) { targets(((d - 1 + o) % 366 + 366) % 366 + 1) = true; o += 1 }
-          }
-          d += 1
-        }
-        val arrs = byDoy.map(_.result())
+        it.foreach(r => byDoy(r._3) += r._4)
+        val days = byDoy.map(_.result())
+        def day(d: Int): Array[Double] = days(((d - 1) % 366 + 366) % 366 + 1)
         val out = scala.collection.mutable.ArrayBuffer[(Int, Int, Int, Double)]()
-        d = 1
-        while (d <= 366) {
-          if (targets(d)) {
-            var n = 0
-            var o = -h
-            while (o <= h) { n += arrs(((d - 1 + o) % 366 + 366) % 366 + 1).length; o += 1 }
+        if (exact) {
+          var d = 1
+          while (d <= 366) {
+            val n = (-h to h).map(o => day(d + o).length).sum
             if (n > 0) {
               val vals = new Array[Double](n)
               var k = 0
-              o = -h
-              while (o <= h) {
-                val a = arrs(((d - 1 + o) % 366 + 366) % 366 + 1)
+              (-h to h).foreach { o =>
+                val a = day(d + o)
                 System.arraycopy(a, 0, vals, k, a.length)
                 k += a.length
-                o += 1
               }
               java.util.Arrays.sort(vals)
-              // linear interpolation at q·(n−1), matching Spark `percentile`
               val pos = q * (n - 1)
               val lo = pos.toInt
               val hi = math.min(lo + 1, n - 1)
-              val thr = vals(lo) + (pos - lo) * (vals(hi) - vals(lo))
-              out += ((px._1, px._2, d, thr))
+              out += ((px._1, px._2, d, vals(lo) + (pos - lo) * (vals(hi) - vals(lo))))
             }
+            d += 1
           }
-          d += 1
+        } else {
+          val counts = new Array[Long](nBins + 1)
+          var total = 0L
+          def add(bins: Array[Double], c: Long): Unit = {
+            bins.foreach(b => counts(b.toInt) += c)
+            total += c * bins.length
+          }
+          (-h to h).foreach(o => add(day(1 + o), 1L))
+          var d = 1
+          while (d <= 366) {
+            if (total > 0)
+              out += ((px._1, px._2, d,
+                HistogramQuantileAgg.cdfWalk(counts, total, q, 0.0, precision)))
+            add(day(d - h), -1L)
+            add(day(d + 1 + h), 1L)
+            d += 1
+          }
         }
         out.iterator
       }
@@ -410,16 +376,13 @@ object Detect {
     val thr = (cfg.methodExtreme match {
       case "global_extreme" =>
         globalThreshold(anom2, q, exact, cfg.precision, cfg.maxAnomaly)
-      case "hobday_extreme" if exact =>
-        // pixel-kernel path: one shuffle, local window percentiles
-        hobdayThresholdKernel(anom2, q, cfg.windowDaysHobday)
       case "hobday_extreme" =>
         hobdayThreshold(anom2, q, cfg.windowDaysHobday, exact, cfg.precision, cfg.maxAnomaly)
       // Persist the threshold table too (bounded: |pixels|×366 rows): it is
       // consumed by the comparison join AND returned to the caller — the
       // reference persists both at the same point (detect.py:679
-      // persist(extremes, thresholds)); without this the histogram path's
-      // window-heavy threshold plan re-executes per consumer.
+      // persist(extremes, thresholds)); without this the threshold
+      // plan re-executes per consumer.
     }).localCheckpoint()
     (anom2, thr, applyThreshold(anom2, thr))
   }

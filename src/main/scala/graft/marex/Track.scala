@@ -263,11 +263,6 @@ object Track {
     * parents by partitioning the child's cells to the nearest parent
     * centroid (haversine, T20); repeat until no multi-parent child remains.
     * Returns the updated id field and the merge ledger. */
-  /** See [[graft.core.Plans.iterCheckpoint]]: localCheckpoint + stats
-    * reset, mandatory for every checkpoint inside the round loop. */
-  private[marex] def iterCheckpoint(df: DataFrame): DataFrame =
-    graft.core.Plans.iterCheckpoint(df)
-
   def splitAndMerge(ids0: DataFrame, geom: DataFrame, cfg: TrackConfig,
       timeAxis: Option[DataFrame] = None): (DataFrame, DataFrame) = {
     val (ids, merges, _) = splitAndMergeReplay(ids0, geom, cfg, timeAxis, None, None)
@@ -312,12 +307,12 @@ object Track {
         .select(lit(t).cast("timestamp").as("time"), col("y"), col("x"), col("gid"))
     }
     val seamTime = seamTraj.map(_._1)
-    var ids = iterCheckpoint(ids0)
+    var ids = graft.core.Plans.iterCheckpoint(ids0)
     var mergesAcc: DataFrame =
       Seq.empty[(java.sql.Timestamp, Long, Seq[Long], Seq[Long], Seq[Double])]
         .toDF("time", "child_id", "parent_ids", "child_ids", "overlap_areas")
     var capture: DataFrame = captureAt match {
-      case Some(t) => iterCheckpoint(ids0.filter(col("time") === lit(t))
+      case Some(t) => graft.core.Plans.iterCheckpoint(ids0.filter(col("time") === lit(t))
         .select(lit(0).as("round"), col("y"), col("x"), col("gid")))
       case None => Seq.empty[(Int, Int, Int, Long)].toDF("round", "y", "x", "gid")
     }
@@ -334,14 +329,14 @@ object Track {
       // iterCheckpoint (NOT plain localCheckpoint — see its scaladoc):
       // bounds each round's executed plan AND resets the inherited stats
       // estimate. Object-level rows, so the materialization is cheap.
-      val pairs = iterCheckpoint(overlapPairs(cur, cfg.overlapThreshold, timeAxis))
+      val pairs = graft.core.Plans.iterCheckpoint(overlapPairs(cur, cfg.overlapThreshold, timeAxis))
       // children (time, gid) claimed by >1 parent — keys MUST include the
       // timestep: after a reassignment round the same gid exists at many
       // timesteps (cells inherit the parent's gid going forward).
       // Parents and their overlap areas are collected as ONE sorted struct
       // list so parent_ids and overlap_areas stay index-aligned (the
       // reference's parent_idx axis, track.py:3776–3793).
-      val multi = iterCheckpoint(pairs.groupBy("ctime", "id_c")
+      val multi = graft.core.Plans.iterCheckpoint(pairs.groupBy("ctime", "id_c")
         .agg(sort_array(collect_list(struct(col("id_p"), col("overlap_cells")))).as("po"),
           count(lit(1)).as("np"))
         .withColumn("parents", expr("transform(po, p -> p.id_p)"))
@@ -406,20 +401,20 @@ object Track {
         // a fragment re-contested in a later round supersedes its earlier
         // record: keep only the NEWEST per (time, child) — matching the
         // queue's sequential rename and the unstructured batch path
-        mergesAcc = iterCheckpoint(newMerges.unionByName(
+        mergesAcc = graft.core.Plans.iterCheckpoint(newMerges.unionByName(
           mergesAcc.join(newMerges.select("time", "child_id"),
             Seq("time", "child_id"), "left_anti")))
         val updated = untouched.select("time", "y", "x", "gid")
           .union(assigned.select("time", "y", "x", "gid"))
         // in replay mode `ids` stays seam-free (the slice re-injects per
         // round from the trajectory; reassignment cannot touch it anyway)
-        ids = iterCheckpoint(seamTime match {
+        ids = graft.core.Plans.iterCheckpoint(seamTime match {
           case Some(t) => updated.filter(col("time") =!= lit(t))
           case None => updated
         })
         captureAt.foreach { t =>
           if (!multi.filter(col("ctime") === lit(t)).isEmpty)
-            capture = iterCheckpoint(capture.unionByName(
+            capture = graft.core.Plans.iterCheckpoint(capture.unionByName(
               ids.filter(col("time") === lit(t))
                 .select(lit(round).as("round"), col("y"), col("x"), col("gid"))))
         }
@@ -484,6 +479,24 @@ object Track {
         col("overlap_areas"))
   }
 
+  /** Fan each row out to its 3×3 spatial neighborhood (the time face of
+    * 26-connectivity: dy, dx ∈ {−1, 0, 1} incl. the center), wrapping x on
+    * periodic grids and dropping out-of-bounds cells. `keep` columns pass
+    * through unchanged. THE single definition of the cross-time spatial
+    * connectivity — shared by [[labelSpaceTime]] and the incremental
+    * tracker's seam stitch so the two can't drift apart. */
+  private[marex] def fanNeighborhood(df: DataFrame, spec: GridSpec,
+      keep: Seq[String]): DataFrame = {
+    val offs = array((for (dy <- -1 to 1; dx <- -1 to 1)
+      yield struct(lit(dy).as("dy"), lit(dx).as("dx"))): _*)
+    val shiftedX =
+      if (spec.periodicX) pmod(col("x") + col("o.dx"), lit(spec.nx))
+      else col("x") + col("o.dx")
+    df.select(col("y") +: col("x") +: explode(offs).as("o") +: keep.map(col): _*)
+      .select((col("y") + col("o.dy")).as("y") +: shiftedX.as("x") +: keep.map(col): _*)
+      .filter(col("y").between(0, spec.ny - 1) && col("x").between(0, spec.nx - 1))
+  }
+
   /** T23 (true form): 3-D space-time connected-component labeling with
     * 26-connectivity — a cell at t links to any flagged cell at t±1 within
     * Chebyshev distance 1 in (y, x), INCLUDING the 8 time-diagonals
@@ -504,24 +517,6 @@ object Track {
     * label, but component count and per-event cell sets agree exactly.
     *
     * @return (time, y, x, event_id) */
-  /** Fan each row out to its 3×3 spatial neighborhood (the time face of
-    * 26-connectivity: dy, dx ∈ {−1, 0, 1} incl. the center), wrapping x on
-    * periodic grids and dropping out-of-bounds cells. `keep` columns pass
-    * through unchanged. THE single definition of the cross-time spatial
-    * connectivity — shared by [[labelSpaceTime]] and the incremental
-    * tracker's seam stitch so the two can't drift apart. */
-  private[marex] def fanNeighborhood(df: DataFrame, spec: GridSpec,
-      keep: Seq[String]): DataFrame = {
-    val offs = array((for (dy <- -1 to 1; dx <- -1 to 1)
-      yield struct(lit(dy).as("dy"), lit(dx).as("dx"))): _*)
-    val shiftedX =
-      if (spec.periodicX) pmod(col("x") + col("o.dx"), lit(spec.nx))
-      else col("x") + col("o.dx")
-    df.select(col("y") +: col("x") +: explode(offs).as("o") +: keep.map(col): _*)
-      .select((col("y") + col("o.dy")).as("y") +: shiftedX.as("x") +: keep.map(col): _*)
-      .filter(col("y").between(0, spec.ny - 1) && col("x").between(0, spec.nx - 1))
-  }
-
   def labelSpaceTime(flags: DataFrame, spec: GridSpec,
       timeAxis: Option[DataFrame] = None): DataFrame =
     labelSpaceTimeFromGids(

@@ -116,21 +116,6 @@ object ZarrOutput {
       "periodic_x" -> spec.periodicX.toString) ++ attrs)
   }
 
-  /** Export an unstructured (mesh) tracking result as the reference's
-    * output dataset on `(time, ncells)` — same variable set as
-    * [[writeTrackResult]] with the cell dimension in place of (lat, lon),
-    * plus the mesh's own per-cell arrays (`lat`, `lon`, `cell_areas`,
-    * `mask(ncells)`) so the store is self-describing the way the
-    * reference's unstructured fixtures are. Event properties (area,
-    * centroid, lifetime) are derived here with the SAME area-weighted
-    * spherical centroid the gridded tracker uses ([[Track.objectProps]],
-    * mesh cells mapped to degenerate (y=cell, x=0) coordinates) — the
-    * unstructured result carries only the id field and genealogy.
-    *
-    * Scale shape: identical to [[writeTrackResult]] — the (time, ncells)
-    * cube is one shuffle with fill-0 background; per-cell arrays are
-    * mesh-sized driver writes, the same bound the Mesh itself already
-    * holds in memory. */
   /** The per-(time, ID) event tables + lifetime bounds + sibling ledger
     * every tracked export writes — ONE definition shared by the gridded
     * and unstructured exporters, so a fill/dtype/padding fix cannot
@@ -179,6 +164,21 @@ object ZarrOutput {
       valueCols = Seq("merge_ledger"), fill = -1.0)
   }
 
+  /** Export an unstructured (mesh) tracking result as the reference's
+    * output dataset on `(time, ncells)` — same variable set as
+    * [[writeTrackResult]] with the cell dimension in place of (lat, lon),
+    * plus the mesh's own per-cell arrays (`lat`, `lon`, `cell_areas`,
+    * `mask(ncells)`) so the store is self-describing the way the
+    * reference's unstructured fixtures are. Event properties (area,
+    * centroid, lifetime) are derived here with the SAME area-weighted
+    * spherical centroid the gridded tracker uses ([[Track.objectProps]],
+    * mesh cells mapped to degenerate (y=cell, x=0) coordinates) — the
+    * unstructured result carries only the id field and genealogy.
+    *
+    * Scale shape: identical to [[writeTrackResult]] — the (time, ncells)
+    * cube is one shuffle with fill-0 background; per-cell arrays are
+    * mesh-sized driver writes, the same bound the Mesh itself already
+    * holds in memory. */
   def writeUnstructuredResult(res: UnstructuredTracker.Result,
       mesh: UnstructuredTracker.Mesh, dir: String, timeChunk: Int = 16,
       v3: Boolean = false, attrs: Map[String, String] = Map.empty): Unit = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Connected components over an edge table — the primitive behind marEx
@@ -77,85 +77,15 @@ object ConnectedComponents {
     labels.select(col("node"), col("label").as("component"))
   }
 
-  /** Alternating large-star / small-star connected components (Kiveris et
-    * al., "Connected Components in MapReduce and Beyond", SoCC 2014 — public
-    * algorithm, also the basis of GraphFrames' default CC).
-    *
-    * Where [[labelProp]] re-fans the FULL edge list every round (cost
-    * O(|E|) per round, O(log d) rounds after pointer jumping), the
-    * alternating algorithm rewrites the edge set itself toward a star
-    * forest centered at each component's minimum:
-    *
-    *  - large-star: every node links its larger neighbors to its minimum
-    *    neighborhood member — long chains contract exponentially;
-    *  - small-star: every node links its smaller neighbors (and itself) to
-    *    the smallest of them — stars flatten to depth 1.
-    *
-    * Convergence is O(log² n) rounds on ANY topology, and the working edge
-    * set *shrinks* as components contract — the property that matters at
-    * 100 TB: a pathological high-diameter filament or a skewed hub graph
-    * costs the same as a compact blob, and late rounds shuffle only the
-    * already-contracted remnant, not the original edge list. Use this when
-    * the graph's diameter is unknown or adversarial; [[labelProp]] remains
-    * preferable when diameter is known-small (marEx overlap graphs: an
-    * event's lifetime in timesteps) since each of its rounds is one join
-    * cheaper.
-    *
-    * @return (node LONG, component LONG), component = min reachable node id.
-    */
-  def alternating(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val clean = edges
-      .select(col("src").cast("long").as("a"), col("dst").cast("long").as("b"))
-      .where(col("a") =!= col("b"))
-    val nodes = clean.select(col("a").as("node"))
-      .union(clean.select(col("b").as("node"))).distinct().localCheckpoint()
+  /** Edge count at or below which [[auto]] solves the graph on the driver. */
+  val DriverThreshold: Long = 2000000L
 
-    var p = clean.distinct().localCheckpoint()
-    var converged = p.isEmpty
-    var i = 0
-    while (!converged && i < maxIter) {
-      // Directed copies: every (u, v) with v ∈ N(u).
-      val und = p.select(col("a").as("u"), col("b").as("v"))
-        .union(p.select(col("b").as("u"), col("a").as("v")))
-      // large-star: m(u) = min(N(u) ∪ {u}); emit (v, m(u)) for v > u.
-      val lsMin = und.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val ls = und.join(lsMin, "u").where(col("v") > col("u"))
-        .select(col("v").as("a"), col("m").as("b"))
-        .where(col("a") =!= col("b")).distinct()
-      // small-star over the large-star output: for each u, connect its
-      // smaller neighbors and u itself to the smallest of them.
-      val und2 = ls.select(col("a").as("u"), col("b").as("v"))
-        .union(ls.select(col("b").as("u"), col("a").as("v")))
-      val sml = und2.where(col("v") < col("u"))
-      val ssMin = sml.groupBy("u").agg(min("v").as("m"))
-      // iterCheckpoint: p appears four times in this round's plan — an
-      // inherited stats estimate would grow as S^4 per round
-      val ss = graft.core.Plans.iterCheckpoint(sml.join(ssMin, "u")
-        .select(col("v").as("a"), col("m").as("b"))
-        .union(ssMin.select(col("u").as("a"), col("m").as("b")))
-        .where(col("a") =!= col("b")).distinct())
-      converged = ss.exceptAll(p).isEmpty
-      p = ss
-      i += 1
-    }
-    // At the fixpoint p is a star forest (child, componentMin). Nodes that
-    // appear only as centers — and isolated-after-self-loop nodes — label
-    // themselves.
-    nodes.join(p.select(col("a").as("node"), col("b").as("comp")), Seq("node"), "left")
-      .select(col("node"), coalesce(col("comp"), col("node")).as("component"))
-  }
-
-  /** Size-adaptive entry point: below `driverThreshold` edges the graph is
+  /** Size-adaptive entry point: up to [[DriverThreshold]] edges the graph is
     * collected and solved with union-find on the driver — for a graph that
     * fits in driver memory this beats any distributed fixpoint by an order
     * of magnitude (the reference makes the identical call with scipy,
-    * track.py:2883). Larger graphs run `distributed` — [[labelProp]] by
-    * default, pass [[alternating]] when the graph's diameter is unknown or
-    * adversarial. The count itself is cheap (one partial-agg job over the
-    * edge list). */
-  def auto(edges: DataFrame, driverThreshold: Long = 2000000L,
-           distributed: DataFrame => DataFrame = labelProp(_, 100)): DataFrame = {
+    * track.py:2883). Larger graphs run [[labelProp]]. */
+  def auto(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // ONE action probes the size AND collects the small case: the edge list
@@ -166,8 +96,8 @@ object ConnectedComponents {
     // distributed) pass.
     val taken = edges
       .select(col("src").cast("long"), col("dst").cast("long"))
-      .limit((driverThreshold + 1).toInt).collect()
-    if (taken.length > driverThreshold) distributed(edges)
+      .limit((DriverThreshold + 1).toInt).collect()
+    if (taken.length > DriverThreshold) labelProp(edges)
     else {
       val comp = unionFindLocal(taken.iterator.map(r => (r.getLong(0), r.getLong(1))))
       comp.toSeq.toDF("node", "component")

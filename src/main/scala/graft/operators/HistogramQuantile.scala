@@ -56,26 +56,7 @@ object HistogramQuantile {
       width: Double,
       nBins: Int,
       out: String = "approx_quantile"): DataFrame =
-    perGroup(df, groupCols,
-      HistogramQuantileAgg.histogramQuantile(col(valueCol), q, lo, width, nBins), out)
-
-  /** Quantile from pre-aggregated per-(group, bin) counts in columns
-    * `bin`/`cnt`. Entry point for callers that pool histograms (sum counts
-    * across windows or neighborhoods) before interpolating — pooling
-    * aggregated counts instead of fanned-out raw rows is the histogram
-    * method's whole scale advantage (detect.py:2494–2500 pools per-chunk
-    * histograms the same way). */
-  def quantileFromCounts(
-      binned: DataFrame,
-      groupCols: Seq[String],
-      q: Double,
-      lo: Double,
-      width: Double,
-      out: String = "approx_quantile"): DataFrame =
-    perGroup(binned, groupCols,
-      HistogramQuantileAgg.fromCounts(col("bin"), col("cnt"), q, lo, width), out)
-
-  private def perGroup(df: DataFrame, groupCols: Seq[String], agg: Column,
-      out: String): DataFrame =
-    df.groupBy(groupCols.map(col): _*).agg(agg.as(out)).filter(col(out).isNotNull)
+    df.groupBy(groupCols.map(col): _*)
+      .agg(HistogramQuantileAgg.histogramQuantile(col(valueCol), q, lo, width, nBins).as(out))
+      .filter(col(out).isNotNull)
 }

@@ -16,18 +16,14 @@ import graft.operators.HistogramQuantile
   * detect.py:2737–2865).
   *
   * Input is `(bin, cnt)`: a bin index from [[HistogramQuantile.binCol]] and
-  * the number of samples it stands for (1 for a raw value, a pooled count
-  * for pre-binned histograms). A row with a null bin or count adds nothing.
-  * The buffer is a dense count array that grows to the largest bin seen, so
-  * pooled callers need not know `nBins`; it serialises only its present
-  * bins, so a partial-aggregate shuffle of many small groups ships a few
+  * the number of samples it stands for (1 for a raw value). A row with a
+  * null bin or count adds nothing. The buffer is a dense count array that
+  * grows to the largest bin seen; it serialises only its present bins, so
+  * a partial-aggregate shuffle of many small groups ships a few
   * (bin, count) pairs per group rather than the whole bin range.
   *
-  * `eval` walks the CDF over present bins to the first bin whose
-  * cdf = cum/total reaches q and interpolates linearly between bin centers
-  * from the previous present bin, or from (cdf 0, `lo`) when there is none.
-  * All mass below range (bin 0) clamps to `lo` (detect.py:2839–2864); a
-  * group with no counted sample yields null.
+  * `eval` is [[HistogramQuantileAgg.cdfWalk]], which Detect's Hobday kernel
+  * shares; a group with no counted sample yields null.
   */
 case class HistogramQuantileAgg(
     bin: Expression,
@@ -69,31 +65,7 @@ case class HistogramQuantileAgg(
 
   override def eval(buf: Array[Long]): Any = {
     val total = buf.sum
-    if (total == 0L) null
-    else {
-      def center(b: Int): Double = if (b >= 1) lo + (b - 0.5) * width else lo
-      var cum = 0L
-      var prevBin = -1
-      var prevCdf = 0.0
-      var i = 0
-      var result: Any = null
-      while (i < buf.length && result == null) {
-        if (buf(i) > 0) {
-          cum += buf(i)
-          val cdf = cum.toDouble / total.toDouble
-          if (cdf >= q) {
-            result =
-              if (i == 0) lo
-              else {
-                val cPrev = if (prevBin < 0) lo else center(prevBin)
-                cPrev + (q - prevCdf) / (cdf - prevCdf) * (center(i) - cPrev)
-              }
-          } else { prevBin = i; prevCdf = cdf }
-        }
-        i += 1
-      }
-      result
-    }
+    if (total == 0L) null else HistogramQuantileAgg.cdfWalk(buf, total, q, lo, width)
   }
 
   /** Present bins only, ascending, as (int bin, long count) pairs. */
@@ -132,8 +104,30 @@ object HistogramQuantileAgg {
   def histogramQuantile(c: Column, q: Double, lo: Double, width: Double, nBins: Int): Column =
     GraftColumnBridge.column(ofValues(c, q, lo, width, nBins).toAggregateExpression())
 
-  /** The aggregate over pre-binned `(bin, cnt)` rows, e.g. pooled histograms. */
-  def fromCounts(bin: Column, cnt: Column, q: Double, lo: Double, width: Double): Column =
-    GraftColumnBridge.column(HistogramQuantileAgg(GraftColumnBridge.converted(bin),
-      GraftColumnBridge.converted(cnt), q, lo, width).toAggregateExpression())
+  /** The quantile of the histogram `counts` (bin → samples; `total` > 0 of
+    * them): walk the CDF over present bins to the first bin whose
+    * cdf = cum/total reaches q and interpolate linearly between bin centers
+    * from the previous present bin, or from (cdf 0, `lo`) when there is
+    * none; mass below range (bin 0) clamps to `lo` (detect.py:2839–2864). */
+  def cdfWalk(counts: Array[Long], total: Long, q: Double, lo: Double, width: Double): Double = {
+    def center(b: Int): Double = if (b >= 1) lo + (b - 0.5) * width else lo
+    var cum = 0L
+    var prevBin = -1
+    var prevCdf = 0.0
+    var i = 0
+    while (i < counts.length) {
+      if (counts(i) > 0) {
+        cum += counts(i)
+        val cdf = cum.toDouble / total.toDouble
+        if (cdf >= q) {
+          if (i == 0) return lo
+          val cPrev = if (prevBin < 0) lo else center(prevBin)
+          return cPrev + (q - prevCdf) / (cdf - prevCdf) * (center(i) - cPrev)
+        }
+        prevBin = i; prevCdf = cdf
+      }
+      i += 1
+    }
+    Double.NaN // unreachable for q ≤ 1: the last present bin has cdf 1
+  }
 }

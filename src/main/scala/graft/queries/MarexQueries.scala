@@ -172,10 +172,11 @@ object MarexQueries extends QueryRegistry {
 
     // ── D15: hobday HISTOGRAM path + 5-point spatial pooling ───────────────
     // Runs the real operator (Detect.hobdayThreshold exact=false,
-    // spatialWindow=1): ±5-day circular doy fan-out × 3×3 spatial offset
+    // spatialWindow=1, a per-pixel sliding histogram); the oracle spells the
+    // same windows out as a ±5-day circular doy fan-out × 3×3 spatial offset
     // fan-out → per-(y,x,doy) histogram (bin 0 below lo, 500 bins of 0.05)
-    // → count-interpolated quantile. The oracle mirrors the identical
-    // binned-CDF interpolation (q13's gated D13 algorithm, two more keys).
+    // → count-interpolated quantile, the binned-CDF interpolation of q13's
+    // gated D13 algorithm with two more keys.
     QueryDef("q61_marex_hobday_hist",
       (s, d) => {
         val f = Tables.load(s, d, "events").select(

@@ -1,8 +1,10 @@
 package graft.marex
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.HistogramQuantile
 
 /** Statistical end-to-end assertions in the style of the reference conftest
   * (assert_percentile_frequency ≈5 % flagged at the 95th percentile with
@@ -47,7 +49,7 @@ class DetectSpec extends SparkSpec {
 
   test("hobday thresholds cover every observed doy and flag ~5%") {
     val anom = Detect.fixedBaselineAnomaly(sst)
-    val thr = Detect.hobdayThreshold(anom, 0.95, windowDays = 11)
+    val thr = Detect.hobdayThreshold(anom, 0.95, windowDays = 11).localCheckpoint()
     val nDoys = thr.select("doy").distinct().count()
     assert(nDoys >= 365, s"expected ≥365 doys, got $nDoys")
     val ext = Detect.applyThreshold(anom, thr)
@@ -55,32 +57,75 @@ class DetectSpec extends SparkSpec {
     assert(frac > 0.03 && frac < 0.08, s"hobday flagged fraction $frac")
   }
 
+  /** Test reference for [[Detect.hobdayThreshold]]: every anomaly row fanned
+    * out to each (pixel, doy) whose pooled window it feeds — ±h circular
+    * days, then the (2w+1)² spatial neighbourhood, x periodic over `nx`. */
+  private def fanOut(anom: DataFrame, h: Int, w: Int, nx: Int): DataFrame =
+    anom
+      .withColumn("doy", explode(transform(sequence(lit(-h), lit(h)),
+        d => Detect.circDoy(dayofyear(col("time")), d))))
+      .withColumn("dy", explode(sequence(lit(-w), lit(w))))
+      .withColumn("dx", explode(sequence(lit(-w), lit(w))))
+      .select((col("y") + col("dy")).as("y"), pmod(col("x") + col("dx"), lit(nx)).as("x"),
+        col("doy"), col("anomaly"))
+
   test("hobday kernel path equals the fan-out formulation") {
+    val anom = Detect.fixedBaselineAnomaly(sst).localCheckpoint()
+    // pooled on two rows of the grid: the wrap and both out-of-grid rows
+    // (y = −1, 2) are exercised, at a fraction of the fan-out's cost
+    for ((w, in) <- Seq((0, anom), (1, anom.filter(col("y") < 2)))) {
+      val fan = fanOut(in, 5, w, 16).groupBy("y", "x", "doy")
+        .agg(expr("percentile(anomaly, 0.95)").as("t_fan"))
+      val ker = Detect.hobdayThreshold(in, 0.95, windowDays = 11,
+        spatialWindow = w, nxWrap = Some(16)).withColumnRenamed("threshold", "t_ker")
+      val j = fan.join(ker, Seq("y", "x", "doy"), "full").localCheckpoint()
+      assert(j.filter(col("t_fan").isNull || col("t_ker").isNull).count() == 0,
+        s"w=$w: key sets must be identical")
+      val worst = j.agg(max(abs(col("t_fan") - col("t_ker")))).head().getDouble(0)
+      assert(worst < 1e-9, s"w=$w: kernel vs fan-out differ by $worst")
+    }
+  }
+
+  test("histogram hobday kernel is bit-identical to per-window histogram quantiles") {
+    import spark.implicits._
+    val (precision, maxAnomaly) = (0.05, 5.0)
+    val nBins = math.ceil(maxAnomaly / precision).toInt
     val anom = Detect.fixedBaselineAnomaly(sst)
-    val fan = Detect.hobdayThreshold(anom, 0.95, windowDays = 11)
-      .withColumnRenamed("threshold", "t_fan")
-    val ker = Detect.hobdayThresholdKernel(anom, 0.95, windowDays = 11)
-      .withColumnRenamed("threshold", "t_ker")
-    val j = fan.join(ker, Seq("y", "x", "doy"), "full")
-    assert(j.filter(col("t_fan").isNull || col("t_ker").isNull).count() == 0,
-      "key sets must be identical")
-    val worst = j.agg(max(abs(col("t_fan") - col("t_ker")))).head().getDouble(0)
-    assert(worst < 1e-9, s"kernel vs fan-out differ by $worst")
+      // null and NaN samples count toward no bin
+      .withColumn("anomaly", when(dayofyear(col("time")) === 60, lit(null).cast("double"))
+        .when(dayofyear(col("time")) === 61, lit(Double.NaN)).otherwise(col("anomaly")))
+      .localCheckpoint()
+    // a pixel whose only samples are NaN: none of its windows has a sample
+    val nanPixel = Seq((java.sql.Timestamp.valueOf("2001-06-01 00:00:00"), 100, 0, Double.NaN))
+      .toDF("time", "y", "x", "anomaly")
+    for ((w, in) <- Seq((0, anom), (1, anom.filter(col("y") < 2)))) {
+      val withNan = in.select("time", "y", "x", "anomaly").unionByName(nanPixel)
+      def bits(df: DataFrame): Map[(Int, Int, Int), Long] = df.collect().map(r =>
+        (r.getAs[Number]("y").intValue, r.getAs[Number]("x").intValue, r.getAs[Number]("doy").intValue) ->
+          java.lang.Double.doubleToLongBits(r.getAs[Double]("threshold"))).toMap
+      val ref = bits(HistogramQuantile.quantile(fanOut(withNan, 5, w, 16), Seq("y", "x", "doy"),
+        "anomaly", 0.95, 0.0, precision, nBins, out = "threshold"))
+      val ker = bits(Detect.hobdayThreshold(withNan, 0.95, windowDays = 11, exact = false,
+        precision = precision, maxAnomaly = maxAnomaly, spatialWindow = w, nxWrap = Some(16)))
+      assert(ker.keySet == ref.keySet, s"w=$w: key sets differ")
+      assert(!ker.keys.exists(_._1 >= 99), s"w=$w: the NaN-only pixel emitted rows")
+      val diff = ker.filter { case (k, v) => ref(k) != v }
+      assert(diff.isEmpty, s"w=$w: ${diff.size} thresholds not bit-identical")
+    }
   }
 
   test("hobday spatial pooling smooths thresholds toward neighbors") {
-    val anom = Detect.fixedBaselineAnomaly(sst)
+    val anom = Detect.fixedBaselineAnomaly(sst).localCheckpoint()
     val plain = Detect.hobdayThreshold(anom, 0.95, windowDays = 11)
-      .withColumnRenamed("threshold", "t0")
+      .withColumnRenamed("threshold", "t0").localCheckpoint()
     val pooled = Detect.hobdayThreshold(anom, 0.95, windowDays = 11,
       spatialWindow = 2, nxWrap = Some(16))
       .withColumnRenamed("threshold", "t1")
     // pooled thresholds exist for the same keys and have smaller spatial
     // variance (they mix 25 pixels' samples)
-    val j = plain.join(pooled, Seq("y", "x", "doy"))
+    val j = plain.join(pooled, Seq("y", "x", "doy")).localCheckpoint()
     assert(j.count() == plain.count())
-    val v0 = j.agg(variance("t0")).head().getDouble(0)
-    val v1 = j.agg(variance("t1")).head().getDouble(0)
+    val Seq(v0, v1) = j.agg(variance("t0"), variance("t1")).head().toSeq.map(_.asInstanceOf[Double])
     assert(v1 < v0, s"pooled variance $v1 should be < unpooled $v0")
   }
 

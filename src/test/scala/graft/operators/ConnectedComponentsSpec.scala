@@ -32,33 +32,6 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(viaAuto == viaProp)
   }
 
-  test("alternating large/small-star matches union-find on a random graph") {
-    val rnd = new scala.util.Random(11)
-    val edges = (1 to 300).map(_ => (rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
-      .filter(e => e._1 != e._2)
-    val dist = asMap(ConnectedComponents.alternating(edges.toDF("src", "dst")))
-    val local = ConnectedComponents.unionFindLocal(edges.iterator)
-    assert(dist.keySet == local.keySet)
-    dist.keys.foreach(k => assert(dist(k) == local(k), s"node $k: ${dist(k)} vs ${local(k)}"))
-  }
-
-  test("alternating collapses a path graph (diameter stress)") {
-    val edges = (0L until 63L).map(i => (i, i + 1))
-    val dist = asMap(ConnectedComponents.alternating(edges.toDF("src", "dst")))
-    assert(dist.values.toSet == Set(0L))
-    assert(dist.size == 64)
-  }
-
-  test("alternating handles a skewed hub plus chain") {
-    // hub 100 with 50 spokes, chained to a 20-node path through node 5
-    val spokes = (0L until 50L).map(i => (100L, 200L + i))
-    val chain = (0L until 20L).map(i => (i, i + 1))
-    val bridge = Seq((5L, 100L))
-    val dist = asMap(ConnectedComponents.alternating((spokes ++ chain ++ bridge).toDF("src", "dst")))
-    assert(dist.values.toSet == Set(0L))
-    assert(dist.size == 72)
-  }
-
   test("disjoint cliques stay separate") {
     val c1 = for (a <- 0L to 3L; b <- 0L to 3L if a < b) yield (a, b)
     val c2 = for (a <- 10L to 13L; b <- 10L to 13L if a < b) yield (a, b)

@@ -45,9 +45,9 @@ class HistogramQuantileSpec extends SparkSpec {
   }
 
   test("aggregate CDF scan is bit-identical to the window-walk formulation") {
-    // Pins the aggregate bit-for-bit to the Exchange+Sort+Window CDF walk it
-    // replaced, on randomized per-(group, bin) counts (seeded) and on the
-    // value-form path over a real table.
+    // Pins the shared CDF walk bit-for-bit to the Exchange+Sort+Window CDF
+    // walk it replaced on randomized per-(group, bin) counts (seeded), and
+    // the aggregate on the value-form path over a real table.
     import org.apache.spark.sql.expressions.Window
     val rnd = new scala.util.Random(11)
     val rows = for {
@@ -88,10 +88,16 @@ class HistogramQuantileSpec extends SparkSpec {
       }
     }
 
+    // the shared CDF walk over each group's count histogram
+    def cdfWalk(binned: DataFrame, q: Double, lo: Double, width: Double): Map[String, Double] =
+      binned.collect().groupBy(_.getString(0)).map { case (g, rs) =>
+        val counts = new Array[Long](rs.map(_.getInt(1)).max + 1)
+        rs.foreach(r => counts(r.getInt(1)) += r.getLong(2))
+        g -> graft.plans.HistogramQuantileAgg.cdfWalk(counts, counts.sum, q, lo, width)
+      }
+
     val q = 0.9; val lo = 0.0; val width = 0.25
-    assertBitIdentical(
-      asMap(HistogramQuantile.quantileFromCounts(binned, Seq("g"), q, lo, width, "v")),
-      windowWalk(binned, q, lo, width))
+    assertBitIdentical(cdfWalk(binned, q, lo, width), windowWalk(binned, q, lo, width))
 
     // value form over `part`: raw prices binned inside the aggregate
     val part = Tables.load(spark, sfDir, "part")
@@ -119,9 +125,6 @@ class HistogramQuantileSpec extends SparkSpec {
     val empty = Map("nan" -> None, "nulls" -> None)
 
     assert(asMap(HistogramQuantile.quantile(df, Seq("g"), "v", q, lo, width, nBins)) == expected)
-    val binned = df.groupBy(col("g"), HistogramQuantile.binCol(col("v"), lo, width, nBins).as("bin"))
-      .agg(count(lit(1)).as("cnt"))
-    assert(asMap(HistogramQuantile.quantileFromCounts(binned, Seq("g"), q, lo, width)) == expected)
     val viaCol = df.groupBy("g").agg(
       graft.plans.HistogramQuantileAgg.histogramQuantile(col("v"), q, lo, width, nBins))
     assert(asMap(viaCol) == expected ++ empty)
