@@ -38,13 +38,14 @@ object Plans {
     * the count grows linearly with the round/batch number — after tens of
     * batches a bounded little frame schedules hundreds of near-empty tasks
     * per downstream stage (observed: a 752-partition stage late in the test
-    * suite). */
+    * suite). The cap is a Dataset-level `coalesce` on the checkpoint, so
+    * the capped frame keeps the checkpoint's size estimate (a small frame
+    * stays broadcastable) and its rows stay internal rows. */
   def boundedCheckpoint(df: DataFrame): DataFrame = {
     val ck = df.localCheckpoint()
     val spark = ck.sparkSession
-    val rdd = ck.rdd
-    if (rdd.getNumPartitions <= 2 * width(spark)) ck
-    else spark.createDataFrame(rdd.coalesce(width(spark)), ck.schema)
+    if (ck.rdd.getNumPartitions <= 2 * width(spark)) ck
+    else ck.coalesce(width(spark))
   }
 
   /** Session width: the configured parallelism at any scale (cluster cores

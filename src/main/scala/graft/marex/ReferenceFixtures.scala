@@ -41,7 +41,7 @@ object ReferenceFixtures {
       .map { case (s, i) => (i, new Timestamp(epoch + s.toLong * 1000L)) }
       .toDF("t_idx", "time")
 
-    val flags = ZarrSource.read3D(spark, s"$dir/extreme_events")
+    val flags = spark.read.format("zarr").load(s"$dir/extreme_events")
       .filter(col("value") =!= 0.0)
       .join(broadcast(timeDf), "t_idx")
       .select("time", "y", "x")
@@ -114,8 +114,8 @@ object ReferenceFixtures {
     * NaN-filled land, time = seconds since 1981-01-01) as a detect-input
     * field `(time, y, x, value)`. `maxDays` bounds the time axis (the full
     * fixture is 40 years; the reference integration tests subset the same
-    * way, test_integration.py:103). Chunk pruning via read3D's timeRange
-    * keeps the scan to the requested prefix. */
+    * way, test_integration.py:103). The `t_idx` bound is pushed into the
+    * zarr scan, which prunes whole chunk files past the requested prefix. */
   def loadSstGridded(spark: SparkSession, dir: String, maxDays: Int): DataFrame = {
     import spark.implicits._
     val (_, timeArr) = ZarrSource.readLocalND(s"$dir/time")
@@ -123,7 +123,7 @@ object ReferenceFixtures {
     val timeDf = timeArr.toSeq.take(maxDays).zipWithIndex
       .map { case (s, i) => (i, new Timestamp(epoch + s.toLong * 1000L)) }
       .toDF("t_idx", "time")
-    ZarrSource.read3D(spark, s"$dir/to", timeRange = Some((0, maxDays)))
+    spark.read.format("zarr").load(s"$dir/to")
       .filter(col("t_idx") < maxDays && !isnan(col("value")))
       .join(broadcast(timeDf), "t_idx")
       .select(col("time"), col("y"), col("x"), col("value"))

@@ -26,9 +26,13 @@ object SyntheticData {
       seed: Long = 42L, trendPerYear: Double = 0.02, noiseAmp: Double = 1.0): DataFrame = {
     import spark.implicits._
     val epoch0 = Timestamp.valueOf("2000-01-01 00:00:00").getTime
-    // one partition per day — a 0.25°-global day is ~1 M rows; the default
-    // 32-partition range would funnel ~23 days through each task
-    spark.range(0, nDays.toLong, 1, math.min(nDays, 1024)).flatMap { t =>
+    // about one partition per million rows (a 0.25°-global day, so such a
+    // field keeps one partition per day), never fewer than the session's
+    // parallelism nor more than one per day (at most 1,024)
+    val rows = nDays.toLong * ny * nx
+    val parts = math.min(math.min(nDays, 1024).toLong, math.max(
+      spark.sparkContext.defaultParallelism.toLong, (rows + 999999L) / 1000000L)).toInt
+    spark.range(0, nDays.toLong, 1, parts).flatMap { t =>
       val ts = new Timestamp(epoch0 + t * 86400000L)
       val seasonal = math.sin(2 * math.Pi * (t % 365).toDouble / 365.0)
       for (y <- 0 until ny; x <- 0 until nx) yield {

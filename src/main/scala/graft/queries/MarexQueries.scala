@@ -610,8 +610,8 @@ object MarexQueries extends QueryRegistry {
         val dir = s"${System.getProperty("java.io.tmpdir")}/graft_q54_zarr"
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
         ZarrSource.write3D(cells, dir, shape = (31, 10, 15), chunks = (8, 10, 15))
-        ZarrSource.read3D(s, dir, timeRange = Some((0, 30)))
-          .filter(!isnan(col("value")))
+        s.read.format("zarr").load(dir)
+          .filter(col("t_idx").between(0, 30) && !isnan(col("value")))
           .groupBy(col("y").cast("long").as("y"))
           .agg(count(lit(1)).as("n_cells"),
             round(sum(round(col("value") * 100.0, 0).cast("long")
@@ -647,8 +647,8 @@ object MarexQueries extends QueryRegistry {
         val path = s"${System.getProperty("java.io.tmpdir")}/graft_q59.nc"
         new java.io.File(path).delete()
         NetCDF3Source.write3D(cells, path, "sst", shape = (31, 10, 15))
-        NetCDF3Source.read3D(s, path, "sst", timeRange = Some((0, 30)))
-          .filter(!isnan(col("value")))
+        s.read.format("netcdf").option("var", "sst").load(path)
+          .filter(col("t_idx").between(0, 30) && !isnan(col("value")))
           .groupBy(col("y").cast("long").as("y"))
           .agg(count(lit(1)).as("n_cells"),
             round(sum(round(col("value") * 100.0, 0).cast("long")
@@ -727,8 +727,8 @@ object MarexQueries extends QueryRegistry {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
         ZarrSource.write3DV3(cells, dir, shape = (31, 10, 15), chunks = (8, 10, 15),
           codecs = Seq(ZarrSource.ZstdC, ZarrSource.Crc32cC))
-        ZarrSource.read3D(s, dir, timeRange = Some((0, 30)))
-          .filter(!isnan(col("value")))
+        s.read.format("zarr").load(dir)
+          .filter(col("t_idx").between(0, 30) && !isnan(col("value")))
           .groupBy(col("y").cast("long").as("y"))
           .agg(count(lit(1)).as("n_cells"),
             round(sum(round(col("value") * 100.0, 0).cast("long")
@@ -768,8 +768,8 @@ object MarexQueries extends QueryRegistry {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
         ZarrSource.write3DV3(cells, dir, shape = (31, 10, 15), chunks = (16, 10, 15),
           codecs = Seq(ZarrSource.ZstdC), innerChunks = Some((4, 5, 15)))
-        ZarrSource.read3D(s, dir, timeRange = Some((0, 30)))
-          .filter(!isnan(col("value")))
+        s.read.format("zarr").load(dir)
+          .filter(col("t_idx").between(0, 30) && !isnan(col("value")))
           .groupBy(col("y").cast("long").as("y"))
           .agg(count(lit(1)).as("n_cells"),
             round(sum(round(col("value") * 100.0, 0).cast("long")

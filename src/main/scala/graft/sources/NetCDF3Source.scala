@@ -15,15 +15,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * throughout the header and the five added data types (ubyte/ushort/uint/
   * int64/uint64). Writes stay CDF-1; a CDF-5 write request is out of scope
   * by name (no such entry exists).
-  * HDF5-backed NetCDF-4 files are detected and routed to [[NetCDF4Source]]
-  * by the [[NetCDFSource]] facade; calling this reader on one directly
-  * fails with a clear error.
+  * HDF5-backed NetCDF-4 files are detected by the `netcdf` scan and read
+  * through [[Hdf5]]; calling this header parser on one directly fails with
+  * a clear error.
   *
   * Execution shape: the header is parsed once on the driver (it is a few
-  * KB); bulk data is read with Hadoop FS positioned reads — each task seeks
-  * to its own record/byte range, so a multi-GB file fans out across the
-  * cluster like Parquet row-groups, on any Hadoop filesystem. A time-range
-  * predicate prunes whole records before any data byte is read.
+  * KB); distributed reads go through the `netcdf` DataSourceV2
+  * ([[NetCdfDataSourceV2]]), whose tasks each read their own record batch
+  * with Hadoop FS positioned reads, so a multi-GB file fans out across the
+  * cluster like Parquet row-groups, on any Hadoop filesystem. A pushed
+  * `t_idx` range prunes whole records before any data byte is read.
   */
 object NetCDF3Source {
 
@@ -142,7 +143,7 @@ object NetCDF3Source {
       if (magic.sameElements(Array(0x89.toByte, 'H'.toByte, 'D'.toByte)))
         throw new IllegalArgumentException(
           s"$path is NetCDF-4 (HDF5-backed) — use NetCDF4Source or the " +
-            "NetCDFSource facade, which dispatches on the file magic")
+            "netcdf scan, which dispatches on the file magic")
       throw new IllegalArgumentException(s"$path is not a NetCDF file")
     }
     // 1 = CDF-1 (32-bit offsets), 2 = CDF-2 (64-bit offsets),
@@ -250,80 +251,8 @@ object NetCDF3Source {
     }
   }
 
-  /** Distributed read of a 3-D (time, y, x) variable into a long DataFrame
-    * `(t_idx INT, y INT, x INT, value DOUBLE)` — one task per batch of
-    * records/time-slices, each doing its own positioned read.
-    *
-    * @param timeRange optional inclusive [t0, t1] record range; records
-    *                  outside it are never read (record-level pruning). */
-  def read3D(spark: SparkSession, path: String, varName: String,
-      timeRange: Option[(Int, Int)] = None): DataFrame = {
-    import spark.implicits._
-    val h = readHeader(spark, path)
-    val v = h.vars.find(_.name == varName)
-      .getOrElse(throw new IllegalArgumentException(s"no variable $varName in $path"))
-    require(v.dimIds.length == 3, s"$varName is not 3-D")
-    val nt = if (v.isRecord(h.dims)) h.numRecs else h.dims(v.dimIds.head).size
-    val ny = h.dims(v.dimIds(1)).size
-    val nx = h.dims(v.dimIds(2)).size
-    val bp = typeBytes(v.ncType)
-    val sliceBytes = ny.toLong * nx * bp
-    val stride = if (v.isRecord(h.dims)) h.recSize else sliceBytes
-    val begin = v.begin
-    val ncType = v.ncType
-    // CF packing attrs — same mask_and_scale decode as the DSv2 scan, so
-    // a packed classic archive never surfaces raw codes
-    val scale = v.numAttr("scale_factor").getOrElse(1.0)
-    val offset = v.numAttr("add_offset").getOrElse(0.0)
-    // `_Unsigned = "true"`: signed-stored cells (and their fill codes)
-    // reinterpret as unsigned — the classic-format convention; the bias
-    // derivation is the ONE in NetCDF4Source (shared with the DSv2)
-    val uBias = {
-      val dt0 = v.ncType match {
-        case NcByte => Hdf5.NumType("int", 1, littleEndian = false)
-        case NcShort => Hdf5.NumType("int", 2, littleEndian = false)
-        case NcInt => Hdf5.NumType("int", 4, littleEndian = false)
-        case _ => Hdf5.NumType("float", 8, littleEndian = false)
-      }
-      NetCDF4Source.unsignedBias(dt0, NetCDF4Source.unsignedOf(dt0, v.attrs))
-    }
-    def unsign(f: Double): Double = NetCDF4Source.unsign(uBias)(f)
-    // BOTH fill spellings mask when a legacy archive carries them with
-    // different codes, matching xarray
-    val fillRaws = Seq(v.numAttr("_FillValue"),
-      v.numAttr("missing_value")).flatten.map(unsign).distinct
-    val (t0, t1) = timeRange.getOrElse((0, nt - 1))
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-
-    spark.sparkContext
-      .parallelize(t0 to math.min(t1, nt - 1), math.min(32, math.max(1, t1 - t0 + 1)))
-      .mapPartitions { ts =>
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(conf.value)
-        val in = fs.open(p)
-        val rows = ts.flatMap { t =>
-          val raw = new Array[Byte](sliceBytes.toInt)
-          in.readFully(begin + t * stride, raw, 0, raw.length)
-          val vals = decode(raw, ncType, ny * nx)
-          (0 until ny * nx).iterator.map { i =>
-            val r = unsign(vals(i))
-            val phys =
-              if (fillRaws.exists(f => f == r || (f.isNaN && r.isNaN))) Double.NaN
-              else r * scale + offset
-            (t, i / nx, i % nx, phys)
-          }
-        }
-        new Iterator[(Int, Int, Int, Double)] {
-          def hasNext: Boolean = { val h2 = rows.hasNext; if (!h2) in.close(); h2 }
-          def next(): (Int, Int, Int, Double) = rows.next()
-        }
-      }
-      .toDF("t_idx", "y", "x", "value")
-  }
-
   /** Classic NetCDF-3 (CDF-1) writer for a single 3-D variable with a
-    * record time dimension — the sink dual of [[read3D]] (≙ the
+    * record time dimension — the sink dual of the `netcdf` scan (≙ the
     * reference's `to_netcdf`). Cells are gathered per record; missing cells
     * become NaN (packed: the raw fill code). With `pack` set the variable
     * lands as CF-packed big-endian NC_SHORT + the `scale_factor`/

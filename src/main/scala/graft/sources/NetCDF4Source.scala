@@ -11,14 +11,17 @@ import Hdf5._
   * whenever the file is not classic CDF). Built on [[Hdf5]], a minimal
   * implementation of the public HDF5 file-format spec.
   *
-  * Execution shape mirrors [[NetCDF3Source]]: the metadata (superblock,
-  * object headers, chunk B-tree) is parsed once on the driver — it is KBs
-  * even for TB-scale files — and bulk data fans out as one task per batch
-  * of CHUNKS, each doing its own Hadoop-FS positioned read + inflate, so a
-  * chunked file distributes exactly like Parquet row-groups. A time-range
-  * predicate prunes whole chunks from the B-tree listing before any data
-  * byte is read — at 100 TB the common "last N days" query reads only the
-  * matching chunk subset.
+  * This object holds the driver-side readers (metadata, attributes, small
+  * variables, strings, compound tables) and the writers. Distributed reads
+  * of a (time, y, x) or (time, cell) variable go through the `netcdf`
+  * DataSourceV2 ([[NetCdfDataSourceV2]]): the metadata (superblock, object
+  * headers, chunk B-tree) is parsed once on the driver — it is KBs even for
+  * TB-scale files — and bulk data fans out as one task per CHUNK, each
+  * doing its own Hadoop-FS positioned read + inflate, so a chunked file
+  * distributes exactly like Parquet row-groups. A pushed `t_idx` range
+  * prunes whole chunks from the B-tree listing before any data byte is
+  * read — at 100 TB the common "last N days" query reads only the matching
+  * chunk subset.
   */
 object NetCDF4Source {
 
@@ -90,29 +93,6 @@ object NetCDF4Source {
 
   private[sources] def unsign(bias: Double)(f: Double): Double =
     if (bias > 0 && f < 0) f + bias else f
-
-  /** CF packed-data decode: raw → physical. Most real NC4 archives store
-    * int16/byte data with `scale_factor`/`add_offset`; `_FillValue`
-    * compares in RAW space and maps to NaN. Identity when none are set. */
-  private def cfDecoder(attrs: Map[String, Any],
-      uBias: Double = 0.0): Double => Double = {
-    def num(k: String): Option[Double] = attrs.get(k).collect {
-      case d: Double => d
-      case s: Seq[_] if s.nonEmpty => s.head.asInstanceOf[Double]
-    }
-    val scale = num("scale_factor").getOrElse(1.0)
-    val offset = num("add_offset").getOrElse(0.0)
-    // BOTH fill spellings mask when a legacy archive carries them with
-    // different codes (_FillValue + missing_value), matching xarray; the
-    // codes reinterpret under the _Unsigned bias or they'd never match
-    // the (already-unsigned) decoded cells
-    val fills = Seq(num("_FillValue"), num("missing_value")).flatten
-      .map(f => if (uBias > 0 && f < 0) f + uBias else f).distinct
-    if (scale == 1.0 && offset == 0.0 && fills.isEmpty) identity
-    else (raw: Double) =>
-      if (fills.exists(f => f == raw || (f.isNaN && raw.isNaN))) Double.NaN
-      else raw * scale + offset
-  }
 
   /** Driver-side dense read of a small variable (coordinate axes, masks). */
   def readLocal(spark: SparkSession, path: String,
@@ -504,96 +484,6 @@ object NetCDF4Source {
     }
   }
 
-  /** Distributed read of a 3-D (time, y, x) variable into a long DataFrame
-    * `(t_idx INT, y INT, x INT, value DOUBLE)`.
-    *
-    * @param timeRange optional inclusive [t0, t1] record range; chunks
-    *                  entirely outside it are pruned from the B-tree
-    *                  listing and never read.
-    * @param unpack    apply CF `scale_factor`/`add_offset`/`_FillValue`
-    *                  decoding (identity when the variable has none). */
-  def read3D(spark: SparkSession, path: String, varName: String,
-      timeRange: Option[(Int, Int)] = None, unpack: Boolean = true): DataFrame = {
-    import spark.implicits._
-    val src = source(spark, path)
-    val oh = findVarOh(src, path, varName)
-    val v = readDataset(src, varName, oh)
-    val varAttrs = attributes(src, oh)
-    require(v.dims.length == 3, s"$varName is not 3-D")
-    val Seq(nt, nyL, nxL) = v.dims
-    val ny = nyL.toInt; val nx = nxL.toInt
-    val (t0, t1) = timeRange.getOrElse((0, nt.toInt - 1))
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    // _Unsigned is PART of mask_and_scale (xarray's UnsignedIntegerCoder):
-    // `unpack = false` returns the stored SIGNED raw codes, so a caller
-    // repacking raws round-trips the original bytes
-    val dtype = v.dtype match {
-      case n: Hdf5.NumType if unpack => unsignedOf(n, varAttrs)
-      case o => o
-    }
-    val uBias = (v.dtype, dtype) match {
-      case (a: Hdf5.NumType, b: Hdf5.NumType) => unsignedBias(a, b)
-      case _ => 0.0
-    }
-    val cf = if (unpack) cfDecoder(varAttrs, uBias) else identity[Double] _
-    val filters = v.filters
-    val dims = v.dims
-
-    v.layout match {
-      case Chunked(_, chunkDims, _) =>
-        val cds = chunkDims
-        val kept = listChunks(src, v).filter { c =>
-          c.offsets.head <= t1 && c.offsets.head + cds.head > t0
-        }
-        spark.sparkContext
-          .parallelize(kept, math.min(128, math.max(1, kept.size)))
-          .mapPartitions { it =>
-            val s = new HadoopSource(conf.value, path)
-            it.flatMap { c =>
-              val chunkLen = cds.map(_.toLong).product.toInt
-              val vals = decode(defilter(s.read(c.addr, c.size), filters,
-                c.filterMask, chunkLen * dtype.size), dtype, chunkLen)
-              val rows = Seq.newBuilder[(Int, Int, Int, Double)]
-              foreachCell(c.offsets, cds, dims) { (flat, ci) =>
-                val t = flat / (ny * nx)
-                if (t >= t0 && t <= t1)
-                  rows += ((t, flat / nx % ny, flat % nx, cf(vals(ci))))
-              }
-              rows.result()
-            }
-          }
-          .toDF("t_idx", "y", "x", "value")
-      case Contiguous(addr, _) =>
-        val bp = dtype.size
-        val sliceBytes = ny.toLong * nx * bp
-        spark.sparkContext
-          .parallelize(t0 to math.min(t1, nt.toInt - 1),
-            math.min(32, math.max(1, t1 - t0 + 1)))
-          .mapPartitions { ts =>
-            val s = new HadoopSource(conf.value, path)
-            ts.flatMap { t =>
-              val vals = decode(s.read(addr + t * sliceBytes, sliceBytes.toInt),
-                dtype, ny * nx)
-              (0 until ny * nx).iterator.map(i => (t, i / nx, i % nx, cf(vals(i))))
-            }
-          }
-          .toDF("t_idx", "y", "x", "value")
-      case Compact(data) =>
-        val vals = decode(data, dtype, (nt * ny * nx).toInt)
-        spark.sparkContext
-          .parallelize((t0 to t1).flatMap(t =>
-            (0 until ny * nx).map(i => (t, i / nx, i % nx, cf(vals(t * ny * nx + i))))))
-          .toDF("t_idx", "y", "x", "value")
-    }
-  }
-
-  /** NetCDF-4 sink for a single 3-D double variable — the HDF5 dual of
-    * [[NetCDF3Source.write3D]] (≙ the reference's `to_netcdf`). Written
-    * chunked + shuffle + deflate (netCDF-4's default encoding) so the
-    * round-trip exercises the full filter pipeline. Like the NC3 sink,
-    * file assembly is driver-side — a single HDF5 file is an inherently
-    * serial sink, so this is for result exports that fit one machine;
-    * parquet/zarr are the distributed-output paths. Missing cells → NaN. */
   /** One f64 variable of a [[writeVars]] file: arbitrary rank, optional
     * chunked+shuffle+deflate layout (None = contiguous). */
   final case class VarSpec(name: String, dims: Seq[Int], values: Array[Double],
@@ -612,12 +502,6 @@ object NetCDF4Source {
     try out.write(bytes) finally out.close()
   }
 
-  /** CF packing for [[write3D]]: store `round((v − offset) / scale)` as a
-    * signed i16 with `scale_factor`/`add_offset`/`_FillValue` attributes —
-    * the layout real NC4 archives ship, 4× smaller than f64 before
-    * compression. NaN (and out-of-i16-range results, which would silently
-    * alias) map to `fillRaw`; the CF decode on every read path restores
-    * physical values and NaN. */
   /** One grid variable's WriteVar: CF-PACKED signed-i16 when `pack` is
     * set (raw shorts + `scale_factor`/`add_offset`/`_FillValue` attrs —
     * required for szip, whose samples are ≤32-bit), plain f64 otherwise.
@@ -650,9 +534,22 @@ object NetCDF4Source {
         compressor = compressor, attrs = attrs)
   }
 
+  /** CF packing for [[write3D]]: store `round((v − offset) / scale)` as a
+    * signed i16 with `scale_factor`/`add_offset`/`_FillValue` attributes —
+    * the layout real NC4 archives ship, 4× smaller than f64 before
+    * compression. NaN (and out-of-i16-range results, which would silently
+    * alias) map to `fillRaw`; the CF decode on every read path restores
+    * physical values and NaN. */
   final case class Pack(scale: Double, offset: Double = 0.0,
       fillRaw: Short = Short.MinValue)
 
+  /** NetCDF-4 sink for a single 3-D double variable — the HDF5 dual of
+    * [[NetCDF3Source.write3D]] (≙ the reference's `to_netcdf`). Written
+    * chunked + shuffle + deflate (netCDF-4's default encoding) so the
+    * round-trip exercises the full filter pipeline. Like the NC3 sink,
+    * file assembly is driver-side — a single HDF5 file is an inherently
+    * serial sink, so this is for result exports that fit one machine;
+    * parquet/zarr are the distributed-output paths. Missing cells → NaN. */
   def write3D(df: DataFrame, path: String, varName: String,
       shape: (Int, Int, Int), timeChunk: Int = 8, deflateLevel: Int = 4,
       attrs: Seq[(String, Any)] = Seq.empty,
@@ -683,37 +580,11 @@ object NetCDF4Source {
   }
 }
 
-/** Format-dispatching facade — the engine's equivalent of the reference's
-  * `xr.open_dataset(path)` / `xr.open_mfdataset(pattern)` entries (marEx
-  * detect.py:409, user_guide.rst:82): single classic CDF files route to
-  * [[NetCDF3Source]], HDF5-backed NetCDF-4 to [[NetCDF4Source]], and a
-  * directory or glob to the multi-file DataSourceV2 (name-ordered time
-  * concat, whole-file pruning for the time range). */
+/** The multi-file NetCDF archive sink. Reads of single files, directories
+  * and globs go through the `netcdf` DataSourceV2 ([[NetCdfDataSourceV2]]),
+  * the engine's equivalent of the reference's `xr.open_dataset(path)` /
+  * `xr.open_mfdataset(pattern)` (marEx detect.py:409, user_guide.rst:82). */
 object NetCDFSource {
-  def read3D(spark: SparkSession, path: String, varName: String,
-      timeRange: Option[(Int, Int)] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val isGlob = path.exists("*?[{".contains(_))
-    if (isGlob || fs.getFileStatus(p).isDirectory) {
-      val df = spark.read.format("netcdf").option("var", varName).load(path)
-      timeRange match {
-        case Some((t0, t1)) => df.filter(col("t_idx").between(t0, t1))
-        case None => df
-      }
-    } else {
-      val in = fs.open(p)
-      val magic = try { val b = new Array[Byte](8); in.readFully(0, b, 0, 8); b }
-      finally in.close()
-      if (magic.take(3).sameElements("CDF".getBytes))
-        NetCDF3Source.read3D(spark, path, varName, timeRange)
-      else if (magic.sameElements(Hdf5.Signature))
-        NetCDF4Source.read3D(spark, path, varName, timeRange)
-      else throw new IllegalArgumentException(s"$path is not a NetCDF file")
-    }
-  }
-
   /** DISTRIBUTED multi-file NetCDF sink — the write dual of the
     * `open_mfdataset` archive read: the global time axis splits into
     * `blockNt`-slice blocks, and each block's NC4 file is assembled and

@@ -14,7 +14,9 @@ import org.apache.spark.util.SerializableConfiguration
 /** NetCDF (classic AND HDF5-backed) as a first-class Spark DataSourceV2:
   * `spark.read.format("netcdf").option("var", "sst").load(path)` yields
   * `(t_idx INT, y INT, x INT, value DOUBLE)` for a 3-D (time, y, x)
-  * variable, dispatching NC3/NC4 on the file magic like [[NetCDFSource]].
+  * variable, dispatching NC3/NC4 on the file magic — the engine's one
+  * distributed NetCDF reader, its `xr.open_dataset` / `xr.open_mfdataset`
+  * (marEx detect.py:409, user_guide.rst:82).
   * 2-D (time, cell) variables — the reference's UNSTRUCTURED ICON-mesh
   * layout (detect.py:18 `extreme_events(time, ncells)`) — read as
   * `(t_idx INT, cell INT, value DOUBLE)` with the same file/chunk pruning
@@ -37,9 +39,11 @@ import org.apache.spark.util.SerializableConfiguration
   *  - **one `InputPartition` per NC4 chunk** (or per NC3/contiguous record
   *    batch), so parallelism tracks the files' own storage grid on any
   *    Hadoop filesystem; fill-elided NC4 chunks synthesize the dataset's
-  *    fill value, mirroring the zarr source's absent-chunk handling;
-  *  - NC4 values pass through the CF `scale_factor`/`add_offset`/
-  *    `_FillValue` decode (see [[NetCDF4Source.read3D]]).
+  *    fill value, mirroring the zarr source's absent-chunk handling, and a
+  *    compact-layout variable reads as one chunk from its header bytes;
+  *  - NC3 and NC4 values pass through the CF `scale_factor`/`add_offset`/
+  *    `_FillValue`/`missing_value` decode and `_Unsigned` (see
+  *    [[NcDecodeMeta]]).
   */
 class NetCdfDataSourceV2 extends TableProvider with DataSourceRegister {
   override def shortName(): String = "netcdf"
@@ -372,17 +376,17 @@ private[sources] object NetCdfTableV2 {
         fillRaws = Seq(num("_FillValue"), num("missing_value"))
           .flatten.map(unsign).distinct,
         elidedFill = v.fillValue.map(unsign).getOrElse(Double.NaN), rank = rank)
+      // 2-D chunk dims pad to (ct, cc, 1) so the planner's 3-axis walk is
+      // rank-agnostic (stored chunk OFFSETS pad the same way at lookup)
+      def pad(cds: Seq[Int]): Seq[Int] = if (rank == 2) cds :+ 1 else cds
       v.layout match {
-        // 2-D chunk dims pad to (ct, cc, 1) so the planner's 3-axis walk is
-        // rank-agnostic (stored chunk OFFSETS pad the same way at lookup)
-        case Hdf5.Chunked(_, cds, _) =>
-          (base.copy(chunkDims = if (rank == 2) cds :+ 1 else cds), Some(v))
+        case Hdf5.Chunked(_, cds, _) => (base.copy(chunkDims = pad(cds)), Some(v))
+        // a compact variable's bytes sit in its header (at most 64 KB): one
+        // chunk spanning the whole variable, decoded from those bytes
+        case Hdf5.Compact(_) => (base.copy(chunkDims = pad(ds)), Some(v))
         case Hdf5.Contiguous(addr, _) =>
           (base.copy(sliceBase = addr,
             sliceStride = ny.toLong * nx * v.dtype.size), None)
-        case Hdf5.Compact(_) =>
-          throw new IllegalArgumentException(
-            s"$varName is compact-layout in $path; use NetCDF4Source.read3D")
       }
     } else {
       val h = NetCDF3Source.readHeader(spark, path)
@@ -443,32 +447,53 @@ private[sources] object NetCdfTableV2 {
     require(expectRank < 0 || m.rank == expectRank,
       s"$path holds a ${m.rank}-D '$varName' in a ${expectRank}-D stream — an " +
         "archive cannot mix gridded (time,y,x) and unstructured (time,cell) files")
-    val parts: Seq[InputPartition] = dsOpt match {
+    (filePartitions(spark, path, m, dsOpt, tOff, 0, m.nt - 1,
+      Array.fill(3)(Int.MinValue), Array.fill(3)(Int.MaxValue)), m.nt)
+  }
+
+  /** The partitions of one file for the LOCAL time window [lt0, lt1], at
+    * archive offset `tOff`: one per NC4 chunk whose origin intersects the
+    * window and the pushed y/x ranges (`lo`/`hi` dims 1–2) — spatial
+    * chunks outside the window never plan, the regional-query dual of the
+    * t-range prune — or, for NC3/contiguous variables, the window in
+    * batches of about 1/256 of its records. Fill-elided chunks plan with
+    * addr = -1; a compact variable plans as one chunk carrying its header
+    * bytes. */
+  def filePartitions(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: NcDecodeMeta, dsOpt: Option[Hdf5.Dataset], tOff: Int, lt0: Int, lt1: Int,
+      lo: Array[Int], hi: Array[Int]): Seq[InputPartition] =
+    if (lt1 < lt0) Seq.empty
+    else dsOpt match {
       case Some(ds) =>
-        val src = new NetCDF4Source.HadoopSource(
-          spark.sparkContext.hadoopConfiguration, path)
-        val chunks = Hdf5.listChunks(src, ds)
-        val present = chunks.map(c => c.offsets.map(_.toInt).padTo(3, 0) -> c).toMap // rank-2 offsets pad like chunkDims
-        val orgs = for {
-          ot <- 0 until m.nt by m.chunkDims.head
-          oy <- 0 until m.ny by m.chunkDims(1)
-          ox <- 0 until m.nx by m.chunkDims(2)
-        } yield Seq(ot, oy, ox)
-        orgs.map { org =>
-          present.get(org) match {
-            case Some(c) => NcChunkPartition(path, m, tOff, 0, m.nt - 1,
-              org(0), org(1), org(2), c.addr, c.size, c.filterMask)
-            case None => NcChunkPartition(path, m, tOff, 0, m.nt - 1,
-              org(0), org(1), org(2), -1L, 0, 0)
-          }
+        val (stored, compact) = ds.layout match {
+          case Hdf5.Compact(data) => (Map.empty[Seq[Int], Hdf5.ChunkRef], Some(data))
+          case _ =>
+            val src = new NetCDF4Source.HadoopSource(
+              spark.sparkContext.hadoopConfiguration, path)
+            // rank-2 offsets pad like chunkDims
+            (Hdf5.listChunks(src, ds).map(c => c.offsets.map(_.toInt).padTo(3, 0) -> c)
+              .toMap, None)
+        }
+        val Seq(ct, cy, cx) = m.chunkDims
+        for {
+          ot <- 0 until m.nt by ct
+          if ot <= lt1 && ot + ct - 1 >= lt0
+          oy <- 0 until m.ny by cy
+          if oy.toLong <= hi(1) && oy.toLong + cy - 1 >= lo(1)
+          ox <- 0 until m.nx by cx
+          if ox.toLong <= hi(2) && ox.toLong + cx - 1 >= lo(2)
+        } yield stored.get(Seq(ot, oy, ox)) match {
+          case Some(c) => NcChunkPartition(path, m, tOff, lt0, lt1,
+            ot, oy, ox, c.addr, c.size, c.filterMask)
+          case None => NcChunkPartition(path, m, tOff, lt0, lt1,
+            ot, oy, ox, -1L, 0, 0, compact)
         }
       case None =>
-        val per = math.max(1, m.nt / 256)
-        (0 until m.nt by per).map(s =>
-          NcRecordPartition(path, m, tOff, s, math.min(s + per - 1, m.nt - 1)))
+        // batch records so huge time axes don't explode the partition count
+        val per = math.max(1, (lt1 - lt0 + 1) / 256)
+        (lt0 to lt1 by per).map(s =>
+          NcRecordPartition(path, m, tOff, s, math.min(s + per - 1, lt1)))
     }
-    (parts, m.nt)
-  }
 }
 
 private[sources] class NetCdfTableV2(rawInputs: Seq[String], varName: String,
@@ -609,10 +634,13 @@ private[sources] class NetCdfScanBuilder(rawInputs: Seq[String], varName: String
 }
 
 /** One stored (or fill-elided: addr = -1) NC4 chunk of one file. Local
-  * time indexes; `tOff` shifts them onto the archive-global axis. */
+  * time indexes; `tOff` shifts them onto the archive-global axis.
+  * `compact` holds a compact-layout variable's header bytes (its one
+  * chunk spans the variable). */
 private[sources] case class NcChunkPartition(path: String, m: NcDecodeMeta,
     tOff: Int, lt0: Int, lt1: Int, orgT: Int, orgY: Int, orgX: Int,
-    addr: Long, size: Int, filterMask: Int) extends InputPartition
+    addr: Long, size: Int, filterMask: Int,
+    compact: Option[Array[Byte]] = None) extends InputPartition
 
 /** An inclusive LOCAL record/time-slice batch (NC3 or NC4-contiguous). */
 private[sources] case class NcRecordPartition(path: String, m: NcDecodeMeta,
@@ -666,9 +694,6 @@ private[sources] class NetCdfScan(rawInputs: Seq[String], varName: String,
   }
 
   private def spark = org.apache.spark.sql.SparkSession.active
-
-  private def driverSource(path: String): Hdf5.ByteSource =
-    new NetCDF4Source.HadoopSource(spark.sparkContext.hadoopConfiguration, path)
 
   private def fileMeta(path: String): (NcDecodeMeta, Option[Hdf5.Dataset]) =
     NetCdfTableV2.fileMeta(spark, path, varName)
@@ -726,39 +751,9 @@ private[sources] class NetCdfScan(rawInputs: Seq[String], varName: String,
       cells * m.dtype.size
     }.foldLeft(1L)(math.max)
     val parts: Array[InputPartition] = keptFiles.flatMap { case (path, m, dsOpt, off) =>
-      val lt0 = math.max(tLo.toLong - off, 0L).toInt // Long: tLo may be MinValue
-      val lt1 = math.min(tHi.toLong - off, m.nt - 1L).toInt
-      if (lt1 < lt0) Seq.empty
-      else dsOpt match {
-        case Some(ds) =>
-          val chunks = Hdf5.listChunks(driverSource(path), ds)
-          val ct = m.chunkDims.head
-          val present = chunks.map(c => c.offsets.map(_.toInt).padTo(3, 0) -> c).toMap // rank-2 offsets pad like chunkDims
-          // spatial chunks outside the pushed y/x window never plan — the
-          // regional-query dual of the t-range file/chunk prune
-          val orgs = for {
-            ot <- 0 until m.nt by ct
-            if ot <= lt1 && ot + ct - 1 >= lt0
-            oy <- 0 until m.ny by m.chunkDims(1)
-            if oy.toLong <= hi(1) && oy.toLong + m.chunkDims(1) - 1 >= lo(1)
-            ox <- 0 until m.nx by m.chunkDims(2)
-            if ox.toLong <= hi(2) && ox.toLong + m.chunkDims(2) - 1 >= lo(2)
-          } yield Seq(ot, oy, ox)
-          orgs.map { org =>
-            present.get(org) match {
-              case Some(c) => NcChunkPartition(path, m, off, lt0, lt1,
-                org(0), org(1), org(2), c.addr, c.size, c.filterMask)
-              case None => NcChunkPartition(path, m, off, lt0, lt1,
-                org(0), org(1), org(2), -1L, 0, 0)
-            }
-          }
-        case None =>
-          // batch records so huge time axes don't explode the partition count
-          val n = lt1 - lt0 + 1
-          val per = math.max(1, n / 256)
-          (lt0 to lt1 by per).map(s =>
-            NcRecordPartition(path, m, off, s, math.min(s + per - 1, lt1)))
-      }
+      NetCdfTableV2.filePartitions(spark, path, m, dsOpt, off,
+        math.max(tLo.toLong - off, 0L).toInt, // Long: tLo may be MinValue
+        math.min(tHi.toLong - off, m.nt - 1L).toInt, lo, hi)
     }.toArray
     ChunkBundles.bundle(parts, bytesPerChunk)
   }
@@ -796,7 +791,8 @@ private[sources] class NetCdfReaderFactory(columns: Array[String],
         val m = c.m
         val n = m.chunkDims.map(_.toLong).product.toInt
         val vals: Array[Double] =
-          if (c.addr < 0) Array.fill(n)(m.elidedFill)
+          if (c.compact.isDefined) Hdf5.decode(c.compact.get, m.dtype, n)
+          else if (c.addr < 0) Array.fill(n)(m.elidedFill)
           else {
             val in = open(c.path)
             val raw = try {

@@ -32,8 +32,10 @@ import org.apache.spark.util.SerializableConfiguration
   * loads with `.option("var", name)` selecting the member array — the same
   * UX as the netcdf source — so `spark.read.format("zarr").option("var",
   * "extreme_events").load(store)` opens an xarray-written dataset member
-  * directly. [[ZarrSource.read3D]] remains as the utility-call form; both
-  * share the same chunk decoding ([[Blosc]], zlib, raw).
+  * directly. This scan is the engine's one distributed reader of a Zarr
+  * cube (its `xr.open_zarr`); it decodes chunks through [[ZarrSource]]
+  * ([[Blosc]], zlib, zstd, gzip, crc32c, sharding, raw), whose
+  * driver-side `readLocalND` reads small arrays.
   */
 class ZarrDataSourceV2 extends TableProvider with DataSourceRegister {
   override def shortName(): String = "zarr"

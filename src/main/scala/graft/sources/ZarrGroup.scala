@@ -405,7 +405,7 @@ object ZarrGroup extends Serializable {
 
   /** Keep only chunk indices overlapping the requested per-dim index
     * ranges — whole chunk FILES outside a range are never opened, the
-    * group-level analogue of [[ZarrSource.read3D]]'s timeRange prune. */
+    * group-level analogue of the `zarr` scan's pushed-range chunk prune. */
   private def pruneChunks(chunkIdxs: Seq[Seq[Int]], dims: Seq[String],
       chunks: Seq[Int], ranges: Map[String, (Int, Int)]): Seq[Seq[Int]] = {
     if (ranges.isEmpty) chunkIdxs

@@ -28,13 +28,12 @@ import org.json4s.jackson.JsonMethods
   * per stored object). The `transpose` codec and nested sharding are
   * rejected with a clear error, as is the v1 layout.
   *
-  * Execution shape: chunk files are the unit of parallelism — each becomes
-  * one task decoding one chunk into long-format rows, so ingest scales with
-  * the chunk count exactly like the reference's Dask graph. A time-range
-  * predicate prunes whole chunk *files* before any byte is read (the chunk
-  * grid index encodes the time span), which is the Zarr analogue of Parquet
-  * row-group pruning. Files are read through `sparkContext.binaryFiles`, so
-  * any Hadoop-compatible filesystem (local, HDFS, S3A) works unchanged.
+  * This object holds the metadata parsers, the chunk codecs, the
+  * driver-side readers and the writers. Distributed reads of a (time, y, x)
+  * or (time, cell) array go through the `zarr` DataSourceV2
+  * ([[ZarrDataSourceV2]]: `spark.read.format("zarr").load(dir)`), which
+  * plans one task per chunk file and prunes whole chunk files on pushed
+  * `t_idx`/`y`/`x` ranges, on any Hadoop-compatible filesystem.
   */
 object ZarrSource extends Serializable {
 
@@ -922,97 +921,7 @@ object ZarrSource extends Serializable {
     (shape, out)
   }
 
-  /** Read a 3-D (time, y, x) zarr array into a long DataFrame
-    * `(t_idx INT, y INT, x INT, value DOUBLE)`.
-    *
-    * @param timeRange optional inclusive [t0, t1] index range; chunk files
-    *                  entirely outside it are never opened. */
-  def read3D(spark: SparkSession, dir: String,
-      timeRange: Option[(Int, Int)] = None): DataFrame = {
-    import spark.implicits._
-    val meta = readMetaAny(dir, spark.sparkContext.hadoopConfiguration)
-    require(meta.shape.length == 3, s"read3D expects 3-D array, got shape ${meta.shape}")
-    require(meta.order == "C", "only C-order zarr supported")
-    val Seq(nt, ny, nx) = meta.shape
-    val Seq(ct, cy, cx) = meta.chunks
-    val bp = bytesPer(meta.dtype)
-    val dtype = meta.dtype
-    val metaB = meta // stable reference for task closures
-
-    // chunk-grid pruning on time
-    val (t0, t1) = timeRange.getOrElse((0, nt - 1))
-    val keepChunkT: Int => Boolean = ci => (ci * ct) <= t1 && (ci * ct + ct - 1) >= t0
-
-    // v2 / v3-"." keys are flat files in the array dir; v3 default ("/")
-    // keys are nested one directory level per dimension
-    val glob = chunkGlob(meta, dir, 3)
-
-    // A chunk file that does not exist means the whole chunk equals
-    // fill_value (writers elide empty chunks, e.g. write_empty_chunks=False).
-    // Enumerate the expected chunk grid and synthesize fill_value rows for
-    // the absent ones — otherwise those cells silently vanish from the long
-    // format. The listing goes through the SAME Hadoop FileSystem that
-    // binaryFiles reads from (local, HDFS, S3A …): a java.io listing would
-    // return null on non-local URIs and silently classify every chunk as
-    // missing, duplicating each cell as value + fill_value.
-    val present: Set[(Int, Int, Int)] = {
-      val p = new org.apache.hadoop.fs.Path(glob)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
-        .flatMap(st => parseChunkKey(meta, st.getPath.toString, 3))
-        .map { ci => (ci(0), ci(1), ci(2)) }
-        .toSet
-    }
-    // binaryFiles rejects a glob with zero matches — possible under the v3
-    // nested layout when every chunk was elided as all-fill
-    val files =
-      if (present.isEmpty)
-        spark.sparkContext.emptyRDD[(Seq[Int], org.apache.spark.input.PortableDataStream)]
-      else spark.sparkContext.binaryFiles(glob, minPartitions = 8)
-        .flatMap { case (path, stream) =>
-          parseChunkKey(metaB, path, 3).map(ci => (ci, stream))
-        }
-        .filter { case (ci, _) => keepChunkT(ci.head) }
-    val missing = for {
-      ci <- 0 until (nt + ct - 1) / ct if keepChunkT(ci)
-      cj <- 0 until (ny + cy - 1) / cy
-      ck <- 0 until (nx + cx - 1) / cx
-      if !present((ci, cj, ck))
-    } yield (ci, cj, ck)
-    val fill = meta.decodedFill
-    val missingRows = spark.sparkContext
-      .parallelize(missing, math.max(1, math.min(missing.size, 32)))
-      .flatMap { case (ci, cj, ck) =>
-        for {
-          dt <- 0 until ct
-          t = ci * ct + dt if t >= t0 && t <= t1 && t < nt
-          dy <- 0 until cy
-          y = cj * cy + dy if y < ny
-          dx <- 0 until cx
-          x = ck * cx + dx if x < nx
-        } yield (t, y, x, fill)
-      }
-
-    val rows = files.flatMap { case (cidx, stream) =>
-      val Seq(ci, cj, ck) = cidx
-      val raw = decodeChunk(stream.toArray(), metaB, ct * cy * cx * bp)
-      val buf = ByteBuffer.wrap(raw).order(byteOrderOf(dtype))
-      val out = scala.collection.mutable.ArrayBuffer[(Int, Int, Int, Double)]()
-      var i = 0
-      while (i < ct * cy * cx) {
-        val t = ci * ct + i / (cy * cx)
-        val y = cj * cy + (i / cx) % cy
-        val x = ck * cx + i % cx
-        if (t < nt && y < ny && x < nx && t >= t0 && t <= t1)
-          out += ((t, y, x, metaB.cfDecode(cellValue(raw, buf, dtype, i, bp))))
-        i += 1
-      }
-      out
-    }
-    rows.union(missingRows).toDF("t_idx", "y", "x", "value")
-  }
-
-  /** Distributed Zarr v2 writer (sink dual of [[read3D]]; ≙ the reference's
+  /** Distributed Zarr v2 writer (sink dual of the `zarr` scan; ≙ the reference's
     * `to_zarr`, track.py:1748): one task per chunk serializes its cells into
     * a raw little-endian <f8 chunk file. Missing cells become NaN. All byte
     * writes — executor chunk files and driver metadata — go through the
@@ -1133,7 +1042,7 @@ object ZarrSource extends Serializable {
     ()
   }
 
-  /** Distributed Zarr **v3** writer (sink dual of [[read3D]] for the layout
+  /** Distributed Zarr **v3** writer (sink dual of the `zarr` scan for the layout
     * zarr-python ≥3 / current xarray write by default): one task per chunk
     * serializes its cells through the codec chain into a nested
     * `c/t/y/x` chunk file. Missing cells become NaN.

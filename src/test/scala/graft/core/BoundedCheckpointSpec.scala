@@ -24,6 +24,16 @@ class BoundedCheckpointSpec extends SparkSpec {
     assert(capped.rdd.getNumPartitions <= w)
     assert(capped.select("v").collect().map(_.getInt(0)).sorted.toSeq ==
       (1 to (3 * w)).toSeq)
+    // an input with real stats keeps them through the cap, so a small
+    // capped frame stays broadcastable (against the threshold's default:
+    // other suites may switch broadcasting off in the shared session)
+    val ranged = Plans.boundedCheckpoint(spark.range(0, 3 * w, 1, 3 * w).toDF())
+    assert(ranged.rdd.getNumPartitions <= w)
+    val size = ranged.queryExecution.optimizedPlan.stats.sizeInBytes
+    val threshold = org.apache.spark.sql.internal.SQLConf
+      .AUTO_BROADCASTJOIN_THRESHOLD.defaultValue.get
+    assert(size < threshold, s"capped frame lost its size estimate: $size bytes")
+    assert(ranged.collect().map(_.getLong(0)).sorted.toSeq == (0L until 3L * w).toSeq)
   }
 
   test("boundedCheckpoint: normal-width frame is untouched") {

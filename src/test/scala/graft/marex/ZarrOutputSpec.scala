@@ -133,6 +133,32 @@ class ZarrOutputSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(d)
   }
 
+  test("loadSstGridded returns the first maxDays days of a to(time, lat, lon) group") {
+    // value(t, y, x) = 100t + 10y + x; cell (1, 2) is land (NaN) on every day
+    val (nt, nLat, nLon, maxDays) = (10, 3, 4, 6)
+    def sst(t: Int, y: Int, x: Int): Double =
+      if (y == 1 && x == 2) Double.NaN else t * 100.0 + y * 10.0 + x
+    val cells = (for (t <- 0 until nt; y <- 0 until nLat; x <- 0 until nLon)
+      yield (t, y, x, sst(t, y, x))).toDF("time_idx", "lat_idx", "lon_idx", "to")
+    val d = java.nio.file.Files.createTempDirectory("zarr_sst_gridded").toFile
+    org.apache.commons.io.FileUtils.deleteQuietly(d)
+    // time chunks of 4: the maxDays bound cuts the second chunk in half
+    new ZarrGroup.GroupWriter(d.getAbsolutePath, compressor = Some("blosc"))
+      .arrays(cells, Seq("time" -> nt, "lat" -> nLat, "lon" -> nLon),
+        Seq(4, nLat, nLon), Seq("to"))
+      .coord("time", Array.tabulate(nt)(t => t * 86400.0)) // s since 1981-01-01
+      .finish()
+    val epoch = java.sql.Timestamp.valueOf("1981-01-01 00:00:00").getTime
+    val got = ReferenceFixtures.loadSstGridded(spark, d.getAbsolutePath, maxDays)
+      .collect().map(r => (r.getTimestamp(0).getTime, r.getInt(1), r.getInt(2), r.getDouble(3)))
+    val want = for (t <- 0 until maxDays; y <- 0 until nLat; x <- 0 until nLon
+        if !sst(t, y, x).isNaN)
+      yield (epoch + t * 86400000L, y, x, sst(t, y, x))
+    assert(got.length == want.length)
+    assert(got.toSet == want.toSet)
+    org.apache.commons.io.FileUtils.deleteQuietly(d)
+  }
+
   test("writeDetectResult full output: dat_anomaly + thresholds (global and hobday dims)") {
     val sst = SyntheticData.sstGridded(spark, nDays = 365 * 2, ny = 4, nx = 6)
     val gspec = GridSpec(ny = 4, nx = 6, periodicX = true)
@@ -238,8 +264,7 @@ class ZarrOutputSpec extends SparkSpec {
     assert(t.length == fullAxis.length,
       "the written time coordinate carries the FULL source axis")
     // the erased day exists as an all-background slab of the id cube
-    val idf = graft.sources.ZarrSource.read3D(spark,
-      s"${d.getAbsolutePath}/ID_field")
+    val idf = spark.read.format("zarr").load(s"${d.getAbsolutePath}/ID_field")
     assert(idf.filter(col("t_idx") === 5).filter(col("value") =!= 0.0).count() == 0)
     assert(idf.select("t_idx").distinct().count() == fullAxis.length)
   }

@@ -44,7 +44,7 @@ class BloscSpec extends SparkSpec {
 
   test("extreme_events reads distributed: full cardinality, boolean values") {
     assume(available, "reference fixture not present")
-    val df = ZarrSource.read3D(spark, s"$fixture/extreme_events")
+    val df = spark.read.format("zarr").load(s"$fixture/extreme_events")
     assert(df.count() == 32L * 180 * 360)
     assert(df.filter(col("value") =!= 0.0 && col("value") =!= 1.0).count() == 0)
     val frac = df.filter(col("value") === 1.0).count().toDouble / (32L * 180 * 360)

@@ -31,8 +31,8 @@ class NetCDF3Spec extends SparkSpec {
     val in = (for (t <- 0 until 4; y <- 0 until 3; x <- 0 until 5)
       yield (t, y, x, t * 1.5 + y * 0.25 + x * 0.125)).toDF("t_idx", "y", "x", "value")
     NetCDF3Source.write3D(in, path, "sst", shape = (4, 3, 5))
-    val out = NetCDF3Source.read3D(spark, path, "sst")
-    assert(out.count() == 4 * 3 * 5)
+    val out = spark.read.format("netcdf").option("var", "sst").load(path)
+    assert(out.collect().length == 4 * 3 * 5)
     val diff = out.join(in.toDF("t_idx", "y", "x", "expected"), Seq("t_idx", "y", "x"))
       .filter(col("value") =!= col("expected")).count()
     assert(diff == 0, "round-trip must be bit-exact for doubles")
@@ -43,7 +43,8 @@ class NetCDF3Spec extends SparkSpec {
     val in = (for (t <- 0 until 6; y <- 0 until 2; x <- 0 until 2)
       yield (t, y, x, t.toDouble)).toDF("t_idx", "y", "x", "value")
     NetCDF3Source.write3D(in, path, "v", shape = (6, 2, 2))
-    val out = NetCDF3Source.read3D(spark, path, "v", timeRange = Some((2, 4)))
+    val out = spark.read.format("netcdf").option("var", "v").load(path)
+      .filter(col("t_idx").between(2, 4))
     assert(out.select("t_idx").distinct().collect().map(_.getInt(0)).sorted.toSeq == Seq(2, 3, 4))
   }
 
@@ -81,13 +82,14 @@ class NetCDF3Spec extends SparkSpec {
     val h = NetCDF3Source.readHeader(spark, path)
     assert(h.vars.head.ncType == 3, "the variable must be stored as NC_SHORT")
     assert(h.vars.head.numAttr("scale_factor").contains(0.25))
-    // utility read: CF-decoded
-    val ds = NetCDF3Source.read3D(spark, path, "sst")
+    // windowed read (pushed t_idx range): CF-decoded
+    val ds = spark.read.format("netcdf").option("var", "sst").load(path)
+      .filter(col("t_idx").between(0, 2))
     assert(ds.filter(isnan(col("value"))).count() == 1, "the hole reads NaN")
     assert(ds.filter(!isnan(col("value")) && col("value") =!=
       col("t_idx") * 1.0 + col("y") * 0.25 + col("x") * 0.25).count() == 0,
       "packed classic cells must decode to physical values, not raw codes")
-    // DSv2 read: same decode
+    // unwindowed read: same decode
     val sql = spark.read.format("netcdf").option("var", "sst").load(path)
     assert(sql.filter(isnan(col("value"))).count() == 1)
     assert(sql.filter(!isnan(col("value")) && col("value") =!=
@@ -125,12 +127,14 @@ class NetCDF3Spec extends SparkSpec {
     val fileLen = new java.io.File(path).length()
     assert(fileLen == h.vars.head.begin + 3 * 6,
       s"no padding bytes may follow a tight record (len $fileLen)")
-    val ds = NetCDF3Source.read3D(spark, path, "sst")
-    assert(ds.count() == 9)
+    // windowed read (pushed t_idx range)
+    val ds = spark.read.format("netcdf").option("var", "sst").load(path)
+      .filter(col("t_idx").between(0, 2))
+    assert(ds.collect().length == 9)
     assert(ds.filter(col("value") =!=
       col("t_idx") * 10.0 + col("x")).count() == 0,
       "records after the first must decode from the TIGHT stride")
-    // and through the DSv2 scan
+    // and unwindowed
     val sql = spark.read.format("netcdf").option("var", "sst").load(path)
     assert(sql.filter(col("value") =!=
       col("t_idx") * 10.0 + col("x")).count() == 0)
@@ -209,11 +213,13 @@ class NetCDF3Spec extends SparkSpec {
     assert(mShape == Seq(2, 3))
     assert(mask.toSeq == Seq(1.0, 40000.0, 3.0, 65535.0, 5.0, 6.0),
       "NC_USHORT must decode unsigned, not sign-extended")
-    val ds = NetCDF3Source.read3D(spark, path, "sst")
-    assert(ds.count() == 12)
+    // windowed read (pushed t_idx range)
+    val ds = spark.read.format("netcdf").option("var", "sst").load(path)
+      .filter(col("t_idx").between(0, 1))
+    assert(ds.collect().length == 12)
     assert(ds.filter(col("value") =!=
       col("t_idx") * 100.0 + col("y") * 3.0 + col("x")).count() == 0)
-    // and through the DSv2 scan (same header/decode path)
+    // and unwindowed (same header/decode path)
     val sql = spark.read.format("netcdf").option("var", "sst").load(path)
     assert(sql.count() == 12)
     assert(sql.filter(col("value") =!=

@@ -13,6 +13,9 @@ class NetCDF4Spec extends SparkSpec {
     f.getAbsolutePath
   }
 
+  private def nc(path: String, varName: String) =
+    spark.read.format("netcdf").option("var", varName).load(path)
+
   private def grid(nt: Int, ny: Int, nx: Int) =
     (for (t <- 0 until nt; y <- 0 until ny; x <- 0 until nx)
       yield (t, y, x, t * 1.5 + y * 0.25 + x * 0.125)).toDF("t_idx", "y", "x", "value")
@@ -28,8 +31,8 @@ class NetCDF4Spec extends SparkSpec {
     val in = grid(10, 4, 6)
     // timeChunk 3 → 4 chunks, the last one partial (edge-chunk padding path)
     NetCDF4Source.write3D(in, path, "sst", shape = (10, 4, 6), timeChunk = 3)
-    val out = NetCDF4Source.read3D(spark, path, "sst")
-    assert(out.count() == 10 * 4 * 6)
+    val out = nc(path, "sst")
+    assert(out.collect().length == 10 * 4 * 6)
     val diff = out.join(in.toDF("t_idx", "y", "x", "expected"), Seq("t_idx", "y", "x"))
       .filter(col("value") =!= col("expected")).count()
     assert(diff == 0, "round-trip must be bit-exact for doubles")
@@ -43,8 +46,8 @@ class NetCDF4Spec extends SparkSpec {
     val (shape, got) = NetCDF4Source.readLocal(spark, path, "v")
     assert(shape == Seq(2L, 3L, 4L))
     assert(got.toSeq == vals.toSeq)
-    val df = NetCDF4Source.read3D(spark, path, "v")
-    assert(df.count() == 24)
+    val df = nc(path, "v")
+    assert(df.collect().length == 24)
     assert(df.filter(col("t_idx") === 1 && col("y") === 2 && col("x") === 3)
       .head().getDouble(3) == vals(23))
   }
@@ -79,7 +82,7 @@ class NetCDF4Spec extends SparkSpec {
   test("read3D timeRange prunes chunks before reading") {
     val path = tmpNc()
     NetCDF4Source.write3D(grid(12, 2, 2), path, "v", shape = (12, 2, 2), timeChunk = 4)
-    val out = NetCDF4Source.read3D(spark, path, "v", timeRange = Some((5, 9)))
+    val out = nc(path, "v").filter(col("t_idx").between(5, 9))
     assert(out.select("t_idx").distinct().collect().map(_.getInt(0)).sorted.toSeq
       == Seq(5, 6, 7, 8, 9))
     // the [5,9] range intersects chunks [4,8) and [8,12) only
@@ -100,7 +103,7 @@ class NetCDF4Spec extends SparkSpec {
     val path = tmpNc()
     val sparse = Seq((0, 0, 0, 1.0), (1, 1, 1, 2.0)).toDF("t_idx", "y", "x", "value")
     NetCDF4Source.write3D(sparse, path, "v", shape = (2, 2, 2))
-    val out = NetCDF4Source.read3D(spark, path, "v")
+    val out = nc(path, "v")
     assert(out.filter(isnan(col("value"))).count() == 6)
     assert(out.filter(!isnan(col("value"))).count() == 2)
   }
@@ -110,11 +113,11 @@ class NetCDF4Spec extends SparkSpec {
     val p3 = tmpNc(); val p4 = tmpNc()
     NetCDF3Source.write3D(df, p3, "v", shape = (3, 2, 2))
     NetCDF4Source.write3D(df, p4, "v", shape = (3, 2, 2))
-    assert(NetCDFSource.read3D(spark, p3, "v").count() == 12)
-    assert(NetCDFSource.read3D(spark, p4, "v").count() == 12)
+    assert(nc(p3, "v").collect().length == 12)
+    assert(nc(p4, "v").collect().length == 12)
     val junk = tmpNc()
     java.nio.file.Files.write(java.nio.file.Paths.get(junk), new Array[Byte](64))
-    val e = intercept[IllegalArgumentException](NetCDFSource.read3D(spark, junk, "v"))
+    val e = intercept[IllegalArgumentException](nc(junk, "v"))
     assert(e.getMessage.contains("not a NetCDF"))
   }
 
@@ -137,13 +140,13 @@ class NetCDF4Spec extends SparkSpec {
     NetCDF4Source.write3D(raw, path, "v", shape = (2, 2, 2),
       attrs = Seq("scale_factor" -> 0.01, "add_offset" -> 10.0,
         "_FillValue" -> -999.0))
-    val out = NetCDF4Source.read3D(spark, path, "v")
+    val out = nc(path, "v")
       .filter(!isnan(col("value"))).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3))).toSet
     // unwritten cells are NaN raw → NaN after unpack; -999 → fill → NaN
     assert(out == Set((0, 0, 0, 11.0), (1, 1, 1, 12.5)))
-    val rawBack = NetCDF4Source.read3D(spark, path, "v", unpack = false)
-      .filter(col("value") === -999.0).count()
+    // readLocal returns the stored raw codes
+    val rawBack = NetCDF4Source.readLocal(spark, path, "v")._2.count(_ == -999.0)
     assert(rawBack == 1)
   }
 
@@ -175,7 +178,7 @@ class NetCDF4Spec extends SparkSpec {
     val (path, vals) = writeV4("single", Seq(2, 3, 4), Seq(2, 3, 4))
     assert(parsedIndex(path).isInstanceOf[Hdf5.SingleChunk])
     assert(NetCDF4Source.readLocal(spark, path, "v")._2.toSeq == vals.toSeq)
-    assert(NetCDF4Source.read3D(spark, path, "v").count() == 24)
+    assert(nc(path, "v").collect().length == 24)
   }
 
   test("v4 implicit index (raw consecutive chunks) round-trips") {
@@ -188,7 +191,7 @@ class NetCDF4Spec extends SparkSpec {
     val (path, vals) = writeV4("fa", Seq(9, 2, 2), Seq(2, 2, 2)) // 5 chunks, last partial
     assert(parsedIndex(path).isInstanceOf[Hdf5.FixedArray])
     assert(NetCDF4Source.readLocal(spark, path, "v")._2.toSeq == vals.toSeq)
-    val out = NetCDF4Source.read3D(spark, path, "v", timeRange = Some((3, 6)))
+    val out = nc(path, "v").filter(col("t_idx").between(3, 6))
     assert(out.select("t_idx").distinct().collect().map(_.getInt(0)).sorted.toSeq
       == Seq(3, 4, 5, 6))
   }
@@ -214,7 +217,7 @@ class NetCDF4Spec extends SparkSpec {
     val (path, vals) = writeV4("ea", Seq(20, 2, 2), Seq(1, 2, 2))
     assert(parsedIndex(path) == Hdf5.ExtensibleArray)
     assert(NetCDF4Source.readLocal(spark, path, "v")._2.toSeq == vals.toSeq)
-    val out = NetCDF4Source.read3D(spark, path, "v", timeRange = Some((7, 12)))
+    val out = nc(path, "v").filter(col("t_idx").between(7, 12))
     assert(out.select("t_idx").distinct().collect().map(_.getInt(0)).sorted.toSeq
       == Seq(7, 8, 9, 10, 11, 12))
   }
@@ -225,7 +228,7 @@ class NetCDF4Spec extends SparkSpec {
     val (path, vals) = writeV4("ea-sblk", Seq(79, 2, 2), Seq(2, 2, 2)) // 40 chunks, last partial
     assert(parsedIndex(path) == Hdf5.ExtensibleArray)
     assert(NetCDF4Source.readLocal(spark, path, "v")._2.toSeq == vals.toSeq)
-    assert(NetCDF4Source.read3D(spark, path, "v").count() == 79L * 2 * 2)
+    assert(nc(path, "v").collect().length == 79L * 2 * 2)
   }
 
   test("v4 v2-btree chunk index round-trips through the source") {
@@ -359,10 +362,11 @@ class NetCDF4Spec extends SparkSpec {
     assert(got(3) == 32768.0, s"raw -32768 must read 32768, got ${got(3)}")
     assert(got(4) == 32767.0)
     assert(got(5).isNaN, "the fill code must mask under the unsigned bias")
-    // utility read path applies the same reinterpretation, fill included
-    val ds = NetCDF4Source.read3D(spark, path, "counts")
+    // a windowed read (pushed t_idx range) applies the same
+    // reinterpretation, fill included
+    val ds = nc(path, "counts").filter(col("t_idx").between(0, 2))
     assert(ds.filter(col("value") === 65535.0).count() == 1)
     assert(ds.filter(isnan(col("value"))).count() == 1,
-      "the utility path must mask the biased fill code too")
+      "the windowed read must mask the biased fill code too")
   }
 }

@@ -244,12 +244,44 @@ class NetCdfDataSourceV2Spec extends SparkSpec {
   test("the NetCDFSource facade opens directories and globs like open_mfdataset") {
     val dir = java.nio.file.Files.createTempDirectory("graft_mff").toFile
     writeArchive(dir, months = 3)
-    val viaDir = NetCDFSource.read3D(spark, dir.getAbsolutePath, "sst")
-    assert(viaDir.count() == 3 * 4 * 2 * 3)
-    val ranged = NetCDFSource.read3D(spark, s"${dir.getAbsolutePath}/sst_*.nc", "sst",
-      timeRange = Some((9, 10)))
+    val viaDir = spark.read.format("netcdf").option("var", "sst").load(dir.getAbsolutePath)
+    assert(viaDir.collect().length == 3 * 4 * 2 * 3)
+    val ranged = spark.read.format("netcdf").option("var", "sst")
+      .load(s"${dir.getAbsolutePath}/sst_*.nc").filter(col("t_idx").between(9, 10))
     assert(ranged.select("t_idx").distinct().collect().map(_.getInt(0)).sorted.toSeq
       == Seq(9, 10))
+  }
+
+  test("a compact-layout NC4 variable reads from its header bytes") {
+    import java.nio.{ByteBuffer, ByteOrder}
+    val raw = Array.tabulate[Short](10)(i => (i * 3 - 7).toShort)
+    val img = Hdf5.assemble(Seq(Hdf5.WriteVar("v", Seq(5, 1, 2), Array.empty,
+      typed = Some(Hdf5.PackedGridData(raw)), attrs = Seq("scale_factor" -> 0.5))))
+    // the writer emits no compact layout: rewrite the contiguous layout
+    // message (v3 class 1: address + 20-byte size, padded to 24 bytes) in
+    // place as a compact one (v3 class 0: size + the 20 data bytes)
+    def le(off: Int) = ByteBuffer.wrap(img, off, 8).order(ByteOrder.LITTLE_ENDIAN)
+    val at = (0 until img.length - 24).filter(i =>
+      img(i) == 3 && img(i + 1) == 1 && le(i + 10).getLong == 20L)
+    assert(at.size == 1, s"contiguous layout message matches at $at")
+    val addr = le(at.head + 2).getLong.toInt
+    val compact = ByteBuffer.allocate(24).order(ByteOrder.LITTLE_ENDIAN)
+      .put(3.toByte).put(0.toByte).putShort(20.toShort).put(img, addr, 20).array()
+    System.arraycopy(compact, 0, img, at.head, 24)
+    val path = tmpNc()
+    java.nio.file.Files.write(java.nio.file.Paths.get(path), img)
+    val src = new NetCDF4Source.HadoopSource(spark.sparkContext.hadoopConfiguration, path)
+    val (rootOh, _) = Hdf5.readSuperblock(src)
+    val (nm, oh) = Hdf5.listDatasets(src, rootOh).head
+    assert(Hdf5.readDataset(src, nm, oh).layout.isInstanceOf[Hdf5.Compact])
+
+    val df = spark.read.format("netcdf").option("var", "v").load(path)
+    val got = df.orderBy("t_idx", "y", "x").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
+    assert(got.toSeq == (0 until 10).map(i => (i / 2, 0, i % 2, raw(i) * 0.5)))
+    val win = df.filter(col("t_idx").between(1, 3))
+    assert(win.queryExecution.executedPlan.toString.contains("t_idx in [1, 3]"))
+    assert(win.collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 1, 2, 2, 3, 3))
   }
 
   test("an empty match fails with the pattern named") {

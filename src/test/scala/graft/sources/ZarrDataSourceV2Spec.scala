@@ -9,10 +9,20 @@ class ZarrDataSourceV2Spec extends SparkSpec {
   private val fixture = "/root/reference/tests/data/extremes_gridded.zarr/extreme_events"
   private def haveFixture = new java.io.File(s"$fixture/.zarray").exists()
 
+  /** The driver-side decode of a 3-D array as `(t_idx, y, x, value)` —
+    * the reference the scan is checked against. */
+  private def localCells(dir: String) = {
+    import spark.implicits._
+    val (Seq(_, ny, nx), vals) = ZarrSource.readLocalND(dir)
+    vals.toSeq.zipWithIndex.map { case (v, i) =>
+      (i / (ny * nx), i / nx % ny, i % nx, v)
+    }.toDF("t_idx", "y", "x", "value")
+  }
+
   test("format(\"zarr\") reads the same cells as the utility reader") {
     assume(haveFixture)
     val v2 = spark.read.format("zarr").load(fixture)
-    val util = ZarrSource.read3D(spark, fixture)
+    val util = localCells(fixture)
     assert(v2.count() == util.count())
     val diff = v2.join(util.withColumnRenamed("value", "expected"),
       Seq("t_idx", "y", "x"))
@@ -93,7 +103,7 @@ class ZarrDataSourceV2Spec extends SparkSpec {
   test("flag count matches the boolean fixture semantics") {
     assume(haveFixture)
     val v2 = spark.read.format("zarr").load(fixture).filter(col("value") =!= 0.0)
-    val util = ZarrSource.read3D(spark, fixture).filter(col("value") =!= 0.0)
+    val util = localCells(fixture).filter(col("value") =!= 0.0)
     assert(v2.count() == util.count())
   }
 

@@ -58,8 +58,8 @@ class ZarrHadoopFsWriteSpec extends SparkSpec {
     // the bytes must be at the LOCAL path graftfs resolved to
     assert(new java.io.File(dir, ".zarray").isFile, "metadata written through FS")
     assert(new java.io.File(dir, "0.0.0").isFile, "chunk written through FS")
-    val back = ZarrSource.read3D(spark, dir)
-    assert(back.count() == 6 * 4 * 5)
+    val back = spark.read.format("zarr").load(dir)
+    assert(back.collect().length == 6 * 4 * 5)
     assert(back.filter(col("value") =!= col("t_idx") * 100.0 + col("y") * 10.0 + col("x"))
       .count() == 0)
   }
@@ -73,8 +73,8 @@ class ZarrHadoopFsWriteSpec extends SparkSpec {
     assertNoLocalLeak()
     assert(new java.io.File(dir, "zarr.json").isFile)
     assert(new java.io.File(dir, "c/0/0/0").isFile)
-    val back = ZarrSource.read3D(spark, dir)
-    assert(back.count() == 4 * 4 * 4)
+    val back = spark.read.format("zarr").load(dir)
+    assert(back.collect().length == 4 * 4 * 4)
     assert(back.filter(col("value") =!= col("t_idx") * 100.0 + col("y") * 10.0 + col("x"))
       .count() == 0)
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Round-trip: write a zarr v2 directory by hand (raw + zlib chunks), read
-  * it back distributed, check values and chunk pruning. */
+  * it back through the `zarr` scan, check values and chunk pruning. */
 class ZarrSourceSpec extends SparkSpec {
 
   /** value(t,y,x) = t*10000 + y*100 + x — position-identifying. */
@@ -49,8 +49,8 @@ class ZarrSourceSpec extends SparkSpec {
 
   test("raw chunks round-trip with correct positions") {
     val dir = writeZarr(nt = 7, ny = 5, nx = 6, ct = 3, cy = 5, cx = 6, zlib = false)
-    val df = ZarrSource.read3D(spark, dir)
-    assert(df.count() == 7 * 5 * 6)
+    val df = spark.read.format("zarr").load(dir)
+    assert(df.collect().length == 7 * 5 * 6)
     val bad = df.filter(col("value") =!=
       (col("t_idx") * 10000 + col("y") * 100 + col("x")).cast("double")).count()
     assert(bad == 0)
@@ -58,22 +58,22 @@ class ZarrSourceSpec extends SparkSpec {
 
   test("zlib chunks decode identically") {
     val dir = writeZarr(nt = 6, ny = 4, nx = 4, ct = 2, cy = 4, cx = 4, zlib = true)
-    val df = ZarrSource.read3D(spark, dir)
-    assert(df.count() == 6 * 4 * 4)
+    val df = spark.read.format("zarr").load(dir)
+    assert(df.collect().length == 6 * 4 * 4)
     assert(df.agg(max("value")).head().getDouble(0) == 5 * 10000 + 3 * 100 + 3)
   }
 
   test("time-range predicate prunes to the requested span") {
     val dir = writeZarr(nt = 10, ny = 3, nx = 3, ct = 2, cy = 3, cx = 3, zlib = false)
-    val df = ZarrSource.read3D(spark, dir, timeRange = Some((4, 7)))
-    assert(df.count() == 4 * 3 * 3)
+    val df = spark.read.format("zarr").load(dir).filter(col("t_idx").between(4, 7))
+    assert(df.collect().length == 4 * 3 * 3)
     val ts = df.select("t_idx").distinct().collect().map(_.getInt(0)).sorted
     assert(ts.toSeq == Seq(4, 5, 6, 7))
   }
 
   test("withDailyTime attaches the daily axis") {
     val dir = writeZarr(nt = 3, ny = 2, nx = 2, ct = 2, cy = 2, cx = 2, zlib = false)
-    val df = ZarrSource.withDailyTime(ZarrSource.read3D(spark, dir), "2000-01-01")
+    val df = ZarrSource.withDailyTime(spark.read.format("zarr").load(dir), "2000-01-01")
     val times = df.select("time").distinct().orderBy("time")
       .collect().map(_.getTimestamp(0).toString)
     assert(times.head.startsWith("2000-01-01"))
@@ -87,7 +87,7 @@ class ZarrSourceSpec extends SparkSpec {
          "compressor":{"id":"blosc"},"fill_value":0,"order":"C"}""".getBytes)
     val f = new FileOutputStream(s"$dir/0.0.0"); f.write(new Array[Byte](32)); f.close()
     val e = intercept[org.apache.spark.SparkException] {
-      ZarrSource.read3D(spark, dir).count()
+      spark.read.format("zarr").load(dir).collect()
     }
     assert(e.getMessage.contains("blosc") ||
       e.getCause != null && e.getCause.getMessage.contains("blosc"))

@@ -58,8 +58,8 @@ class ZarrV3Spec extends SparkSpec {
   }
 
   private def assertPositional(dir: String, nt: Int, ny: Int, nx: Int): Unit = {
-    val df = ZarrSource.read3D(spark, dir)
-    assert(df.count() == nt.toLong * ny * nx)
+    val df = spark.read.format("zarr").load(dir)
+    assert(df.collect().length == nt.toLong * ny * nx)
     val bad = df.filter(col("value") =!=
       (col("t_idx") * 10000 + col("y") * 100 + col("x")).cast("double")).count()
     assert(bad == 0)
@@ -105,7 +105,7 @@ class ZarrV3Spec extends SparkSpec {
     bytes(3) = (bytes(3) ^ 0x40).toByte
     Files.write(chunk.toPath, bytes)
     val e = intercept[org.apache.spark.SparkException] {
-      ZarrSource.read3D(spark, dir).count()
+      spark.read.format("zarr").load(dir).collect()
     }
     def chain(t: Throwable): Seq[Throwable] =
       if (t == null) Seq.empty else t +: chain(t.getCause)
@@ -116,8 +116,8 @@ class ZarrV3Spec extends SparkSpec {
     val dir = writeV3Raw(4, 3, 3, 2, 3, 3)
     // delete one chunk file entirely
     assert(new java.io.File(dir, "c/1/0/0").delete())
-    val df = ZarrSource.read3D(spark, dir)
-    assert(df.count() == 4 * 3 * 3)
+    val df = spark.read.format("zarr").load(dir)
+    assert(df.collect().length == 4 * 3 * 3)
     assert(df.filter(isnan(col("value"))).count() == 2 * 3 * 3)
   }
 
@@ -162,8 +162,8 @@ class ZarrV3Spec extends SparkSpec {
       codecs = Seq(ZarrSource.ZstdC), innerChunks = Some((2, 2, 4)))
     // 2 shard files (one per outer chunk), not 16 inner-chunk files
     assert(new java.io.File(dir, "c/0/0/0").isFile && new java.io.File(dir, "c/1/0/0").isFile)
-    val got = ZarrSource.read3D(spark, dir)
-    assert(got.count() == 8 * 4 * 4)
+    val got = spark.read.format("zarr").load(dir)
+    assert(got.collect().length == 8 * 4 * 4)
     assert(got.filter(isnan(col("value"))).count() == 2 * 2 * 4)
     val bad = got.filter(!isnan(col("value")) && col("value") =!=
       (col("t_idx") * 10000 + col("y") * 100 + col("x")).cast("double")).count()
@@ -252,7 +252,7 @@ class ZarrV3Spec extends SparkSpec {
     new java.io.File(dir, "c/0/0").mkdirs()
     Files.write(java.nio.file.Paths.get(s"$dir/c/0/0/0"),
       idx.array() ++ cells.array())
-    val got = ZarrSource.read3D(spark, dir).orderBy("t_idx", "y", "x")
+    val got = spark.read.format("zarr").load(dir).orderBy("t_idx", "y", "x")
       .collect().map(_.getDouble(3)).toSeq
     assert(got == (0 until 8).map(_ * 2.0))
   }
@@ -269,7 +269,7 @@ class ZarrV3Spec extends SparkSpec {
     bytes(bytes.length - 20) = (bytes(bytes.length - 20) ^ 0x01).toByte // index word
     Files.write(f.toPath, bytes)
     val e = intercept[org.apache.spark.SparkException] {
-      ZarrSource.read3D(spark, dir).count()
+      spark.read.format("zarr").load(dir).collect()
     }
     def chain(t: Throwable): Seq[Throwable] =
       if (t == null) Seq.empty else t +: chain(t.getCause)
