@@ -614,15 +614,20 @@ object ZarrGroup extends Serializable {
     * shared across calls must agree in size — [[finish]] validates.
     *
     * Data arrays are `<f8` with NaN fill; v2 writes raw chunks, v3 writes
-    * the zarr-python-3 default `bytes → zstd` chain. Each [[arrays]] call is
-    * ONE shuffle: cells group by chunk index once and every variable's chunk
-    * file serializes inside the same task (vs a groupByKey per variable,
-    * which would shuffle the cube V times). Write parallelism is the chunk
-    * grid — the same unit the readers scale by. Every byte write — executor
-    * chunk files, driver coordinate/metadata emission — goes through the
-    * Hadoop FileSystem API ([[ZarrSource.putBytes]]), so on a multi-node
-    * cluster the store lands on the SHARED filesystem the readers will open,
-    * not on executor-local disks.
+    * the zarr-python-3 default `bytes → zstd` chain. Each member's layout
+    * is one [[ZarrSource.ZarrMeta]], built when the member is added: the
+    * chunk job encodes every chunk from it ([[ZarrSource.encodeChunk]])
+    * and [[finish]] writes the same layout as metadata. Each [[arrays]]
+    * call is ONE shuffle ([[writeChunkJob]]): cells group by chunk index
+    * once and every variable's chunk file serializes inside the same task
+    * (vs a groupByKey per variable, which would shuffle the cube V times).
+    * Coordinates encode driver-side through the same encoder. Write
+    * parallelism is the chunk grid — the same unit the readers scale by.
+    * Every byte write — executor chunk files, driver coordinate/metadata
+    * emission — goes through the Hadoop FileSystem API
+    * ([[ZarrSource.putBytes]]), so on a multi-node cluster the store lands
+    * on the SHARED filesystem the readers will open, not on executor-local
+    * disks.
     *
     * @param compressor v2 chunk compression: `None` = raw chunks,
     *                   `Some("blosc")` = blosc-lz4 with byte shuffle (the
@@ -648,12 +653,23 @@ object ZarrGroup extends Serializable {
     private def put(rel: String, bytes: Array[Byte]): Unit =
       ZarrSource.putBytes(driverFs, new org.apache.hadoop.fs.Path(dir, rel), bytes)
 
+    /** Register a member and return its layout as the chunk encoder reads
+      * it — the same layout [[finish]] writes as metadata. */
     private def addMember(n: String, sh: Seq[Int], ch: Seq[Int], dn: Seq[String],
         fill: Double, sInner: Option[Seq[Int]] = None,
-        pack: Option[Pack] = None): Unit = {
+        pack: Option[Pack] = None): ZarrSource.ZarrMeta = {
       require(!finished, "GroupWriter already finished")
       require(!members.exists(_.name == n), s"duplicate group member '$n'")
       members += Member(n, sh, ch, dn, fill, sInner, pack)
+      val dtype = if (pack.isDefined) "<i2" else "<f8"
+      val cf = pack.map(p => ZarrSource.CfAttrs(p.scale, p.offset, Some(p.fillRaw.toDouble)))
+      if (v3) ZarrSource.ZarrMeta(sh, ch, dtype, None, fill, "C",
+        format = 3, keyPrefix = "c", keySep = "/",
+        v3Codecs = if (sInner.isEmpty) Seq(ZarrSource.ZstdC) else Nil,
+        shard = sInner.map(ZarrSource.ShardSpec(_, Seq(ZarrSource.ZstdC),
+          indexCrc = true, indexAtEnd = true)),
+        cf = cf)
+      else ZarrSource.ZarrMeta(sh, ch, dtype, compressor, fill, "C", cf = cf)
     }
 
     /** Write `valueCols` as data arrays over `dims` from a long-format
@@ -681,26 +697,23 @@ object ZarrGroup extends Serializable {
             s"chunk shape ${chunks.mkString("x")}")
       }
       val memberFill = pack.fold(fill)(_.fillRaw.toDouble)
-      valueCols.foreach(vc =>
+      val metas = valueCols.map(vc =>
         addMember(vc, sizes, chunks, dimNames, memberFill, shard, pack))
       valueCols.foreach(vc =>
         driverFs.mkdirs(new org.apache.hadoop.fs.Path(dir, vc)))
-      writeChunkJob(df, dir, dimNames, sizes, chunks, valueCols, fill,
-        v3, blosc = Seq.fill(valueCols.length)(!v3 && compressor.contains("blosc")),
-        shard = shard, pack = pack)
+      writeChunkJob(df, dimNames, sizes, valueCols, metas,
+        valueCols.map(vc => s"$dir/$vc"))
       this
     }
 
     /** Write a 1-D coordinate axis driver-side (axes are metadata-sized). */
     def coord(name: String, values: Array[Double]): this.type = {
-      addMember(name, Seq(values.length), Seq(values.length), Seq(name), Double.NaN)
-      val rel = if (v3) "c/0" else "0"
+      val meta = addMember(name, Seq(values.length), Seq(values.length),
+        Seq(name), Double.NaN)
       val buf = ByteBuffer.allocate(values.length * 8).order(ByteOrder.LITTLE_ENDIAN)
       values.foreach(buf.putDouble)
-      val payload = if (v3) ZarrSource.v3EncodeChain(buf.array(), Seq(ZarrSource.ZstdC))
-        else if (compressor.contains("blosc")) Blosc.compress(buf.array(), typesize = 8)
-        else buf.array()
-      put(s"$name/$rel", payload)
+      put(s"$name/${ZarrSource.chunkKey(meta, Seq(0))}",
+        ZarrSource.encodeChunk(buf.array(), meta))
       this
     }
 
@@ -842,71 +855,68 @@ object ZarrGroup extends Serializable {
     w.finish(attrs)
   }
 
-  /** The distributed chunk-write job shared by [[GroupWriter.arrays]]
-    * (create) and [[appendDataset]] (store-resize append): ONE Tungsten
+  /** The distributed chunk-write job every zarr writer shares
+    * ([[GroupWriter.arrays]], [[appendGroupDataset]], [[regionWrite]] and
+    * [[ZarrSource.write3D]]/[[ZarrSource.write3DV3]]): ONE Tungsten
     * exchange keyed on the LINEAR chunk id over the TOTAL grid, sorted
     * within partitions so each task streams chunk runs holding ONE
     * chunk's buffers at a time — the same memory shape as a typed
     * groupByKey, minus the Row-encoder boxing (the encoder-free path
     * measured ~3× the rows/s on the netcdf archive sink, PERF.md).
     *
+    * Each value column `valueCols(i)` is written to `dirs(i)` in the
+    * layout `metas(i)` describes: its chunk keys ([[ZarrSource.chunkKey]]),
+    * fill, dtype (`<f8`, or CF-packed `<i2` quantized with the member's
+    * own packing) and codecs ([[ZarrSource.encodeChunk]]). The metas must
+    * share one chunk shape.
+    *
     * Rows outside the declared shape are DROPPED before the exchange: an
     * out-of-range index would alias into a different valid chunk through
     * the linear cid (the mixed-radix encode is only a bijection over the
-    * in-range grid).
+    * in-range grid). Null cells keep the chunk's background.
     *
-    * Append mode (`offset0 > 0` or `initMetas` nonempty): indices along
-    * dim `appendAt` arrive LOCAL to the appended block
+    * Indices along dim `appendAt` arrive LOCAL to the written block
     * (`0 until totalSizes(appendAt) − offset0`) and shift by `offset0`
     * onto the grown axis — `appendAt` is usually 0 (time-major layouts)
     * but e.g. the track output's `centroid(component, time, ID)` grows
-    * its MIDDLE axis; a chunk whose file ALREADY EXISTS initializes from
-    * the store bytes instead of `fill`, so the edge chunk a
-    * non-chunk-aligned append straddles merges in place (executor-side
-    * read-modify-write — zarr's contract is one writer at a time per
-    * array, same as xarray's `to_zarr`). */
-  private[sources] def writeChunkJob(df: DataFrame, dir: String,
-      dimNames: Seq[String], totalSizes: Seq[Int], chunks: Seq[Int],
-      valueCols: Seq[String], fill: Double, v3: Boolean, blosc: Seq[Boolean],
-      offset0: Int = 0, appendAt: Int = 0,
-      initMetas: Map[String, ZarrSource.ZarrMeta] = Map.empty,
-      shard: Option[Seq[Int]] = None, pack: Option[Pack] = None): Unit = {
+    * its MIDDLE axis. With `merge` a chunk initializes from the store's
+    * bytes instead of the fill, so the edge chunk a non-chunk-aligned
+    * append straddles, or a region write touches, merges in place
+    * (executor-side read-modify-write — zarr's contract is one writer at a
+    * time per array, same as xarray's `to_zarr`). */
+  private[sources] def writeChunkJob(df: DataFrame, dimNames: Seq[String],
+      totalSizes: Seq[Int], valueCols: Seq[String],
+      metas: Seq[ZarrSource.ZarrMeta], dirs: Seq[String],
+      offset0: Int = 0, appendAt: Int = 0, merge: Boolean = false): Unit = {
     val spark = df.sparkSession
     val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    require(metas.length == valueCols.length && dirs.length == valueCols.length,
+      s"writeChunkJob: ${metas.length} metas and ${dirs.length} dirs for " +
+        s"${valueCols.length} columns")
+    val chunks = metas.head.chunks
+    require(metas.forall(_.chunks == chunks),
+      s"writeChunkJob: members disagree on the chunk shape (${metas.map(_.chunks).distinct})")
+    require(appendAt >= 0 && appendAt < dimNames.length,
+      s"appendAt=$appendAt outside the ${dimNames.length}-dim tuple")
     val nd = dimNames.length
     val chunkLen = chunks.product
     val nV = valueCols.length
     val chB = chunks.toArray
-    val vcB = valueCols.toArray
-    val dirB = dir
-    val isV3 = v3
-    val fillB = fill
-    require(blosc.length == valueCols.length,
-      s"writeChunkJob: ${blosc.length} compressor flags for ${valueCols.length} columns")
-    val bloscB = blosc.toArray
-    val shardB: Array[Int] = shard.map(_.toArray).orNull
-    val packB: Pack = pack.orNull
-    require(appendAt >= 0 && appendAt < dimNames.length,
-      s"appendAt=$appendAt outside the ${dimNames.length}-dim tuple")
-    val blockN0 = totalSizes(appendAt) - offset0
-    val initB: Array[ZarrSource.ZarrMeta] =
-      if (initMetas.isEmpty) null else valueCols.map(initMetas(_)).toArray
-    // chunk-key encoding: creates use this writer's layout ("." for v2,
-    // "c/" for v3); in-place writes MUST keep the store's own (via
-    // ZarrSource.chunkKey) — a "."-keyed write into a "/"-separated store
-    // (or a "c/"-keyed write into a v3 "v2"-encoded store) would leave
-    // chunks its readers never find
-    val relOf: Seq[Int] => String =
-      if (initB == null) {
-        if (v3) ci => ("c" +: ci.map(_.toString)).mkString("/")
-        else ci => ci.mkString(".")
-      } else {
-        val encs = initB.map(m => (m.keyPrefix, m.keySep)).distinct
-        require(encs.length == 1,
-          s"members disagree on the chunk-key encoding (${encs.mkString(", ")})")
-        val m0 = initB.head
-        ci => ZarrSource.chunkKey(m0, ci)
+    val metaB = metas.toArray
+    val dirB = dirs.toArray
+    // CF-packed members quantize with their own packing (packAttrs rejects
+    // packings this writer cannot reproduce); raw float64 writes as-is
+    val packB: Array[Pack] = valueCols.zip(metas).map { case (vc, m) =>
+      m.dtype match {
+        case "<f8" => null
+        case "<i2" => packAttrs(vc, m, "write")
+        case other => throw new IllegalArgumentException(
+          s"member '$vc' has dtype $other — the chunk writer supports raw " +
+            "float64 ('<f8') and CF-packed int16 ('<i2') members only")
       }
+    }.toArray
+    val mergeB = merge
+    val blockN0 = totalSizes(appendAt) - offset0
 
     val nChunksPerDim = totalSizes.indices.map(d =>
       (totalSizes(d) + chunks(d) - 1) / chunks(d))
@@ -937,46 +947,36 @@ object ZarrGroup extends Serializable {
     val nParts = math.max(1L, math.min(
       spark.sessionState.conf.numShufflePartitions.toLong, totalChunks)).toInt
     val ncB = nChunksPerDim.toArray
-    val ndB = nd
     prepared.repartition(nParts, col("__cid")).sortWithinPartitions("__cid")
-      .queryExecution.toRdd.mapPartitions { it =>
-        val fs = new org.apache.hadoop.fs.Path(dirB).getFileSystem(conf.value)
+      .queryExecution.toRdd.foreachPartition { it =>
+        val fss = dirB.map(d => new org.apache.hadoop.fs.Path(d).getFileSystem(conf.value))
         var curCid = Long.MinValue
-        val ci = new Array[Int](ndB)
+        val ci = new Array[Int](nd)
         var bufs: Array[ByteBuffer] = null
-        val written = Seq.newBuilder[String]
         // PACKED chunks buffer in RAW space (each cell an exact int16 code
         // as a double): quantization happens ONCE, at insert, on NEW
-        // values only — an append's merge copies a straddled edge chunk's
-        // committed codes bit-for-bit (chunkValues reads raw), so growing
-        // a packed store can never re-quantize (drift) existing data.
-        // Narrowing to int16 bytes is then a cast; per-chunk CPU in-task.
-        def packed(b: ByteBuffer): Array[Byte] = {
-          val out = ByteBuffer.allocate(chunkLen * 2).order(ByteOrder.LITTLE_ENDIAN)
-          var i = 0
-          while (i < chunkLen) { out.putShort(i * 2, b.getDouble(i * 8).toInt.toShort); i += 1 }
-          out.array()
-        }
+        // values only — a merge copies a straddled edge chunk's committed
+        // codes bit-for-bit (chunkValues reads raw), so growing a packed
+        // store can never re-quantize (drift) existing data. Narrowing to
+        // the member's int16 cells is then a cast.
+        def cells(vi: Int): Array[Byte] =
+          if (packB(vi) == null) bufs(vi).array()
+          else {
+            val out = ByteBuffer.allocate(chunkLen * 2).order(ByteOrder.LITTLE_ENDIAN)
+            var i = 0
+            while (i < chunkLen) {
+              out.putShort(i * 2, bufs(vi).getDouble(i * 8).toInt.toShort); i += 1
+            }
+            out.array()
+          }
         def flush(): Unit = if (bufs != null) {
-          val rel = relOf(ci.toSeq)
           var vi = 0
           while (vi < nV) {
-            val payload = if (isV3 && shardB != null)
-              shardObject(bufs(vi), chB, shardB,
-                if (packB != null) packB.fillRaw.toDouble else fillB, packB)
-            else if (isV3 && packB != null)
-              ZarrSource.v3EncodeChain(packed(bufs(vi)), Seq(ZarrSource.ZstdC))
-            else if (isV3)
-              ZarrSource.v3EncodeChain(bufs(vi).array(), Seq(ZarrSource.ZstdC))
-            else if (packB != null && bloscB(vi)) Blosc.compress(packed(bufs(vi)), typesize = 2)
-            else if (packB != null) packed(bufs(vi))
-            else if (bloscB(vi)) Blosc.compress(bufs(vi).array(), typesize = 8)
-            else bufs(vi).array()
-            ZarrSource.putBytes(fs,
-              new org.apache.hadoop.fs.Path(s"$dirB/${vcB(vi)}", rel), payload)
+            ZarrSource.putBytes(fss(vi), new org.apache.hadoop.fs.Path(dirB(vi),
+              ZarrSource.chunkKey(metaB(vi), ci.toSeq)),
+              ZarrSource.encodeChunk(cells(vi), metaB(vi)))
             vi += 1
           }
-          written += rel
           bufs = null
         }
         it.foreach { r =>
@@ -985,107 +985,41 @@ object ZarrGroup extends Serializable {
             flush()
             curCid = cid
             var rem = cid
-            var d = ndB - 1
+            var d = nd - 1
             while (d >= 0) { ci(d) = (rem % ncB(d)).toInt; rem /= ncB(d); d -= 1 }
             bufs = Array.fill(nV)(
               ByteBuffer.allocate(chunkLen * 8).order(ByteOrder.LITTLE_ENDIAN))
-            if (initB == null) bufs.foreach { b =>
-              // packed buffers hold raw codes: background = the fill CODE
-              val f = if (packB != null) packB.fillRaw.toDouble else fillB
+            var vi = 0
+            while (vi < nV) {
+              // merge onto whatever the store already holds at this chunk
+              // index (fill pattern when the file is absent); a create
+              // starts from the fill (for packed members, the fill CODE)
+              val old =
+                if (mergeB) chunkValues(fss(vi), dirB(vi), metaB(vi), ci.toSeq)
+                else null
+              val f = metaB(vi).fillValue
               var i = 0
-              while (i < chunkLen) { b.putDouble(i * 8, f); i += 1 }
-            } else {
-              // append: merge onto whatever the store already holds at this
-              // chunk index (fill pattern when the file is absent)
-              var vi = 0
-              while (vi < nV) {
-                val old = chunkValues(fs, s"$dirB/${vcB(vi)}", initB(vi), ci.toSeq)
-                var i = 0
-                while (i < chunkLen) { bufs(vi).putDouble(i * 8, old(i)); i += 1 }
-                vi += 1
+              while (i < chunkLen) {
+                bufs(vi).putDouble(i * 8, if (old == null) f else old(i)); i += 1
               }
+              vi += 1
             }
           }
           var flat = 0
           var d = 0
-          while (d < ndB) { flat = flat * chB(d) + (r.getInt(1 + d) - ci(d) * chB(d)); d += 1 }
+          while (d < nd) { flat = flat * chB(d) + (r.getInt(1 + d) - ci(d) * chB(d)); d += 1 }
           var vi = 0
           while (vi < nV) {
-            if (!r.isNullAt(1 + ndB + vi)) {
-              val v = r.getDouble(1 + ndB + vi)
+            if (!r.isNullAt(1 + nd + vi)) {
+              val v = r.getDouble(1 + nd + vi)
               bufs(vi).putDouble(flat * 8,
-                if (packB != null) packB.toRaw(v).toDouble else v)
+                if (packB(vi) != null) packB(vi).toRaw(v).toDouble else v)
             }
             vi += 1
           }
         }
         flush()
-        written.result().iterator
       }
-      .collect() // materialize writes
-  }
-
-  /** Assemble one `sharding_indexed` stored object from a full outer-chunk
-    * cell buffer (C-order doubles over `chunks`): inner chunks of shape
-    * `inner` in C-order, each `bytes → zstd` encoded, all-fill inner
-    * chunks ELIDED (offset = nbytes = −1), then the little-endian
-    * `(offset, nbytes)` u64 index + its crc32c at the END — exactly the
-    * layout [[ZarrSource.assembleShard]] reads back. Sharding is the
-    * object-count lever at archive scale: the task granularity stays the
-    * outer chunk while the store holds 1/∏(chunks/inner) as many objects
-    * as a plain layout, and the array scan byte-range-reads only the
-    * inner chunks a pushed window intersects
-    * ([[ZarrSource.readShardWindow]]); elided all-fill inner chunks cost
-    * nothing. With `pack` set the buffer holds RAW int16 codes (as
-    * doubles) and inner chunks narrow to little-endian shorts — sharding
-    * and CF packing COMPOSE: the 100 TB layout gets both the byte lever
-    * and the object-count lever. */
-  private def shardObject(buf: ByteBuffer, chunks: Array[Int],
-      inner: Array[Int], fill: Double, pack: Pack = null): Array[Byte] = {
-    val nd = chunks.length
-    val grid = Array.tabulate(nd)(d => chunks(d) / inner(d))
-    val nInner = grid.product
-    val innerLen = inner.product
-    val fillBits = java.lang.Double.doubleToLongBits(fill)
-    val body = new java.io.ByteArrayOutputStream()
-    val index = ByteBuffer.allocate(16 * nInner + 4).order(ByteOrder.LITTLE_ENDIAN)
-    val ki = new Array[Int](nd)
-    val di = new Array[Int](nd)
-    var k = 0
-    while (k < nInner) {
-      var rem = k
-      var d = nd - 1
-      while (d >= 0) { ki(d) = rem % grid(d); rem /= grid(d); d -= 1 }
-      val es = if (pack != null) 2 else 8
-      val innerRaw = ByteBuffer.allocate(innerLen * es).order(ByteOrder.LITTLE_ENDIAN)
-      var allFill = true
-      var c = 0
-      while (c < innerLen) {
-        var r2 = c
-        d = nd - 1
-        while (d >= 0) { di(d) = r2 % inner(d); r2 /= inner(d); d -= 1 }
-        var flat = 0
-        d = 0
-        while (d < nd) { flat = flat * chunks(d) + ki(d) * inner(d) + di(d); d += 1 }
-        val v = buf.getDouble(flat * 8)
-        if (java.lang.Double.doubleToLongBits(v) != fillBits) allFill = false
-        if (pack != null) innerRaw.putShort(c * 2, v.toInt.toShort)
-        else innerRaw.putDouble(c * 8, v)
-        c += 1
-      }
-      if (allFill) { index.putLong(-1L); index.putLong(-1L) }
-      else {
-        val enc = ZarrSource.v3EncodeChain(innerRaw.array(), Seq(ZarrSource.ZstdC))
-        index.putLong(body.size().toLong); index.putLong(enc.length.toLong)
-        body.write(enc)
-      }
-      k += 1
-    }
-    val crc = new java.util.zip.CRC32C
-    crc.update(index.array(), 0, 16 * nInner)
-    index.putInt(crc.getValue.toInt)
-    body.write(index.array())
-    body.toByteArray
   }
 
   /** Derive the [[Pack]] an in-place write must quantize with from a
@@ -1234,14 +1168,9 @@ object ZarrGroup extends Serializable {
       s"region [${regionStart}, ${regionStart + nLen}) along '${dimNames.head}' " +
         s"leaves the store's [0, $nt0) — region writes never resize " +
         "(append for growth)")
-    writeChunkJob(df, dir, dimNames, (regionStart + nLen) +: dims.tail.map(_._2),
-      chunks, valueCols,
-      fill = if (packs.head.isDefined) packs.head.get.fillRaw.toDouble
-        else metas.head.fillValue,
-      v3 = v3,
-      blosc = metas.map(_.compressor.contains("blosc")), offset0 = regionStart,
-      initMetas = valueCols.zip(metas).toMap, pack = packs.head,
-      shard = shards.head)
+    writeChunkJob(df, dimNames, (regionStart + nLen) +: dims.tail.map(_._2),
+      valueCols, metas, valueCols.map(vc => s"$dir/$vc"),
+      offset0 = regionStart, merge = true)
   }
 
   /** Append a block along the FIRST (slowest-varying) dimension of an
@@ -1460,12 +1389,9 @@ object ZarrGroup extends Serializable {
       }
       val totalSizes = b.dimNames.indices.map(d =>
         if (d == at) nt0 + nNew else metas.head.shape(d))
-      writeChunkJob(b.df, dir, b.dimNames, totalSizes, b.chunks, b.valueCols,
-        fill = fills.head, v3 = v3,
-        blosc = metas.map(_.compressor.contains("blosc")),
-        offset0 = nt0, appendAt = at,
-        initMetas = b.valueCols.zip(metas).toMap,
-        shard = shards.head, pack = packs.head)
+      writeChunkJob(b.df, b.dimNames, totalSizes, b.valueCols, metas,
+        b.valueCols.map(vc => s"$dir/$vc"), offset0 = nt0, appendAt = at,
+        merge = true)
     }
 
     // 2) extended coordinates (driver-side; axes are metadata-sized) —
@@ -1509,10 +1435,8 @@ object ZarrGroup extends Serializable {
           merged.foreach(buf.putDouble)
           buf.array()
         }
-      val payload =
-        if (v3) ZarrSource.v3EncodeChain(payloadRaw, Seq(ZarrSource.ZstdC))
-        else if (m.compressor.contains("blosc")) Blosc.compress(payloadRaw, typesize = 8)
-        else payloadRaw
+      val grown = Seq(nt0 + nNew)
+      val payload = ZarrSource.encodeChunk(payloadRaw, m.copy(shape = grown, chunks = grown))
       // Staged swap, like NetCDF4Source.appendCompoundTable: putBytes is a
       // plain truncating create, so writing the canonical key directly
       // would leave a TRUNCATED coord chunk if this JVM dies mid-write —

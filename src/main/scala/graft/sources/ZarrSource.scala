@@ -921,11 +921,13 @@ object ZarrSource extends Serializable {
     (shape, out)
   }
 
-  /** Distributed Zarr v2 writer (sink dual of the `zarr` scan; ≙ the reference's
-    * `to_zarr`, track.py:1748): one task per chunk serializes its cells into
-    * a raw little-endian <f8 chunk file. Missing cells become NaN. All byte
-    * writes — executor chunk files and driver metadata — go through the
-    * Hadoop FileSystem API ([[putBytes]]) so the sink lands on the shared
+  /** Distributed Zarr v2 writer (sink dual of the `zarr` scan; ≙ the
+    * reference's `to_zarr`, track.py:1748): writes the `.zarray` metadata,
+    * then the cells as little-endian `<f8` chunks (raw or blosc-lz4, with
+    * an optional numcodecs `delta` filter) through the group writers' one
+    * chunk job ([[ZarrGroup.writeChunkJob]]). Missing and null cells become
+    * NaN; out-of-shape rows are dropped. All byte writes go through the
+    * Hadoop FileSystem API ([[putBytes]]), so the sink lands on the shared
     * store (`file:`, `hdfs:`, `s3a:`) on a real multi-node cluster, exactly
     * like the readers. */
   def write3D(df: DataFrame, dir: String, shape: (Int, Int, Int),
@@ -933,30 +935,21 @@ object ZarrSource extends Serializable {
       delta: Boolean = false): Unit = {
     require(compressor.forall(_ == "blosc"),
       s"unsupported v2 write compressor '${compressor.get}' (supported: blosc)")
-    val blosc = compressor.contains("blosc")
     val (nt, ny, nx) = shape
     val (ct, cy, cx) = chunks
     // delta needs chunk-aligned shapes: edge chunks pad with NaN fill,
-    // which the cumulative decode cannot represent (see the flush check) —
-    // reject the SHAPE up front with an accurate message rather than
-    // blaming the data at flush time
+    // which the cumulative decode cannot represent — reject the SHAPE up
+    // front with an accurate message rather than blaming the data later
     require(!delta || (nt % ct == 0 && ny % cy == 0 && nx % cx == 0),
       s"delta filter requires chunk-aligned shape: $shape % $chunks != 0 " +
         "(edge chunks pad with NaN fill, which the cumulative decode " +
         "cannot represent)")
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
     val dirP = new org.apache.hadoop.fs.Path(dir)
-    val driverFs = dirP.getFileSystem(conf.value)
+    val driverFs = dirP.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     driverFs.mkdirs(dirP)
     val compJson =
-      if (blosc) """{"id": "blosc", "cname": "lz4", "clevel": 5, "shuffle": 1, "blocksize": 0}"""
+      if (compressor.isDefined) """{"id": "blosc", "cname": "lz4", "clevel": 5, "shuffle": 1, "blocksize": 0}"""
       else "null"
-    // numcodecs `delta` pre-compression filter (encode dual of
-    // undoV2Filters): chunks store consecutive differences. Decode is a
-    // cumulative sum, so ONE NaN poisons every later cell of its chunk —
-    // the writer therefore refuses chunks with missing cells by name
-    // (numcodecs would silently corrupt them) at flush below.
     val filterJson =
       if (delta) """[{"id": "delta", "dtype": "<f8", "astype": "<f8"}]"""
       else "null"
@@ -965,87 +958,16 @@ object ZarrSource extends Serializable {
           "dtype": "<f8", "compressor": $compJson, "fill_value": "NaN",
           "order": "C", "filters": $filterJson}"""
     putBytes(driverFs, new org.apache.hadoop.fs.Path(dir, ".zarray"), zarray.getBytes)
-    // One Tungsten exchange on a linear chunk id + in-partition sort, then
-    // raw InternalRow consumption over the chunk runs — the encoder-free
-    // path the group writer and archive sink use (~3× the rows/s of a
-    // typed groupByKey, PERF.md). Out-of-shape rows are dropped: the
-    // mixed-radix cid is only a bijection over the declared grid.
-    val spark = df.sparkSession
-    val ncT = (nt + ct - 1) / ct; val ncY = (ny + cy - 1) / cy; val ncX = (nx + cx - 1) / cx
-    def chunkOf(c: org.apache.spark.sql.Column, w: Int) =
-      ((c.cast("long") - pmod(c.cast("long"), lit(w))) / w).cast("long")
-    val cid = (chunkOf(col("t_idx"), ct) * ncY + chunkOf(col("y"), cy)) * ncX +
-      chunkOf(col("x"), cx)
-    val prepared = df
-      .filter(col("t_idx").isNotNull && col("t_idx") >= 0 && col("t_idx") < nt &&
-        col("y").isNotNull && col("y") >= 0 && col("y") < ny &&
-        col("x").isNotNull && col("x") >= 0 && col("x") < nx)
-      .select(cid.as("__cid"), col("t_idx").cast("int"), col("y").cast("int"),
-        col("x").cast("int"), col("value").cast("double"))
-    // never more partitions than chunks (see ZarrGroup.writeChunkJob)
-    val nParts = math.max(1L, math.min(
-      spark.sessionState.conf.numShufflePartitions.toLong,
-      ncT.toLong * ncY * ncX)).toInt
-    val chunkLen = ct * cy * cx
-    val dirB = dir
-    prepared.repartition(nParts, col("__cid")).sortWithinPartitions("__cid")
-      .queryExecution.toRdd.mapPartitions { it =>
-        val fs = new org.apache.hadoop.fs.Path(dirB).getFileSystem(conf.value)
-        var curCid = Long.MinValue
-        var ci = 0; var cj = 0; var ck = 0
-        var buf: ByteBuffer = null
-        val written = Seq.newBuilder[String]
-        def flush(): Unit = if (buf != null) {
-          val raw = if (!delta) buf.array() else {
-            // forward delta: d[0] = v[0], d[i] = v[i] − v[i−1]
-            val n = chunkLen
-            val out = ByteBuffer.allocate(n * 8).order(ByteOrder.LITTLE_ENDIAN)
-            var prev = 0.0
-            var i = 0
-            while (i < n) {
-              val v = buf.getDouble(i * 8)
-              if (v.isNaN) throw new IllegalArgumentException(
-                s"delta filter cannot represent missing cells (chunk " +
-                  s"$ci.$cj.$ck has a NaN at flat index $i): the cumulative " +
-                  "decode poisons every later cell — write dense data or " +
-                  "drop the filter")
-              out.putDouble(i * 8, if (i == 0) v else v - prev)
-              prev = v
-              i += 1
-            }
-            out.array()
-          }
-          val payload = if (blosc) Blosc.compress(raw, typesize = 8)
-            else raw
-          putBytes(fs, new org.apache.hadoop.fs.Path(dirB, s"$ci.$cj.$ck"), payload)
-          written += s"$ci.$cj.$ck"
-          buf = null
-        }
-        it.foreach { r =>
-          val c = r.getLong(0)
-          if (c != curCid) {
-            flush()
-            curCid = c
-            ck = (c % ncX).toInt; cj = (c / ncX % ncY).toInt; ci = (c / ncX / ncY).toInt
-            buf = ByteBuffer.allocate(chunkLen * 8).order(ByteOrder.LITTLE_ENDIAN)
-            var i = 0
-            while (i < chunkLen) { buf.putDouble(i * 8, Double.NaN); i += 1 }
-          }
-          val idx = (r.getInt(1) - ci * ct) * cy * cx +
-            (r.getInt(2) - cj * cy) * cx + (r.getInt(3) - ck * cx)
-          if (!r.isNullAt(4)) buf.putDouble(idx * 8, r.getDouble(4))
-        }
-        flush()
-        written.result().iterator
-      }
-      .collect() // materialize writes
-    ()
+    val meta = ZarrMeta(Seq(nt, ny, nx), Seq(ct, cy, cx), "<f8", compressor,
+      Double.NaN, "C", v2Filters = if (delta) Seq(DeltaF("<f8", "<f8")) else Nil)
+    writeCube(df, shape, meta, dir)
   }
 
-  /** Distributed Zarr **v3** writer (sink dual of the `zarr` scan for the layout
-    * zarr-python ≥3 / current xarray write by default): one task per chunk
-    * serializes its cells through the codec chain into a nested
-    * `c/t/y/x` chunk file. Missing cells become NaN.
+  /** Distributed Zarr **v3** writer (sink dual of the `zarr` scan for the
+    * layout zarr-python ≥3 / current xarray write by default): writes the
+    * `zarr.json` metadata, then the cells as nested `c/t/y/x` chunks
+    * through [[ZarrGroup.writeChunkJob]], like [[write3D]]. Missing and
+    * null cells become NaN; out-of-shape rows are dropped.
     *
     * @param codecs bytes→bytes chain after the implicit little-endian
     *               `bytes` codec, in chain order — any of [[GzipC]],
@@ -1076,21 +998,18 @@ object ZarrSource extends Serializable {
       require(ord.sorted == Seq(0, 1, 2),
         s"transpose order ${ord.mkString(",")} is not a permutation of 0,1,2")
     }
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
     val dirP = new org.apache.hadoop.fs.Path(dir)
-    val driverFs = dirP.getFileSystem(conf.value)
+    val driverFs = dirP.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     driverFs.mkdirs(dirP)
-    def chainJson(cs: Seq[V3Codec]): String = v3ChainJson(cs)
     val transposeJson = transposeOrder.map(ord =>
       s"""{"name": "transpose", "configuration": {"order": [${ord.mkString(", ")}]}}, """)
       .getOrElse("")
     val codecJson = innerChunks match {
-      case None => transposeJson + chainJson(codecs)
+      case None => transposeJson + v3ChainJson(codecs)
       case Some((it0, iy0, ix0)) =>
         s"""{"name": "sharding_indexed", "configuration": {
             "chunk_shape": [$it0, $iy0, $ix0],
-            "codecs": [${chainJson(codecs)}],
+            "codecs": [${v3ChainJson(codecs)}],
             "index_codecs": [{"name": "bytes", "configuration": {"endian": "little"}}, {"name": "crc32c"}],
             "index_location": "end"}}"""
     }
@@ -1104,67 +1023,145 @@ object ZarrSource extends Serializable {
           "codecs": [$codecJson],
           "attributes": {}}"""
     putBytes(driverFs, new org.apache.hadoop.fs.Path(dir, "zarr.json"), zarrJson.getBytes)
-    def encodeChain(raw: Array[Byte]): Array[Byte] = v3EncodeChain(raw, codecs)
-    val spark = df.sparkSession
-    import spark.implicits._
-    val dirB = dir
-    df.select(col("t_idx").cast("int"), col("y").cast("int"), col("x").cast("int"),
-      col("value").cast("double"))
-      .as[(Int, Int, Int, Double)]
-      .groupByKey(r => (r._1 / ct, r._2 / cy, r._3 / cx))
-      .mapGroups { (key: (Int, Int, Int), it: Iterator[(Int, Int, Int, Double)]) =>
-        val (ci, cj, ck) = key
-        val buf = ByteBuffer.allocate(ct * cy * cx * 8).order(ByteOrder.LITTLE_ENDIAN)
-        var i = 0
-        while (i < ct * cy * cx) { buf.putDouble(i * 8, Double.NaN); i += 1 }
-        it.foreach { case (t, y, x, v) =>
-          val idx = (t - ci * ct) * cy * cx + (y - cj * cy) * cx + (x - ck * cx)
-          buf.putDouble(idx * 8, v)
-        }
-        val payload = innerChunks match {
-          case None =>
-            val raw = transposeOrder match {
-              case Some(ord) =>
-                doTranspose(buf.array(), Seq(ct, cy, cx), ord, 8)
-              case None => buf.array()
-            }
-            encodeChain(raw)
-          case Some((it0, iy0, ix0)) =>
-            // slice the outer buffer into inner chunks, elide all-fill ones,
-            // concatenate + (offset, nbytes) index + crc32c at the end
-            val (gt, gy, gx) = (ct / it0, cy / iy0, cx / ix0)
-            val nInner = gt * gy * gx
-            val body = new java.io.ByteArrayOutputStream()
-            val index = ByteBuffer.allocate(16 * nInner + 4).order(ByteOrder.LITTLE_ENDIAN)
-            for (kt <- 0 until gt; ky <- 0 until gy; kx <- 0 until gx) {
-              val innerRaw = ByteBuffer.allocate(it0 * iy0 * ix0 * 8)
-                .order(ByteOrder.LITTLE_ENDIAN)
-              var allFill = true
-              for (dt <- 0 until it0; dy <- 0 until iy0; dx <- 0 until ix0) {
-                val outer = ((kt * it0 + dt) * cy + (ky * iy0 + dy)) * cx + (kx * ix0 + dx)
-                val v = buf.getDouble(outer * 8)
-                if (!v.isNaN) allFill = false
-                innerRaw.putDouble(v)
-              }
-              if (allFill) { index.putLong(-1L).putLong(-1L) }
-              else {
-                val enc = encodeChain(innerRaw.array())
-                index.putLong(body.size().toLong).putLong(enc.length.toLong)
-                body.write(enc)
-              }
-            }
-            val crc = new java.util.zip.CRC32C
-            crc.update(index.array(), 0, 16 * nInner)
-            index.putInt(crc.getValue.toInt)
-            body.write(index.array())
-            body.toByteArray
-        }
-        val p = new org.apache.hadoop.fs.Path(dirB, s"c/$ci/$cj/$ck")
-        putBytes(p.getFileSystem(conf.value), p, payload)
-        s"c/$ci/$cj/$ck"
+    val shard = innerChunks.map { case (it0, iy0, ix0) =>
+      ShardSpec(Seq(it0, iy0, ix0), codecs, indexCrc = true, indexAtEnd = true)
+    }
+    val meta = ZarrMeta(Seq(nt, ny, nx), Seq(ct, cy, cx), "<f8", None, Double.NaN,
+      "C", format = 3, keyPrefix = "c", keySep = "/",
+      v3Codecs = if (shard.isEmpty) codecs else Nil, shard = shard,
+      transpose = transposeOrder)
+    writeCube(df, shape, meta, dir)
+  }
+
+  /** The (t_idx, y, x, value) cube as the one-member chunk job. */
+  private def writeCube(df: DataFrame, shape: (Int, Int, Int), meta: ZarrMeta,
+      dir: String): Unit =
+    ZarrGroup.writeChunkJob(
+      df.select(col("t_idx"), col("y").as("y_idx"), col("x").as("x_idx"), col("value")),
+      Seq("t", "y", "x"), Seq(shape._1, shape._2, shape._3), Seq("value"),
+      Seq(meta), Seq(dir))
+
+  /** Encode one chunk's raw C-order cells (in `meta.dtype`, the buffer
+    * [[decodeChunk]] returns) into its stored bytes — the write-side dual
+    * of [[decodeChunk]] and the only chunk encoder of the write path.
+    * v2: the `delta` filter (`<f8`), then raw or blosc-lz4; v3: the
+    * `transpose` codec, then the bytes→bytes chain — or one level of
+    * `sharding_indexed` ([[shardObject]]), whose inner chunks take the
+    * inner chain. */
+  private[sources] def encodeChunk(cells: Array[Byte], meta: ZarrMeta): Array[Byte] =
+    if (meta.format == 2) {
+      val stored = meta.v2Filters.foldLeft(cells) {
+        case (raw, DeltaF("<f8", "<f8")) => deltaEncode(raw)
+        case (_, f) => throw new IllegalArgumentException(
+          s"zarr v2 filter $f is not supported on write (supported: delta <f8)")
       }
-      .collect() // materialize writes
-    ()
+      meta.compressor match {
+        case None => stored
+        case Some("blosc") => Blosc.compress(stored, typesize = bytesPer(meta.dtype))
+        case Some(other) => throw new IllegalArgumentException(
+          s"unsupported v2 write compressor '$other' (supported: blosc)")
+      }
+    } else meta.shard match {
+      case Some(s) => shardObject(cells, meta, s)
+      case None =>
+        val ordered = meta.transpose.fold(cells)(ord =>
+          doTranspose(cells, meta.chunks, ord, bytesPer(meta.dtype)))
+        v3EncodeChain(ordered, meta.v3Codecs)
+    }
+
+  /** numcodecs `delta` on `<f8` cells (encode dual of [[undoV2Filters]]):
+    * d[0] = v[0], d[i] = v[i] − v[i−1]. Decode is a cumulative sum, so ONE
+    * NaN would poison every later cell of its chunk — chunks with missing
+    * cells are refused by name (numcodecs would silently corrupt them). */
+  private def deltaEncode(raw: Array[Byte]): Array[Byte] = {
+    val in = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
+    val out = ByteBuffer.allocate(raw.length).order(ByteOrder.LITTLE_ENDIAN)
+    var prev = 0.0
+    var i = 0
+    while (i < raw.length / 8) {
+      val v = in.getDouble(i * 8)
+      if (v.isNaN) throw new IllegalArgumentException(
+        s"delta filter cannot represent missing cells (the chunk has a NaN " +
+          s"at flat index $i): the cumulative decode poisons every later " +
+          "cell — write dense data or drop the filter")
+      out.putDouble(i * 8, if (i == 0) v else v - prev)
+      prev = v
+      i += 1
+    }
+    out.array()
+  }
+
+  /** Assemble one `sharding_indexed` stored object from a full outer
+    * chunk's cells: inner chunks of shape `s.innerChunks` in C-order, each
+    * encoded with the inner chain, all-fill inner chunks ELIDED (offset =
+    * nbytes = −1), then the little-endian `(offset, nbytes)` u64 index and
+    * its crc32c at the END — the layout [[readShardWindow]] reads back.
+    * Sharding is the object-count lever at archive scale: the task
+    * granularity stays the outer chunk while the store holds
+    * 1/∏(chunks/inner) as many objects as a plain layout, and the scan
+    * byte-range-reads only the inner chunks a pushed window intersects.
+    * A `<f8` cell matches a NaN fill when it is any NaN; otherwise cells
+    * match the fill by bytes. */
+  private def shardObject(cells: Array[Byte], meta: ZarrMeta, s: ShardSpec): Array[Byte] = {
+    require(s.innerShard.isEmpty && s.indexCrc && s.indexAtEnd,
+      "the writer emits one level of sharding_indexed with a crc32c end-index")
+    val chunks = meta.chunks
+    val inner = s.innerChunks
+    val nd = chunks.length
+    val bp = bytesPer(meta.dtype)
+    val grid = Array.tabulate(nd)(d => chunks(d) / inner(d))
+    val nInner = grid.product
+    val rowElems = inner(nd - 1)
+    val rowBytes = rowElems * bp
+    val nRows = inner.product / rowElems
+    val fp = fillPattern(meta)
+    val cellBuf = ByteBuffer.wrap(cells).order(byteOrderOf(meta.dtype))
+    val nanFill = meta.fillValue.isNaN && meta.dtype.endsWith("f8")
+    def isFill(off: Int): Boolean =
+      if (nanFill) cellBuf.getDouble(off).isNaN
+      else {
+        var j = 0
+        while (j < bp && cells(off + j) == fp(j)) j += 1
+        j == bp
+      }
+    val body = new java.io.ByteArrayOutputStream()
+    val index = ByteBuffer.allocate(16 * nInner + 4).order(ByteOrder.LITTLE_ENDIAN)
+    val ki = new Array[Int](nd)
+    val ei = new Array[Int](nd)
+    var k = 0
+    while (k < nInner) {
+      var rem = k
+      var d = nd - 1
+      while (d >= 0) { ki(d) = rem % grid(d); rem /= grid(d); d -= 1 }
+      // copy the inner chunk row by row (contiguous runs along the last dim)
+      val innerRaw = new Array[Byte](nRows * rowBytes)
+      var allFill = true
+      var row = 0
+      while (row < nRows) {
+        var r2 = row
+        d = nd - 2
+        while (d >= 0) { ei(d) = r2 % inner(d); r2 /= inner(d); d -= 1 }
+        var flat = 0
+        d = 0
+        while (d < nd) { flat = flat * chunks(d) + ki(d) * inner(d) + ei(d); d += 1 }
+        System.arraycopy(cells, flat * bp, innerRaw, row * rowBytes, rowBytes)
+        var c = 0
+        while (allFill && c < rowElems) { allFill = isFill((flat + c) * bp); c += 1 }
+        row += 1
+      }
+      if (allFill) index.putLong(-1L).putLong(-1L)
+      else {
+        val enc = v3EncodeChain(innerRaw, s.innerCodecs)
+        index.putLong(body.size().toLong).putLong(enc.length.toLong)
+        body.write(enc)
+      }
+      k += 1
+    }
+    val crc = new java.util.zip.CRC32C
+    crc.update(index.array(), 0, 16 * nInner)
+    index.putInt(crc.getValue.toInt)
+    body.write(index.array())
+    body.toByteArray
   }
 
   /** JSON for a v3 codec chain: the implicit little-endian `bytes` codec

@@ -12,9 +12,6 @@ class BucketingSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
-    // disable broadcast so the join strategy is sort-merge and the exchange
-    // question is meaningful
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
     .config("spark.sql.ui.enabled", "false")
@@ -50,6 +47,12 @@ class BucketingSpec extends AnyFunSuite {
     val climTbl = s"clim_b_$run"
     Seq(fieldTbl, climTbl).foreach(purgeTable)
 
+    // disable broadcast so the join strategy is sort-merge and the exchange
+    // question is meaningful — for this test only: `getOrCreate` may hand
+    // back the session other suites share, so the previous value comes back
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
     try {
       Bucketing.writeBucketed(field, fieldTbl, 8, Seq("y", "x"))
       Bucketing.writeBucketed(clim, climTbl, 8, Seq("y", "x"))
@@ -63,7 +66,9 @@ class BucketingSpec extends AnyFunSuite {
       val plain = field.join(clim, Seq("y", "x"))
       assert(Bucketing.hasExchange(plain), "plain join should shuffle (sanity)")
     } finally {
+      spark.conf.set(threshold, before)
       Seq(fieldTbl, climTbl).foreach(purgeTable)
     }
+    assert(spark.conf.get(threshold) == before)
   }
 }

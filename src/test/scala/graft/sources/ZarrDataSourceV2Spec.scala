@@ -181,4 +181,41 @@ class ZarrDataSourceV2Spec extends SparkSpec {
       .load(groupDir).filter(col("value") =!= 0.0)
     assert(df.filter(col("extreme_events") =!= 0.0).count() == member.count())
   }
+
+  test("a zero-chunk store holds metadata only and reads back as all fill") {
+    import spark.implicits._
+    val empty = Seq.empty[(Int, Int, Int, Double)].toDF("t_idx", "y", "x", "value")
+    val (shape, chunks) = ((5, 3, 4), (2, 3, 4))
+    // each layout writes the empty frame into a directory and names the
+    // group member to read, if any
+    val layouts: Seq[(String, String => Option[String])] = Seq(
+      "write3D raw" -> { d => ZarrSource.write3D(empty, d, shape, chunks); None },
+      "write3D blosc" -> { d =>
+        ZarrSource.write3D(empty, d, shape, chunks, Some("blosc")); None },
+      "write3DV3 zstd" -> { d => ZarrSource.write3DV3(empty, d, shape, chunks); None },
+      "write3DV3 sharded" -> { d =>
+        ZarrSource.write3DV3(empty, d, shape, chunks, innerChunks = Some((1, 3, 2))); None },
+      "GroupWriter.arrays" -> { d =>
+        new ZarrGroup.GroupWriter(d)
+          .arrays(empty.toDF("time_idx", "lat_idx", "lon_idx", "sst"),
+            Seq("time" -> 5, "lat" -> 3, "lon" -> 4), Seq(2, 3, 4), Seq("sst"))
+          .finish()
+        Some("sst")
+      })
+    val metaNames = Set(".zarray", ".zattrs", ".zgroup", ".zmetadata", "zarr.json")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    for ((layout, write) <- layouts) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_zempty").toString + "/store"
+      val member = write(dir)
+      val stored = files(new java.io.File(dir))
+      assert(stored.nonEmpty && stored.forall(f => metaNames(f.getName)),
+        s"$layout: metadata only, got ${stored.map(_.getName)}")
+      val reader = member.fold(spark.read.format("zarr"))(
+        spark.read.format("zarr").option("var", _))
+      val values = reader.load(dir).collect().map(_.getAs[Double]("value"))
+      assert(values.length == 5 * 3 * 4, layout)
+      assert(values.forall(_.isNaN), s"$layout: absent chunks read as NaN fill")
+    }
+  }
 }

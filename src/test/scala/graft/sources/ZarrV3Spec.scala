@@ -300,4 +300,33 @@ class ZarrV3Spec extends SparkSpec {
     }
     assert(e.getMessage.contains("divide"))
   }
+
+  test("write3DV3 writes null cells as fill and drops out-of-shape rows") {
+    import spark.implicits._
+    // shape (4, 2, 2) in time chunks of 2: t_idx = 4 = nt would key a
+    // chunk c/2/0/0 outside the grid, t_idx = -1 a negative offset
+    val grid = for (t <- 0 until 4; y <- 0 until 2; x <- 0 until 2) yield
+      (t, y, x, if (t == 1 && y == 0 && x == 1) None else Some(t * 100.0 + y * 10 + x))
+    val df = (grid ++ Seq((-1, 0, 0, Some(999.0)), (4, 0, 0, Some(999.0))))
+      .toDF("t_idx", "y", "x", "value")
+    val base = Files.createTempDirectory("graft_zarr3_oob").toString
+    for ((layout, inner) <- Seq("plain" -> None, "sharded" -> Some((1, 2, 2)))) {
+      val dir = s"$base/$layout"
+      ZarrSource.write3DV3(df, dir, shape = (4, 2, 2), chunks = (2, 2, 2),
+        innerChunks = inner)
+      val got = spark.read.format("zarr").load(dir).collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getDouble(3)).toMap
+      assert(got.size == 4 * 2 * 2, layout)
+      for (((t, y, x), v) <- got) {
+        if (t == 1 && y == 0 && x == 1) assert(v.isNaN, s"$layout: null cell reads as fill")
+        else assert(v == t * 100.0 + y * 10 + x, s"$layout: cell ($t, $y, $x) = $v")
+      }
+      val root = new java.io.File(dir)
+      def files(f: java.io.File): Seq[String] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+        else Seq(root.toPath.relativize(f.toPath).toString)
+      assert(files(root).filterNot(_ == "zarr.json").sorted == Seq("c/0/0/0", "c/1/0/0"),
+        s"$layout: no chunk object outside the grid")
+    }
+  }
 }
