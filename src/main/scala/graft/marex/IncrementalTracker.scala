@@ -3,6 +3,7 @@ package graft.marex
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 
 import graft.operators.ConnectedComponents
@@ -55,10 +56,20 @@ import graft.operators.ConnectedComponents
   * driver algorithm whose decisions at t read updated t−1/t−2 ACROSS the
   * whole history).
   *
-  * Scale shape per block: morphology + per-slice CCL are one task per
-  * slice; the block-local resolution sees only the block (+ one seam
-  * slice); the seam join touches ONE slice of cells; the component solve is
-  * over the block's object graph. Nothing reads history except the seam.
+  * Scale shape per block: nothing reads history except the seam. A
+  * non-merging block is size-adaptive, like [[ConnectedComponents.auto]]:
+  * one bounded collect of up to `DriverThreshold` + 1 cells measures it
+  * and, when it fits — at most `DriverThreshold` cells and at most
+  * [[DriverRasterCells]] raster cells (slices × ny·nx, one or two 0.25°
+  * global days) — the whole append runs on the driver over the same
+  * per-slice kernels the Spark tasks run, the way the reference runs a
+  * timestep through numpy on one in-memory slice (track.py:750–786): one
+  * daily append is the block collect plus one geometry collect, and its
+  * results are local relations. Larger blocks (a multi-year bootstrap) run
+  * distributed: morphology + per-slice CCL are one task per slice; the
+  * block-local resolution sees only the block (+ one seam slice); the seam
+  * join touches ONE slice of cells; the component solve is over the
+  * block's object graph. Merging-mode blocks always run distributed.
   */
 object IncrementalTracker {
 
@@ -117,11 +128,22 @@ object IncrementalTracker {
     * (time, y, x, gid). */
   private def preprocessBlock(flags: DataFrame, geom: DataFrame, spec: GridSpec,
       cfg: TrackConfig): DataFrame = {
-    val land = geom.filter(!col("valid")).select("y", "x")
-    val landOpt = if (land.isEmpty) None else Some(land)
-    val filled = Raster.fillHoles(flags, cfg.rFill, spec, landOpt)
+    val filled = Raster.fillHoles(flags, cfg.rFill, spec, landMask(geom))
     val gids = Track.globalIds(Raster.labelPerSlice(filled.localCheckpoint(), spec))
     Track.filterSmallObjects(gids, geom, cfg)
+  }
+
+  /** The land cells of `geom` (`valid` false) as a local relation, None
+    * when there are none: ONE collect serves both the emptiness test and
+    * [[Raster.fillHoles]]'s land raster (a local relation collects without
+    * a job). */
+  private def landMask(geom: DataFrame): Option[DataFrame] = {
+    val spark = geom.sparkSession
+    import spark.implicits._
+    val land = geom.filter(!col("valid"))
+      .select(col("y").cast("int"), col("x").cast("int")).collect()
+      .map(r => (r.getInt(0), r.getInt(1)))
+    if (land.isEmpty) None else Some(land.toSeq.toDF("y", "x"))
   }
 
   /** Extend the track with a block of new slices (all strictly later than
@@ -132,8 +154,17 @@ object IncrementalTracker {
   def extend(state: Option[IncState], newFlags: DataFrame, geom: DataFrame,
       spec: GridSpec, cfg: TrackConfig,
       rawAxis: Option[Seq[Timestamp]] = None): (IncState, Increment) =
+    extendBounded(state, newFlags, geom, spec, cfg, rawAxis,
+      ConnectedComponents.DriverThreshold)
+
+  /** [[extend]] with the driver path's cell bound as a parameter: a bound
+    * of 0 forces the distributed non-merging path, which is how the spec
+    * checks that both paths give identical results. */
+  private[marex] def extendBounded(state: Option[IncState], newFlags: DataFrame,
+      geom: DataFrame, spec: GridSpec, cfg: TrackConfig,
+      rawAxis: Option[Seq[Timestamp]], driverBound: Long): (IncState, Increment) =
     if (cfg.allowMerging) extendMerging(state, newFlags, geom, spec, cfg, rawAxis)
-    else extendNonMerging(state, newFlags, geom, spec, cfg, rawAxis)
+    else extendNonMerging(state, newFlags, geom, spec, cfg, rawAxis, driverBound)
 
   // ── temporal gap fill under appends (tFill > 0): watermark holdback ─────
 
@@ -158,7 +189,8 @@ object IncrementalTracker {
     * tail (with no future slices, pending fills are decided). */
   def extendGapFill(state: Option[IncState], newFlags: DataFrame, geom: DataFrame,
       spec: GridSpec, cfg: TrackConfig): (IncState, Increment) =
-    gapFillStep(state, Some(newFlags), geom, spec, cfg, flush = false)
+    gapFillStep(state, Some(newFlags), geom, spec, cfg, flush = false,
+      ConnectedComponents.DriverThreshold)
 
   /** Finalize the slices still held back by [[extendGapFill]] — the end of
     * the archive: with no data after them, their gap-fill status is final.
@@ -169,27 +201,28 @@ object IncrementalTracker {
     * fill it). Flush only when the archive has genuinely ended. */
   def flushGapFill(state: Option[IncState], geom: DataFrame,
       spec: GridSpec, cfg: TrackConfig): (IncState, Increment) =
-    gapFillStep(state, None, geom, spec, cfg, flush = true)
+    gapFillStep(state, None, geom, spec, cfg, flush = true,
+      ConnectedComponents.DriverThreshold)
 
-  private def gapFillStep(state: Option[IncState], newFlagsOpt: Option[DataFrame],
+  /** [[extendGapFill]] (`newFlagsOpt` defined) or [[flushGapFill]], with
+    * the inner [[extendBounded]]'s driver bound as a parameter. */
+  private[marex] def gapFillStep(state: Option[IncState], newFlagsOpt: Option[DataFrame],
       geom: DataFrame, spec: GridSpec, cfg: TrackConfig,
-      flush: Boolean): (IncState, Increment) = {
+      flush: Boolean, driverBound: Long): (IncState, Increment) = {
     require(cfg.tFill > 0, "use extend() directly when tFill == 0")
     val spark = geom.sparkSession
     import spark.implicits._
-    def noInc = Increment(
-      Seq.empty[(Timestamp, Int, Int, Long)].toDF("time", "y", "x", "event_id"),
-      Seq.empty[(Long, Long)].toDF("from_event_id", "to_event_id"),
-      emptyMerges(spark))
 
     val held = state.flatMap(_.held)
     val ctx = held.map(_.filter(col("finalized"))).getOrElse(
       Seq.empty[(Timestamp, Int, Int, Boolean)].toDF("time", "y", "x", "finalized"))
     val pending = held.map(_.filter(!col("finalized"))).getOrElse(ctx.limit(0))
-    val ctxTimes = ctx.select("time").distinct()
-      .orderBy("time").collect().map(_.getTimestamp(0)).toSeq
-    val pendTimes = pending.select("time").distinct()
-      .orderBy("time").collect().map(_.getTimestamp(0)).toSeq
+    // both held axes from ONE collect of held's (time, finalized) rows
+    val heldTimes = held.map(_.select("time", "finalized").distinct().collect()
+      .map(r => (r.getTimestamp(0), r.getBoolean(1))).sortWith(_._1 before _._1).toSeq)
+      .getOrElse(Seq.empty)
+    val ctxTimes = heldTimes.filter(_._2).map(_._1)
+    val pendTimes = heldTimes.filterNot(_._2).map(_._1)
     val newFlags = newFlagsOpt.map(_.select("time", "y", "x"))
     val newTimes = newFlags.map(_.select("time").distinct()
       .orderBy("time").collect().map(_.getTimestamp(0)).toSeq).getOrElse(Seq.empty)
@@ -202,7 +235,7 @@ object IncrementalTracker {
     // context slices prepend only as gap-fill support, never re-emitted
     val procTimes = pendTimes ++ newTimes
     if (procTimes.isEmpty) return (state.getOrElse(
-      IncState(emptySeamFor(cfg, spark), 0L, 1L, 1L)), noInc)
+      IncState(emptySeamFor(cfg, spark), 0L, 1L, 1L)), noIncrement(spark))
     val nFinal = if (flush) procTimes.length else procTimes.length - cfg.tFill
     val baseState = state.map(_.copy(held = None))
 
@@ -223,13 +256,12 @@ object IncrementalTracker {
     if (nFinal <= 0) {
       // nothing finalizes yet — everything new joins the pending tail
       val st = baseState.getOrElse(IncState(emptySeamFor(cfg, spark), 0L, 1L, 1L))
-      return (st.copy(held = Some(heldFrom(ctxTimes, procTimes))), noInc)
+      return (st.copy(held = Some(heldFrom(ctxTimes, procTimes))), noIncrement(spark))
     }
 
     // batch-exact preprocessing over context ∪ pending ∪ new
     val axis = Some((ctxTimes ++ procTimes).toDF("time"))
-    val land = geom.filter(!col("valid")).select("y", "x")
-    val landOpt = if (land.isEmpty) None else Some(land)
+    val landOpt = landMask(geom)
     val f1 = Raster.fillHoles(rawAll, cfg.rFill, spec, landOpt)
     val f3 = Raster.fillHoles(
       Track.fillTimeGaps(f1, cfg.tFill, axis), cfg.rFill / 2, spec, landOpt)
@@ -243,8 +275,8 @@ object IncrementalTracker {
     // occupy its timestep (it separates its neighbors, exactly as in the
     // batch tracker).
     val innerCfg = cfg.copy(rFill = 0, tFill = 0)
-    val (st2, inc) = extend(baseState, block, geom, spec, innerCfg,
-      rawAxis = Some(finalTimes))
+    val (st2, inc) = extendBounded(baseState, block, geom, spec, innerCfg,
+      Some(finalTimes), driverBound)
     (st2.copy(held = Some(heldFrom(ctxTimes ++ finalTimes, procTimes.drop(nFinal)))),
       inc)
   }
@@ -257,56 +289,119 @@ object IncrementalTracker {
     else Seq.empty[(Int, Int, Long)].toDF("y", "x", "event_id")
   }
 
+  /** Raster cells (slices × ny·nx) above which a block that fits the
+    * driver bound still takes the distributed path. The driver path runs
+    * the dense per-slice kernels one slice after another on one core and
+    * keeps one Int label raster per slice of the block, so this caps its
+    * serial raster work and that memory (4 bytes a cell, 8 MB). 2^21 lets
+    * one or two 0.25° global days (720×1440 = 1,036,800 cells each) through;
+    * a longer block of such a grid goes back to Spark, whose tasks run the
+    * slices in parallel. */
+  private[marex] val DriverRasterCells: Long = 1L << 21
+
   private def extendNonMerging(state: Option[IncState], newFlags: DataFrame,
       geom: DataFrame, spec: GridSpec, cfg: TrackConfig,
-      rawAxis: Option[Seq[Timestamp]]): (IncState, Increment) = {
+      rawAxis: Option[Seq[Timestamp]], driverBound: Long): (IncState, Increment) = {
     requireShared(cfg)
     val spark = newFlags.sparkSession
     import spark.implicits._
-    val emptyRemap = Seq.empty[(Long, Long)].toDF("from_event_id", "to_event_id")
-    val emptyIds = Seq.empty[(Timestamp, Int, Int, Long)]
-      .toDF("time", "y", "x", "event_id")
     def emptySeam = Seq.empty[(Int, Int, Long)].toDF("y", "x", "event_id")
-    def noInc = Increment(emptyIds, emptyRemap, emptyMerges(spark))
 
+    // ONE bounded action both measures the block and, when it fits the
+    // bound, fetches it whole as (epoch µs, y, x)
+    val whole = if (driverBound <= 0) None
+      else Some(collectBounded(newFlags, driverBound)).filter(_.length <= driverBound)
     // the raw axis: every input slice occupies a timestep, processed or
     // not. A PRE-preprocessed block (extendGapFill) must pass the axis
     // explicitly — slices its morphology fully erased carry no rows here
     // but still separate their neighbors.
-    val rawTimes = rawAxis.map(_.toArray).getOrElse(
-      newFlags.select("time").distinct()
-        .orderBy("time").collect().map(_.getTimestamp(0)))
+    val rawTimes = rawAxis.map(_.toArray).getOrElse(whole match {
+      case Some(cells) => cells.map(_._1).distinct.sorted.map(DateTimeUtils.toJavaTimestamp)
+      case None => newFlags.select("time").distinct()
+        .orderBy("time").collect().map(_.getTimestamp(0))
+    })
     if (rawTimes.isEmpty)
-      return (state.getOrElse(IncState(emptySeam, 0L, 1L)), noInc)
-    val axis = Some(rawTimes.toSeq.toDF("time"))
+      return (state.getOrElse(IncState(emptySeam, 0L, 1L)), noIncrement(spark))
+    val offset = state.map(_.nextEventId - 1).getOrElse(0L)
 
-    val cells = preprocessBlock(newFlags, geom, spec, cfg)
-    if (cells.isEmpty) {
-      // every slice erased: the block still advances the axis past the seam
-      val st = state.getOrElse(IncState(emptySeam, 0L, 1L))
-      return (st.copy(gapAfterSeam = st.gapAfterSeam + rawTimes.length), noInc)
+    val labeled = whole
+      .filter(_ => rawTimes.length.toLong * spec.ny * spec.nx <= DriverRasterCells)
+      .map(cells => labelOnDriver(state, cells, rawTimes, offset, geom, spec, cfg))
+      .getOrElse(labelDistributed(state, newFlags, rawTimes, offset, geom, spec, cfg))
+    labeled match {
+      case None =>
+        // every slice erased: the block still advances the axis past the seam
+        val st = state.getOrElse(IncState(emptySeam, 0L, 1L))
+        (st.copy(gapAfterSeam = st.gapAfterSeam + rawTimes.length), noIncrement(spark))
+      case Some(l) =>
+        val next = state.map(_.nextEventId).getOrElse(1L) + l.nIssued
+        (IncState(l.seam, l.trailing, next), Increment(l.blockIds, l.remap, emptyMerges(spark)))
     }
+  }
+
+  /** A non-merging block's labels, the new seam, the number of events it
+    * issued, and the raw slices erased after its last surviving one. */
+  private final case class Labeled(blockIds: DataFrame, remap: DataFrame,
+      seam: DataFrame, nIssued: Long, trailing: Long)
+
+  private def noIncrement(spark: org.apache.spark.sql.SparkSession): Increment = {
+    import spark.implicits._
+    Increment(Seq.empty[(Timestamp, Int, Int, Long)].toDF("time", "y", "x", "event_id"),
+      emptyRemap(spark), emptyMerges(spark))
+  }
+
+  private def emptyRemap(spark: org.apache.spark.sql.SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Long, Long)].toDF("from_event_id", "to_event_id")
+  }
+
+  /** Up to `bound + 1` rows of `flags` as (epoch µs, y, x), in ONE job.
+    * `collect()` on a limit plans `executeTake`, which scans partitions in
+    * growing rounds, one job each (four on a day frame whose rows sit in
+    * the last of 34 partitions); the limit's RDD form runs every
+    * partition's local limit and the global limit in a single job. Above
+    * the bound that job is one extra pass over the block, shuffling each
+    * partition's first `bound + 1` rows to the one task that keeps them. */
+  private def collectBounded(flags: DataFrame, bound: Long): Array[(Long, Int, Int)] =
+    flags.select(col("time").cast("timestamp"), col("y").cast("int"), col("x").cast("int"))
+      .limit((bound + 1).toInt)
+      .queryExecution.toRdd
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
+      .collect()
+
+  /** The distributed non-merging path: preprocessing and the block-local
+    * space-time CCL in Spark, the seam stitch through
+    * [[ConnectedComponents.auto]]. Runs every block above the driver
+    * bound; None when preprocessing erased every slice. */
+  private def labelDistributed(state: Option[IncState], newFlags: DataFrame,
+      rawTimes: Array[Timestamp], offset: Long, geom: DataFrame, spec: GridSpec,
+      cfg: TrackConfig): Option[Labeled] = {
+    val spark = newFlags.sparkSession
+    import spark.implicits._
+    val cells = preprocessBlock(newFlags, geom, spec, cfg)
+    if (cells.isEmpty) return None
 
     // block-local space-time CCL over the RAW axis (erased interior slices
     // keep separating their neighbors), ids offset into the fresh id
     // range; the stitch reuses preprocessBlock's per-slice gids instead of
     // re-running the raster CCL
-    val offset = state.map(_.nextEventId - 1).getOrElse(0L)
-    val local = Track.labelSpaceTimeFromGids(cells, spec, timeAxis = axis)
+    val local = Track.labelSpaceTimeFromGids(cells, spec,
+        timeAxis = Some(rawTimes.toSeq.toDF("time")))
       .withColumn("event_id", col("event_id") + offset)
       .localCheckpoint()
-    val nIssued = local.agg(max("event_id")).head().getLong(0) - offset
-    val tFirst = local.agg(min("time")).head().getTimestamp(0)
-    val tLast = local.agg(max("time")).head().getTimestamp(0)
+    val probe = local.agg(max("event_id"), min("time"), max("time")).head()
+    val nIssued = probe.getLong(0) - offset
+    val tFirst = probe.getTimestamp(1)
+    val tLast = probe.getTimestamp(2)
     // raw slices erased at the block edges — they count toward seam gaps
     val gapBefore = rawTimes.indexWhere(_.equals(tFirst))
     val trailing = rawTimes.length - 1 - rawTimes.indexWhere(_.equals(tLast))
 
     val (blockIds, remap) = state match {
-      case None => (local, emptyRemap)
+      case None => (local, emptyRemap(spark))
       // stitch only when the seam slice and the first surviving new slice
       // are ADJACENT on the combined raw axis (no erased slice between)
-      case Some(st) if st.gapAfterSeam + gapBefore > 0 => (local, emptyRemap)
+      case Some(st) if st.gapAfterSeam + gapBefore > 0 => (local, emptyRemap(spark))
       case Some(st) =>
         // seam edges: old last-slice cells vs the first new slice, fanned
         // with the shared 26-connectivity time face (diagonals, x-wrap)
@@ -317,7 +412,7 @@ object IncrementalTracker {
           .join(fanned, Seq("y", "x"))
           .select(col("old_id").as("src"), col("event_id").as("dst"))
           .distinct()
-        if (edges.isEmpty) (local, emptyRemap)
+        if (edges.isEmpty) (local, emptyRemap(spark))
         else {
           // components over the bipartite seam graph (old ∪ provisional ids
           // are disjoint ranges); canonical = the smallest OLD id present —
@@ -343,9 +438,152 @@ object IncrementalTracker {
 
     val seam = blockIds.filter(col("time") === lit(tLast))
       .select("y", "x", "event_id").localCheckpoint()
-    val next = state.map(_.nextEventId).getOrElse(1L) + nIssued
-    (IncState(seam, trailing.toLong, next),
-      Increment(blockIds, remap, emptyMerges(spark)))
+    Some(Labeled(blockIds, remap, seam, nIssued, trailing.toLong))
+  }
+
+  /** The driver non-merging path, for a block already collected whole: the
+    * distributed path's steps over arrays, with its id rules. Per slice,
+    * [[Raster.fillHolesSlice]] and [[Raster.labelSlice]] (the kernels the
+    * Spark tasks run), gids from the cumulative per-slice offset
+    * ([[Track.globalIds]]) and the absolute area filter
+    * ([[Track.filterSmallObjects]]); then the block-local 26-connected
+    * space-time CCL over the raw axis with events numbered by (first time,
+    * min gid) ([[Track.labelSpaceTimeFromGids]]), and the seam stitch
+    * through [[ConnectedComponents.unionFindLocal]] with the smallest old
+    * id canonical. The results are local relations, so no checkpoint is
+    * taken; the geometry is the only other collect. */
+  private def labelOnDriver(state: Option[IncState], block: Array[(Long, Int, Int)],
+      rawTimes: Array[Timestamp], offset: Long, geom: DataFrame, spec: GridSpec,
+      cfg: TrackConfig): Option[Labeled] = {
+    spec.requireRaster()
+    val spark = geom.sparkSession
+    import spark.implicits._
+    val ny = spec.ny; val nx = spec.nx; val wrap = spec.periodicX
+
+    // land mask and cell areas from one geometry collect; a cell missing
+    // from the geometry or with a null area adds no area, as in the
+    // distributed area join and sum
+    val threshold = cfg.areaFilterAbsolute
+    val land = new Array[Boolean](ny * nx)
+    val area = new Array[Double](ny * nx)
+    val known = new Array[Boolean](ny * nx)
+    geom.select(Seq(col("y").cast("int"), col("x").cast("int"), col("valid")) ++
+        threshold.map(_ => col("area").cast("double")): _*)
+      .collect().foreach { r =>
+        val i = r.getInt(0) * nx + r.getInt(1)
+        if (!r.isNullAt(2) && !r.getBoolean(2)) land(i) = true
+        if (threshold.isDefined && !r.isNullAt(3)) {
+          area(i) += r.getDouble(3)
+          known(i) = true
+        }
+      }
+
+    // per-slice morphology, labels and area filter; slice times are epoch
+    // ms, as in the Spark kernels
+    val offs = Raster.diskOffsets(math.max(cfg.rFill, 0))
+    val bySlice = block.groupBy(c => Math.floorDiv(c._1, 1000L)).toArray.sortBy(_._1)
+    var gidBase = 0L
+    val slices = bySlice.map { case (ms, cells) =>
+      val grid = new Array[Boolean](ny * nx)
+      cells.foreach { case (_, y, x) => grid(y * nx + x) = true }
+      val label = Raster.labelSlice(
+        Raster.fillHolesSlice(grid, ny, nx, offs, wrap, land), ny, nx, wrap)
+      val nLabels = label.max
+      threshold.foreach { thr =>
+        val sum = new Array[Double](nLabels + 1)
+        val seen = new Array[Boolean](nLabels + 1)
+        label.indices.foreach { i =>
+          if (label(i) > 0 && known(i)) { sum(label(i)) += area(i); seen(label(i)) = true }
+        }
+        label.indices.foreach { i =>
+          if (label(i) > 0 && !(seen(label(i)) && sum(label(i)) >= thr)) label(i) = 0
+        }
+      }
+      val slice = (new Timestamp(ms), label, gidBase)
+      gidBase += nLabels
+      slice
+    }.filter(_._2.exists(_ > 0))
+    if (slices.isEmpty) return None
+
+    // the 3×3 fan of Track.fanNeighborhood: y stops at the edges, x wraps
+    // when periodic
+    def neighbourhood(i: Int)(f: Int => Unit): Unit = {
+      val y = i / nx; val x = i % nx
+      var dy = -1
+      while (dy <= 1) {
+        val yy = y + dy
+        var dx = -1
+        while (dx <= 1) {
+          val xx = if (wrap) Math.floorMod(x + dx, nx) else x + dx
+          if (yy >= 0 && yy < ny && xx >= 0 && xx < nx) f(yy * nx + xx)
+          dx += 1
+        }
+        dy += 1
+      }
+    }
+
+    // space-time edges between slices adjacent on the raw axis
+    val axisIndex = rawTimes.zipWithIndex.toMap
+    val byIndex = slices.flatMap(s => axisIndex.get(s._1).map(_ -> s)).toMap
+    val edges = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+    byIndex.foreach { case (k, (_, label, base)) =>
+      byIndex.get(k + 1).foreach { case (_, next, nextBase) =>
+        label.indices.foreach { i =>
+          if (label(i) > 0)
+            neighbourhood(i)(j => if (next(j) > 0) edges += ((base + label(i), nextBase + next(j))))
+        }
+      }
+    }
+    val comp = ConnectedComponents.unionFindLocal(edges.iterator)
+    def root(gid: Long): Long = comp.getOrElse(gid, gid)
+    // events numbered by (first time, min gid) from offset + 1; a
+    // component's root IS its min gid
+    val firstSlice = scala.collection.mutable.LinkedHashMap[Long, Int]()
+    slices.zipWithIndex.foreach { case ((_, label, base), p) =>
+      label.foreach(l => if (l > 0) firstSlice.getOrElseUpdate(root(base + l), p))
+    }
+    val eventOf = firstSlice.toSeq.sortBy { case (r, p) => (p, r) }.zipWithIndex
+      .map { case ((r, _), k) => r -> (offset + k + 1) }.toMap
+    def eventAt(slice: (Timestamp, Array[Int], Long), i: Int): Long = {
+      val l = slice._2(i)
+      if (l > 0) eventOf(root(slice._3 + l)) else 0L
+    }
+    val tFirst = slices.head._1
+    val tLast = slices.last._1
+    // raw slices erased at the block edges — they count toward seam gaps
+    val gapBefore = rawTimes.indexWhere(_.equals(tFirst))
+    val trailing = rawTimes.length - 1 - rawTimes.indexWhere(_.equals(tLast))
+
+    // the seam stitch: old seam cells fanned onto the first new slice when
+    // the two are adjacent on the combined raw axis; every id of a seam
+    // component maps to its smallest OLD id
+    val canonOf: Map[Long, Long] = state match {
+      case Some(st) if st.gapAfterSeam + gapBefore == 0 =>
+        val seamEdges = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+        st.seam.select(col("y").cast("int"), col("x").cast("int"), col("event_id").cast("long"))
+          .collect().foreach { r =>
+            neighbourhood(r.getInt(0) * nx + r.getInt(1)) { j =>
+              val e = eventAt(slices.head, j)
+              if (e > 0) seamEdges += ((r.getLong(2), e))
+            }
+          }
+        val c = ConnectedComponents.unionFindLocal(seamEdges.iterator)
+        val canon = c.toSeq.filter(_._1 <= offset).groupBy(_._2)
+          .map { case (k, nodes) => k -> nodes.map(_._1).min }
+        c.flatMap { case (node, k) => canon.get(k).filter(_ != node).map(node -> _) }
+      case _ => Map.empty
+    }
+
+    val rows = slices.flatMap { slice =>
+      slice._2.indices.filter(slice._2(_) > 0).map { i =>
+        val e = eventAt(slice, i)
+        (slice._1, i / nx, i % nx, canonOf.getOrElse(e, e))
+      }
+    }
+    val seam = rows.filter(_._1 == tLast).map(r => (r._2, r._3, r._4))
+    Some(Labeled(rows.toSeq.toDF("time", "y", "x", "event_id"),
+      canonOf.filter(_._1 <= offset).toSeq.toDF("from_event_id", "to_event_id"),
+      seam.toSeq.toDF("y", "x", "event_id"), eventOf.size.toLong, trailing.toLong))
   }
 
   private def emptyMerges(spark: org.apache.spark.sql.SparkSession): DataFrame = {
@@ -373,30 +611,27 @@ object IncrementalTracker {
         "algorithm and cannot run on an append")
     val spark = newFlags.sparkSession
     import spark.implicits._
-    val emptyRemap = Seq.empty[(Long, Long)].toDF("from_event_id", "to_event_id")
-    val emptyIds = Seq.empty[(Timestamp, Int, Int, Long)]
-      .toDF("time", "y", "x", "event_id")
     def emptySeam = Seq.empty[(Int, Int, Long, Long)].toDF("y", "x", "gid", "event_id")
     def freshState = IncState(emptySeam, 0L, 1L, 1L)
-    def noInc = Increment(emptyIds, emptyRemap, emptyMerges(spark))
 
     val rawTimes = rawAxis.map(_.toArray).getOrElse(
       newFlags.select("time").distinct()
         .orderBy("time").collect().map(_.getTimestamp(0)))
-    if (rawTimes.isEmpty) return (state.getOrElse(freshState), noInc)
+    if (rawTimes.isEmpty) return (state.getOrElse(freshState), noIncrement(spark))
 
     val cells = preprocessBlock(newFlags, geom, spec, cfg)
     if (cells.isEmpty) {
       val st = state.getOrElse(freshState)
-      return (st.copy(gapAfterSeam = st.gapAfterSeam + rawTimes.length), noInc)
+      return (st.copy(gapAfterSeam = st.gapAfterSeam + rawTimes.length), noIncrement(spark))
     }
 
     // block-local per-slice objects, offset into the fresh gid range
     val gidOffset = state.map(_.nextGid - 1).getOrElse(0L)
     val local = cells.withColumn("gid", col("gid") + gidOffset).localCheckpoint()
-    val nGids = local.agg(max("gid")).head().getLong(0) - gidOffset
-    val tFirst = local.agg(min("time")).head().getTimestamp(0)
-    val tLast = local.agg(max("time")).head().getTimestamp(0)
+    val probe = local.agg(max("gid"), min("time"), max("time")).head()
+    val nGids = probe.getLong(0) - gidOffset
+    val tFirst = probe.getTimestamp(1)
+    val tLast = probe.getTimestamp(2)
     val gapBefore = rawTimes.indexWhere(_.equals(tFirst))
     val trailing = rawTimes.length - 1 - rawTimes.indexWhere(_.equals(tLast))
 

@@ -91,6 +91,24 @@ object Raster {
     out
   }
 
+  /** One slice of [[fillHoles]]: closing (dilate, erode) then opening
+    * (erode, dilate) with the disk `offs` on the raw raster — land takes
+    * part as False, like the reference's gridded morphology — then the land
+    * mask (`land`, null for none) on the output only. `diskOffsets(0)` is
+    * the identity morphology, so the mask still applies at rFill = 0
+    * (track.py:1668 runs after the R_fill==0 short-circuit). Spark tasks
+    * and the incremental tracker's driver path both run this function. */
+  private[marex] def fillHolesSlice(grid: Array[Boolean], ny: Int, nx: Int,
+      offs: Array[(Int, Int)], wrap: Boolean, land: Array[Boolean]): Array[Boolean] = {
+    val closed = erode(dilate(grid, ny, nx, offs, wrap), ny, nx, offs, wrap)
+    val opened = dilate(erode(closed, ny, nx, offs, wrap), ny, nx, offs, wrap)
+    if (land != null) {
+      var i = 0
+      while (i < opened.length) { if (land(i)) opened(i) = false; i += 1 }
+    }
+    opened
+  }
+
   /** T5: `fill_holes` — morphological closing then opening with a disk of
     * radius `rFill`, masked back to ocean (track.py:1520–1673).
     * @param landMask optional (y, x) rows of *invalid* (land) cells. */
@@ -127,22 +145,82 @@ object Raster {
       .flatMapGroups { (t, it) =>
         val grid = new Array[Boolean](ny * nx)
         it.foreach { case (_, y, x) => grid(y * nx + x) = true }
-        val lm = landB.value
-        // closing: dilate then erode; opening: erode then dilate — on the
-        // raw field (land participates as False, exactly like the
-        // reference's gridded morphology); mask applied to the output only
-        val closed = erode(dilate(grid, ny, nx, offs, wrap), ny, nx, offs, wrap)
-        val opened = dilate(erode(closed, ny, nx, offs, wrap), ny, nx, offs, wrap)
+        val filled = fillHolesSlice(grid, ny, nx, offs, wrap, landB.value)
         val out = scala.collection.mutable.ArrayBuffer[(Long, Int, Int)]()
         var i = 0
-        while (i < opened.length) {
-          if (opened(i) && (lm == null || !lm(i))) out += ((t, i / nx, i % nx))
+        while (i < filled.length) {
+          if (filled(i)) out += ((t, i / nx, i % nx))
           i += 1
         }
         out.iterator
       }
       .map(c => (new Timestamp(c._1), c._2, c._3))
       .toDF("time", "y", "x")
+  }
+
+  /** One slice of [[labelPerSlice]]: union-find over the flagged cells of
+    * `grid`, 8-connectivity, x wraps when `periodicX`, y never does.
+    * Returns each cell's label, 0 for an unflagged cell; labels are dense
+    * 1..k ordered by each component's smallest cell index (deterministic).
+    * Spark tasks and the incremental tracker's driver path both run this
+    * function. */
+  private[marex] def labelSlice(grid: Array[Boolean], ny: Int, nx: Int,
+      periodicX: Boolean): Array[Int] = {
+    val parent = new Array[Int](ny * nx)
+    java.util.Arrays.fill(parent, -1)
+    def find(a: Int): Int = {
+      var r = a
+      while (parent(r) != r) r = parent(r)
+      var c = a
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    // the smaller root wins, so a component's root is its smallest cell
+    def union(a: Int, b: Int): Unit = {
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+    var i = 0
+    while (i < grid.length) { if (grid(i)) parent(i) = i; i += 1 }
+    i = 0
+    while (i < grid.length) {
+      if (grid(i)) {
+        val y = i / nx; val x = i % nx
+        var dy = -1
+        while (dy <= 1) {
+          var dx = -1
+          while (dx <= 1) {
+            if (dy != 0 || dx != 0) {
+              val yy = y + dy
+              var xx = x + dx
+              if (yy >= 0 && yy < ny) {
+                if (periodicX) xx = ((xx % nx) + nx) % nx
+                if (xx >= 0 && xx < nx) {
+                  val j = yy * nx + xx
+                  if (grid(j)) union(i, j)
+                }
+              }
+            }
+            dx += 1
+          }
+          dy += 1
+        }
+      }
+      i += 1
+    }
+    // a scan in cell order meets every root before the rest of its
+    // component, so labels come out dense in root order
+    val label = new Array[Int](ny * nx)
+    var k = 0
+    i = 0
+    while (i < grid.length) {
+      if (grid(i)) {
+        val r = find(i)
+        if (r == i) { k += 1; label(i) = k } else label(i) = label(r)
+      }
+      i += 1
+    }
+    label
   }
 
   /** T8/T9 (per-slice): connected-component labeling, 8-connectivity,
@@ -159,58 +237,11 @@ object Raster {
       .flatMapGroups { (t, it) =>
         val grid = new Array[Boolean](ny * nx)
         it.foreach { case (_, y, x) => grid(y * nx + x) = true }
-        // union-find over flagged cells
-        val parent = new Array[Int](ny * nx)
-        java.util.Arrays.fill(parent, -1)
-        def find(a: Int): Int = {
-          var r = a
-          while (parent(r) != r) r = parent(r)
-          var c = a
-          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        def union(a: Int, b: Int): Unit = {
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-        var i = 0
-        while (i < grid.length) { if (grid(i)) parent(i) = i; i += 1 }
-        i = 0
-        while (i < grid.length) {
-          if (grid(i)) {
-            val y = i / nx; val x = i % nx
-            var dy = -1
-            while (dy <= 1) {
-              var dx = -1
-              while (dx <= 1) {
-                if (dy != 0 || dx != 0) {
-                  val yy = y + dy
-                  var xx = x + dx
-                  if (yy >= 0 && yy < ny) {
-                    if (per) xx = ((xx % nx) + nx) % nx
-                    if (xx >= 0 && xx < nx) {
-                      val j = yy * nx + xx
-                      if (grid(j)) union(i, j)
-                    }
-                  }
-                }
-                dx += 1
-              }
-              dy += 1
-            }
-          }
-          i += 1
-        }
-        // dense labels 1..k ordered by root cell index (deterministic)
-        val roots = scala.collection.mutable.TreeMap[Int, Int]()
-        i = 0
-        while (i < grid.length) { if (grid(i)) roots.getOrElseUpdate(find(i), 0); i += 1 }
-        var lbl = 0
-        roots.keys.toSeq.foreach { r => lbl += 1; roots(r) = lbl }
+        val label = labelSlice(grid, ny, nx, per)
         val out = scala.collection.mutable.ArrayBuffer[(Long, Int, Int, Int)]()
-        i = 0
-        while (i < grid.length) {
-          if (grid(i)) out += ((t, i / nx, i % nx, roots(find(i))))
+        var i = 0
+        while (i < label.length) {
+          if (label(i) > 0) out += ((t, i / nx, i % nx, label(i)))
           i += 1
         }
         out.iterator

@@ -77,7 +77,9 @@ object ConnectedComponents {
     labels.select(col("node"), col("label").as("component"))
   }
 
-  /** Edge count at or below which [[auto]] solves the graph on the driver. */
+  /** Edge count at or below which [[auto]] solves the graph on the driver
+    * — and the cell count at or below which a non-merging
+    * `IncrementalTracker` append runs on the driver. */
   val DriverThreshold: Long = 2000000L
 
   /** Size-adaptive entry point: up to [[DriverThreshold]] edges the graph is

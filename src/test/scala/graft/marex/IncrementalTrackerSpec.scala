@@ -235,6 +235,113 @@ class IncrementalTrackerSpec extends SparkSpec {
     assert(inc.select("event_id").distinct().count() == 2)
   }
 
+  // ── the driver path of a non-merging append ─────────────────────────────
+
+  test("driver and distributed non-merging appends are identical") {
+    type Step = (Option[IncrementalTracker.IncState], Long) =>
+      (IncrementalTracker.IncState, IncrementalTracker.Increment)
+    def sameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+      val g = got.collect().map(_.toString).sorted.toSeq
+      val w = want.collect().map(_.toString).sorted.toSeq
+      if (g != w) fail(s"$what: driver-only rows ${g.diff(w).take(3)}, " +
+        s"distributed-only rows ${w.diff(g).take(3)}")
+    }
+    /** Runs the same steps from the distributed path (bound 0) and from
+      * the driver path (the default bound), each from its own state, and
+      * compares every increment and state. Returns the driver path's
+      * block cell counts. */
+    def bothPaths(what: String, steps: Seq[Step]): Seq[Long] = {
+      var dist: Option[IncrementalTracker.IncState] = None
+      var drv: Option[IncrementalTracker.IncState] = None
+      steps.zipWithIndex.map { case (step, k) =>
+        val (dSt, dInc) = step(dist, 0L)
+        val (lSt, lInc) = step(drv, graft.operators.ConnectedComponents.DriverThreshold)
+        val at = s"$what, step $k"
+        assert(lInc.blockIds.schema == dInc.blockIds.schema, s"$at: blockIds schema")
+        sameRows(lInc.blockIds, dInc.blockIds, s"$at: blockIds")
+        sameRows(lInc.remap, dInc.remap, s"$at: remap")
+        sameRows(lSt.seam, dSt.seam, s"$at: seam")
+        assert(lSt.gapAfterSeam == dSt.gapAfterSeam, s"$at: gapAfterSeam")
+        assert(lSt.nextEventId == dSt.nextEventId, s"$at: nextEventId")
+        dist = Some(dSt); drv = Some(lSt)
+        lInc.blockIds.count()
+      }
+    }
+    def appends(blocks: Seq[DataFrame], tcfg: TrackConfig): Seq[Step] =
+      blocks.map(b => (st: Option[IncrementalTracker.IncState], bound: Long) =>
+        IncrementalTracker.extendBounded(st, b, geom, spec, tcfg, None, bound))
+    def square(t: Int, y0: Int, x0: Int, side: Int): Seq[(Timestamp, Int, Int)] =
+      for (dy <- 0 until side; dx <- 0 until side) yield (ts(t), y0 + dy, x0 + dx)
+
+    val storms = SyntheticData.stormFlags(spark, nDays = 30, ny = ny, nx = nx,
+      nStorms = 40, seed = 11L).cache()
+    def cut(field: DataFrame, bounds: Seq[(Int, Int)]): Seq[DataFrame] =
+      bounds.map { case (a, b) =>
+        field.filter(col("time") >= lit(ts(a)) && col("time") < lit(ts(b)))
+      }
+    val stormBlocks = cut(storms, Seq(0 -> 10, 10 -> 20, 20 -> 30))
+    val unfiltered = bothPaths("storm field", appends(stormBlocks, cfg))
+
+    val cfg0 = cfg.copy(rFill = 0)
+    val early = (0 to 2).flatMap(t => square(t, 10, 5, 2) ++ square(t, 10, 20, 2))
+    val bridge = (5 to 22).map(x => (ts(3), 10, x))
+    bothPaths("bridging remap",
+      appends(Seq(early.toDF("time", "y", "x"), bridge.toDF("time", "y", "x")), cfg0))
+
+    val empty = Seq.empty[(Timestamp, Int, Int)].toDF("time", "y", "x")
+    bothPaths("empty and gapped", appends(Seq(
+      (0 to 1).flatMap(t => Seq((ts(t), 5, 5), (ts(t), 5, 6))).toDF("time", "y", "x"),
+      empty, Seq((ts(5), 5, 5), (ts(5), 5, 6)).toDF("time", "y", "x")), cfg0))
+
+    val lone = Seq((ts(1), 20, 20))
+    Seq(Seq(square(0, 8, 8, 3) ++ lone ++ square(2, 8, 8, 3)),
+        Seq(square(0, 8, 8, 3) ++ lone, square(2, 8, 8, 3)),
+        Seq(square(0, 8, 8, 3), lone ++ square(2, 8, 8, 3))).foreach { blocks =>
+      bothPaths("erased slice", appends(blocks.map(_.toDF("time", "y", "x")), cfg))
+    }
+
+    // an equatorial cell here is ~4.6e5 km²: the filter keeps the large
+    // storm objects and drops the small ones
+    val areaCfg = cfg.copy(areaFilterQuartile = Double.NaN, areaFilterAbsolute = Some(4.0e6))
+    val kept = bothPaths("area filter", appends(stormBlocks.take(2), areaCfg)).sum
+    val all = unfiltered.take(2).sum
+    assert(kept > 0 && kept < all, s"the filter must keep some cells and drop some: $kept of $all")
+
+    // tFill = 2: the inner extend runs with rFill = 0 and an explicit raw axis
+    val gapCfg = cfg.copy(tFill = 2)
+    val gapSteps: Seq[Step] = cut(storms, Seq(0 -> 5, 5 -> 6, 6 -> 12)).map(b =>
+        (st: Option[IncrementalTracker.IncState], bound: Long) =>
+          IncrementalTracker.gapFillStep(st, Some(b), geom, spec, gapCfg, flush = false, bound)) :+
+      ((st: Option[IncrementalTracker.IncState], bound: Long) =>
+        IncrementalTracker.gapFillStep(st, None, geom, spec, gapCfg, flush = true, bound))
+    bothPaths("tFill=2", gapSteps)
+  }
+
+  test("a one-day non-merging append submits at most 4 Spark jobs") {
+    val field = SyntheticData.stormFlags(spark, nDays = 12, ny = ny, nx = nx,
+      nStorms = 40, seed = 11L).localCheckpoint()
+    def day(d: Int) = field.filter(col("time") === lit(ts(d))).localCheckpoint()
+    val tcfg = cfg.copy(rFill = 2, areaFilterQuartile = Double.NaN,
+      areaFilterAbsolute = Some(100.0))
+    val (st, _) = IncrementalTracker.extend(None, day(9), geom, spec, tcfg)
+    val today = day(10)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val (_, inc) = IncrementalTracker.extend(Some(st), today, geom, spec, tcfg)
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      info(s"a one-day append submitted ${jobs.get()} jobs")
+      assert(jobs.get() <= 4, s"a one-day append submitted ${jobs.get()} jobs")
+      assert(!inc.blockIds.isEmpty, "sanity: the day has storm cells")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("merging mode: tFill=2 appends equal the one-shot batch tracker") {
     val tcfg = cfg.copy(tFill = 2, allowMerging = true)
     val flags = SyntheticData.stormFlags(spark, nDays = 24, ny = ny, nx = nx,
