@@ -55,15 +55,6 @@ object Detect {
         Map("first_bad_rows" -> bad.toString))
   }
 
-  /** Ocean/land mask from finiteness of the first timestep
-    * (detect.py:1847, 2232). */
-  def maskFromFirstTimestep(field: DataFrame): DataFrame = {
-    val t0 = field.agg(min("time")).head().getTimestamp(0)
-    field.filter(col("time") === lit(t0))
-      .select(col("y"), col("x"),
-        (!isnan(col("value")) && col("value").isNotNull).as("valid"))
-  }
-
   // ─── anomaly methods ──────────────────────────────────────────────────────
 
   /** D10: fixed-baseline anomaly — day-of-year climatology over all years

@@ -128,22 +128,9 @@ object IncrementalTracker {
     * (time, y, x, gid). */
   private def preprocessBlock(flags: DataFrame, geom: DataFrame, spec: GridSpec,
       cfg: TrackConfig): DataFrame = {
-    val filled = Raster.fillHoles(flags, cfg.rFill, spec, landMask(geom))
+    val filled = Raster.fillHoles(flags, cfg.rFill, spec, Raster.landMask(geom))
     val gids = Track.globalIds(Raster.labelPerSlice(filled.localCheckpoint(), spec))
     Track.filterSmallObjects(gids, geom, cfg)
-  }
-
-  /** The land cells of `geom` (`valid` false) as a local relation, None
-    * when there are none: ONE collect serves both the emptiness test and
-    * [[Raster.fillHoles]]'s land raster (a local relation collects without
-    * a job). */
-  private def landMask(geom: DataFrame): Option[DataFrame] = {
-    val spark = geom.sparkSession
-    import spark.implicits._
-    val land = geom.filter(!col("valid"))
-      .select(col("y").cast("int"), col("x").cast("int")).collect()
-      .map(r => (r.getInt(0), r.getInt(1)))
-    if (land.isEmpty) None else Some(land.toSeq.toDF("y", "x"))
   }
 
   /** Extend the track with a block of new slices (all strictly later than
@@ -261,7 +248,7 @@ object IncrementalTracker {
 
     // batch-exact preprocessing over context ∪ pending ∪ new
     val axis = Some((ctxTimes ++ procTimes).toDF("time"))
-    val landOpt = landMask(geom)
+    val landOpt = Raster.landMask(geom)
     val f1 = Raster.fillHoles(rawAll, cfg.rFill, spec, landOpt)
     val f3 = Raster.fillHoles(
       Track.fillTimeGaps(f1, cfg.tFill, axis), cfg.rFill / 2, spec, landOpt)

@@ -109,6 +109,20 @@ object Raster {
     opened
   }
 
+  /** The land cells of `geom` (`valid` false) as a local relation, None
+    * when there are none — the `landMask` argument of [[fillHoles]] for the
+    * batch and incremental trackers: ONE collect serves the emptiness test
+    * and every fillHoles pass's land raster (a local relation collects
+    * without a job). */
+  private[marex] def landMask(geom: DataFrame): Option[DataFrame] = {
+    val spark = geom.sparkSession
+    import spark.implicits._
+    val land = geom.filter(!col("valid"))
+      .select(col("y").cast("int"), col("x").cast("int")).collect()
+      .map(r => (r.getInt(0), r.getInt(1)))
+    if (land.isEmpty) None else Some(land.toSeq.toDF("y", "x"))
+  }
+
   /** T5: `fill_holes` — morphological closing then opening with a disk of
     * radius `rFill`, masked back to ocean (track.py:1520–1673).
     * @param landMask optional (y, x) rows of *invalid* (land) cells. */

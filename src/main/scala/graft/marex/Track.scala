@@ -45,10 +45,6 @@ object Track {
     lazy val stats: Map[String, Long] = statsFn()
   }
 
-  /** T22: regional-mode preset — no periodic longitude (track.py:5471–5558). */
-  def regionalSpec(ny: Int, nx: Int): GridSpec =
-    GridSpec(ny = ny, nx = nx, periodicX = false)
-
   /** T21: run metadata persisted as JSON next to outputs — the Spark
     * equivalent of the reference's dataset attrs (track.py:1451–1484). */
   def writeRunMetadata(res: TrackResult, cfg: TrackConfig, path: String): Unit = {
@@ -65,11 +61,6 @@ object Track {
           "total_merges": ${stats("total_merges")}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(path), json.getBytes)
   }
-
-  /** T4: total flagged area per timestep (track.py:1499–1518). */
-  def computeArea(flags: DataFrame, geom: DataFrame): DataFrame =
-    flags.join(geom.select("y", "x", "area"), Seq("y", "x"))
-      .groupBy("time").agg(sum("area").as("total_area"))
 
   /** Dense timestep index (rank over distinct times). The reference pairs
     * consecutive timesteps by INDEX into the time axis (track.py:2474), not
@@ -483,7 +474,7 @@ object Track {
     * 26-connectivity: dy, dx ∈ {−1, 0, 1} incl. the center), wrapping x on
     * periodic grids and dropping out-of-bounds cells. `keep` columns pass
     * through unchanged. THE single definition of the cross-time spatial
-    * connectivity — shared by [[labelSpaceTime]] and the incremental
+    * connectivity — shared by [[labelSpaceTimeFromGids]] and the incremental
     * tracker's seam stitch so the two can't drift apart. */
   private[marex] def fanNeighborhood(df: DataFrame, spec: GridSpec,
       keep: Seq[String]): DataFrame = {
@@ -516,22 +507,13 @@ object Track {
     * id): the reference's scipy raster-scan numbering differs label-for-
     * label, but component count and per-event cell sets agree exactly.
     *
+    * Input is an ALREADY per-slice-labeled field `(time, y, x, gid)`,
+    * gids slice-unique: the batch track() path labels every slice during
+    * preprocessing, and area filtering only drops whole objects, never
+    * splits a component, so the preprocessing gids are exactly the
+    * per-slice labels this stitch needs.
+    *
     * @return (time, y, x, event_id) */
-  def labelSpaceTime(flags: DataFrame, spec: GridSpec,
-      timeAxis: Option[DataFrame] = None): DataFrame =
-    labelSpaceTimeFromGids(
-      // the labeled field feeds the edge build, the component mapping, the
-      // event ordering AND the final join — without truncation the
-      // per-slice labeling kernel re-executes for each of them
-      globalIds(Raster.labelPerSlice(flags, spec)).localCheckpoint(),
-      spec, timeAxis)
-
-  /** [[labelSpaceTime]] over an ALREADY per-slice-labeled field
-    * `(time, y, x, gid)` — gids slice-unique. The batch track() path
-    * labels every slice during preprocessing; re-labeling here would be a
-    * second full raster pass over the field (area filtering only drops
-    * whole objects, never splits a component, so the preprocessing gids
-    * are exactly the per-slice labels this stitch needs). */
   def labelSpaceTimeFromGids(gids: DataFrame, spec: GridSpec,
       timeAxis: Option[DataFrame] = None): DataFrame = {
     val idx = timeIndex(gids, timeAxis)
@@ -611,13 +593,6 @@ object Track {
     mapping.join(broadcast(eventIds), "root").select("gid", "event_id")
   }
 
-  /** T16: stitch objects into events by applying [[eventMapping]] to the
-    * resolved id field. */
-  def stitchEvents(ids: DataFrame, overlapThreshold: Double,
-      timeAxis: Option[DataFrame] = None): DataFrame =
-    ids.join(eventMapping(ids, overlapThreshold, timeAxis), "gid")
-      .select("time", "y", "x", "event_id")
-
   /** T17 genealogy detail: the reference's per-(time, ID, sibling_ID)
     * `merge_ledger` (track.py:3026–3106) in long form. For each merge event,
     * every parent's FINAL event id is listed with the final event ids of ALL
@@ -679,8 +654,7 @@ object Track {
           "n_objects_filtered" -> field("n_objects_filtered"))
         (f, () => loaded)
       } else {
-        val land = geom.filter(!col("valid")).select("y", "x")
-        val landOpt = if (land.isEmpty) None else Some(land)
+        val landOpt = Raster.landMask(geom)
         val f1 = Raster.fillHoles(flags, cfg.rFill, spec, landOpt)
         // fill_time_gaps ends with a second fill_holes(R_fill/2) pass in the
         // reference (track.py:1723–1726) — it runs ONLY when T_fill > 0

@@ -794,11 +794,11 @@ object MarexQueries extends QueryRegistry {
         import graft.sources.ZarrGroup
         // the group-level layer the reference actually uses (xr.open_zarr /
         // ds.to_zarr): TWO data variables written as one consolidated v2
-        // group with dimension names + coordinate axes, read back through
-        // the wide no-join dataset reader. The oracle recomputes both
-        // variables from events, so a defect in the group writer, the
-        // consolidated-metadata parse, the wide chunk-manifest read, or the
-        // coordinate attach mismatches.
+        // group with dimension names + coordinate axes, read back whole
+        // through the group scan (`format("zarr")` on the group dir). The
+        // oracle recomputes both variables from events, so a defect in the
+        // group writer, the consolidated-metadata parse, the wide
+        // chunk-manifest read, or the coordinate attach mismatches.
         val cells = Tables.load(s, d, "events")
           .groupBy(
             datediff(to_date(col("ts")), lit("2024-01-01")).cast("int").as("time_idx"),
@@ -815,7 +815,7 @@ object MarexQueries extends QueryRegistry {
           coords = Map("y" -> Array.tabulate(10)(_ * 2.0),
             "x" -> Array.tabulate(15)(_ * 3.0)),
           attrs = Map("source" -> "graft"))
-        ZarrGroup.readDataset(s, dir)
+        s.read.format("zarr").load(dir)
           .filter(!isnan(col("sst")))
           .groupBy(col("y_idx").cast("long").as("y"))
           .agg(count(lit(1)).as("n_cells"),
@@ -844,8 +844,8 @@ object MarexQueries extends QueryRegistry {
     QueryDef("q78_zarr_sql_group",
       (s, d) => {
         import graft.sources.ZarrGroup
-        // q76's store read back through the DataSourceV2 instead of the
-        // utility API: `spark.read.format("zarr").load(groupDir)` is the
+        // q76's store read back through the same group scan as q76, here
+        // with pushdown: `spark.read.format("zarr").load(groupDir)` is the
         // SQL-facing xr.open_zarr. The filter exercises the per-DIMENSION
         // range pushdown (time_idx AND y_idx ranges prune whole chunk
         // files at planning time) and the projection exercises member-array
@@ -1800,7 +1800,7 @@ object MarexQueries extends QueryRegistry {
     // the from-events recompute. ──────────────────────────────────────────
     QueryDef("q100_zarr_group_append",
       (s, d) => {
-        import graft.sources.ZarrGroup
+        import graft.sources.{ZarrGroup, ZarrSource}
         val cells = Tables.load(s, d, "events")
           .groupBy(
             datediff(to_date(col("ts")), lit("2024-01-01")).cast("int").as("time_idx"),
@@ -1839,17 +1839,18 @@ object MarexQueries extends QueryRegistry {
               .withColumn("time_idx", col("time_idx") - 13),
             Seq("time", "ID"), Seq(8, 5), Seq("acc"))),
           newCoords = Map("time" -> Array.tabulate(18)(20013.0 + _)))
-        val g = ZarrGroup.open(dir, s.sparkContext.hadoopConfiguration)
-        val times = ZarrGroup.readVar(s, dir, g, "time")
-        val sstT = ZarrGroup.readVar(s, dir, g, "sst")
-          .filter(!isnan(col("sst")))
-          .groupBy("time_idx")
+        // the two tuples share no primary grid, so each member reads through
+        // its own array scan; the grown time axis is metadata-sized and
+        // joins as a local relation
+        def member(v: String) = s.read.format("zarr").option("var", v).load(dir)
+          .filter(!isnan(col("value"))).groupBy(col("t_idx").as("time_idx"))
+        val sstT = member("sst")
           .agg(count(lit(1)).as("n_cells"),
-            sum(round(col("sst") * 100.0, 0).cast("long")).as("sum_sst_e2"))
-        val accT = ZarrGroup.readVar(s, dir, g, "acc")
-          .filter(!isnan(col("acc")))
-          .groupBy("time_idx")
-          .agg(sum(col("acc").cast("long")).as("sum_acc"))
+            sum(round(col("value") * 100.0, 0).cast("long")).as("sum_sst_e2"))
+        val accT = member("acc").agg(sum(col("value").cast("long")).as("sum_acc"))
+        val times = s.createDataFrame(
+          ZarrSource.readLocalND(s"$dir/time")._2.toSeq.zipWithIndex
+            .map { case (t, i) => (i, t) }).toDF("time_idx", "time")
         sstT.join(accT, Seq("time_idx"))
           .join(times, Seq("time_idx"))
           .select(col("time").cast("long").as("t_coord"), col("n_cells"),

@@ -142,56 +142,6 @@ object NetCDF4Source {
     (v.dims, out)
   }
 
-  /** Driver-side read of a vlen-sequence variable: ragged per-element
-    * numeric arrays (e.g. per-station sample lists). */
-  def readLocalVlen(spark: SparkSession, path: String,
-      varName: String): (Seq[Long], Array[Array[Double]]) = {
-    val src = source(spark, path)
-    val v = findVar(src, path, varName)
-    val n = v.dims.product.toInt
-    val out = v.layout match {
-      case Compact(data) => decodeVlenSeqs(data, v.dtype, n, src)
-      case Contiguous(addr, size) =>
-        decodeVlenSeqs(src.read(addr, size.toInt), v.dtype, n, src)
-      case Chunked(_, chunkDims, _) =>
-        val acc = new Array[Array[Double]](n)
-        listChunks(src, v).foreach { c =>
-          val vals = decodeVlenSeqs(
-            defilter(src.read(c.addr, c.size), v.filters, c.filterMask),
-            v.dtype, chunkDims.map(_.toLong).product.toInt, src)
-          foreachCell(c.offsets, chunkDims, v.dims) { (flat, ci) => acc(flat) = vals(ci) }
-        }
-        acc
-    }
-    (v.dims, out)
-  }
-
-  /** Driver-side read of a vlen sequence whose BASE is a COMPOUND type —
-    * ragged record lists per element (PyTables VLTable-adjacent shapes):
-    * element i yields its records, each a Seq of member values in
-    * declaration order. */
-  def readLocalVlenCompound(spark: SparkSession, path: String,
-      varName: String): (Seq[Long], Array[Seq[Seq[Any]]]) = {
-    val src = source(spark, path)
-    val v = findVar(src, path, varName)
-    val n = v.dims.product.toInt
-    val out = v.layout match {
-      case Compact(data) => decodeVlenCompoundSeqs(data, v.dtype, n, src)
-      case Contiguous(addr, size) =>
-        decodeVlenCompoundSeqs(src.read(addr, size.toInt), v.dtype, n, src)
-      case Chunked(_, chunkDims, _) =>
-        val acc = new Array[Seq[Seq[Any]]](n)
-        listChunks(src, v).foreach { c =>
-          val vals = decodeVlenCompoundSeqs(
-            defilter(src.read(c.addr, c.size), v.filters, c.filterMask),
-            v.dtype, chunkDims.map(_.toLong).product.toInt, src)
-          foreachCell(c.offsets, chunkDims, v.dims) { (flat, ci) => acc(flat) = vals(ci) }
-        }
-        acc
-    }
-    (v.dims, out)
-  }
-
   /** Distributed read of a 1-D COMPOUND dataset into a DataFrame — the
     * HDF5 record/table shape PyTables and `pandas.to_hdf` store. Numeric
     * members become DOUBLE columns, string members STRING. Metadata is

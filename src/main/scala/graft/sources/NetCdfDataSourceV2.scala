@@ -322,9 +322,6 @@ private[sources] object NetCdfTableV2 {
     out.distinct.sortBy(p => new org.apache.hadoop.fs.Path(p).getName)
   }
 
-  def resolvePaths(properties: java.util.Map[String, String]): Seq[String] =
-    expand(rawInputs(properties))
-
   /** Header metadata + (chunked NC4) the parsed Dataset for a deferred
     * chunk-index walk — shared by the batch scan and the streaming source. */
   def fileMeta(spark: org.apache.spark.sql.SparkSession, path: String,

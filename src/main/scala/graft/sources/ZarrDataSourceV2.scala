@@ -946,14 +946,21 @@ private[sources] class ZarrReaderFactory(meta: ZarrSource.ZarrMeta,
 
 /** Read plan of a group resolved once at table creation: the primary
   * (maximal-rank) dim tuple and its shared chunk grid, the dimension
-  * coordinates, and the variable split. Mirrors [[ZarrGroup.readDataset]]'s
-  * schema exactly: `<dim>_idx INT …, <dim> DOUBLE …, <var> DOUBLE …`. */
+  * coordinates, and the variable split. The schema is xarray's Dataset
+  * flattened: `<dim>_idx INT …` per primary dimension, `<dim> DOUBLE …`
+  * per dimension with a coordinate array, `<var> DOUBLE …` per data
+  * variable (every data variable of the group, by name). Every data
+  * variable's dims must be a subset of the primary tuple, and the primary
+  * variables must share one chunk grid; a group that mixes unrelated dim
+  * tuples (a tracker output) is read member by member with
+  * `.option("var", name)` instead. */
 private[sources] object ZarrGroupTableV2 {
 
   /** Driver-side-materialization bound for coordinate axes and lower-rank
     * variables (cells): partition readers cannot express a join, so these
     * ride the task closure — 16 M doubles = 128 MB, already generous for
-    * "metadata-sized". Bigger masks should use ZarrGroup.readDataset. */
+    * "metadata-sized". A bigger lower-rank member is refused by name: read
+    * it with `.option("var", name)` and join it on its dim indices. */
   val SmallArrayCells: Long = 16L * 1024 * 1024
 
   final case class Layout(dir: String, primaryDims: Seq[String],
@@ -1092,6 +1099,17 @@ private[sources] case class ZGPrimary(k: Int) extends ZGCol // index into decode
 private[sources] case class ZGSecondary(dimPos: Array[Int], strides: Array[Long],
     shape: Array[Int], values: Array[Double]) extends ZGCol
 
+/** Execution shape: the primary chunk GRID is the task manifest — one
+  * input partition per outer chunk index (bundled when small) opens that
+  * chunk of EVERY projected primary variable through the Hadoop FS API and
+  * emits wide rows directly. Reading V variables therefore costs zero
+  * shuffles and zero row-level joins (vs the naive per-variable read +
+  * V-way join on the dim columns, which shuffles the full corpus V times
+  * at 100 TB). Coordinate axes and lower-rank variables (1-D axes, 2-D
+  * masks) are decoded once on the driver ([[ZarrGroup.readWholeArray]])
+  * and ride the reader factory; rows look them up by dim index. Missing
+  * chunk files read as `fill_value`, matching `write_empty_chunks=False`
+  * writers; every value is CF-decoded per member. */
 private[sources] class ZarrGroupScan(lay: ZarrGroupTableV2.Layout,
     lo: Array[Int], hi: Array[Int], required: StructType)
     extends Scan with Batch with SupportsReportStatistics {
@@ -1150,10 +1168,9 @@ private[sources] class ZarrGroupScan(lay: ZarrGroupTableV2.Layout,
       val cells = meta.shape.map(_.toLong).product
       require(cells <= ZarrGroupTableV2.SmallArrayCells,
         s"member '$name' (${meta.shape.mkString("×")} cells) is too large to " +
-          s"materialize in the zarr group scan — read it with " +
-          s"ZarrGroup.readDataset, which broadcast-joins lower-rank variables")
-      val a = ZarrGroup.readWholeArray(fs, s"${lay.dir}/$name", meta)
-      if (meta.cf.isEmpty) a else a.map(meta.cfDecode)
+          s"materialize in the zarr group scan — read it on its own with " +
+          s"spark.read.format(\"zarr\").option(\"var\", \"$name\") and join")
+      meta.cfDecodeAll(ZarrGroup.readWholeArray(fs, s"${lay.dir}/$name", meta))
     }
     // resolve each required column ONCE; unprojected variables never load
     val primaryNeeded = required.fieldNames.filter(n =>
@@ -1199,10 +1216,8 @@ private[sources] class ZarrGroupReaderFactory(dir: String, shape: Array[Int],
       private val window = ZarrSource.localWindow(lo, hi, ci, chunks.toSeq, nd)
       private val perVar: Seq[Array[Double]] =
         primaryVars.map { case (n, m) =>
-          val vs = ZarrGroup.chunkValuesWindow(fs, s"$dir/$n", m, ci,
-            window._1, window._2)
-          if (m.cf.isEmpty) vs
-          else { var i = 0; while (i < vs.length) { vs(i) = m.cfDecode(vs(i)); i += 1 }; vs }
+          m.cfDecodeAll(ZarrGroup.chunkValuesWindow(fs, s"$dir/$n", m, ci,
+            window._1, window._2))
         }
       private val n = chunks.product
       private val gidx = new Array[Int](nd)

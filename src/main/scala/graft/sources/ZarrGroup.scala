@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
@@ -23,16 +23,11 @@ import org.json4s.jackson.JsonMethods
   *     listing of array `zarr.json`s. Dimension names come from
   *     `_ARRAY_DIMENSIONS` (v2 attrs) / `dimension_names` (v3 metadata).
   *
-  * Execution shape of [[readDataset]]: the chunk GRID is the task manifest —
-  * one task per outer chunk index opens that chunk of EVERY same-grid data
-  * variable through the Hadoop FS API and emits wide rows directly. Reading
-  * V variables therefore costs zero shuffles and zero row-level joins (vs
-  * the naive per-variable read + V-way join on the dim columns, which
-  * shuffles the full corpus V times at 100 TB). Coordinate and lower-rank
-  * variables (1-D axes, 2-D masks) attach via broadcast joins on the dim
-  * indices — dimension axes are metadata-sized next to the data cube.
-  * Missing chunk files read as `fill_value`, matching
-  * `write_empty_chunks=False` writers.
+  * Reads go through the `zarr` DataSourceV2: `format("zarr").load(dir)`
+  * is the group scan ([[ZarrGroupScan]], the wide `xr.open_zarr`), and
+  * `.option("var", name)` the scan of one member array. This object keeps
+  * the metadata walk ([[open]]), the chunk decoders the scans call, the
+  * driver-side whole-array decode ([[readWholeArray]]) and the writers.
   */
 object ZarrGroup extends Serializable {
 
@@ -129,9 +124,9 @@ object ZarrGroup extends Serializable {
     * hierarchies: consolidated metadata already carries slash-qualified
     * keys, and the listed fallbacks walk child `.zgroup`/`zarr.json` group
     * nodes (bounded depth). The flat fast path is unchanged — a flat store
-    * never pays an extra listing. Qualified members read through
-    * [[readVar]]/[[readDataset]] like any other (the name concatenates onto
-    * the store path); only ROOT-level rank-1 members named after their
+    * never pays an extra listing. Qualified members read through the
+    * group scan or `.option("var", "sub/array")` like any other (the name
+    * concatenates onto the store path); only ROOT-level rank-1 members named after their
     * dimension are treated as dimension coordinates, since a nested `lat`
     * would be scoped to its sub-group in zarr-python too. */
   def open(dir: String, conf: org.apache.hadoop.conf.Configuration): ZGroup = {
@@ -262,23 +257,26 @@ object ZarrGroup extends Serializable {
   private[sources] def chunkGridOf(meta: ZarrSource.ZarrMeta): Seq[Int] =
     meta.shape.indices.map(d => (meta.shape(d) + meta.chunks(d) - 1) / meta.chunks(d))
 
-  /** Decode one variable's chunk `ci` into its C-order cell values, reading
-    * through the Hadoop FS; a missing file yields the fill pattern. */
+  /** One chunk file's stored bytes, or None when the file is absent (an
+    * elided all-fill chunk). ONE metadata round-trip per chunk file: open
+    * directly and treat not-found as the fill case — exists +
+    * getFileStatus + open would cost 3 RPCs per chunk on an object store. */
+  private def chunkBytes(fs: org.apache.hadoop.fs.FileSystem, arrayDir: String,
+      meta: ZarrSource.ZarrMeta, ci: Seq[Int]): Option[Array[Byte]] =
+    try {
+      val in = fs.open(new org.apache.hadoop.fs.Path(arrayDir, ZarrSource.chunkKey(meta, ci)))
+      try Some(org.apache.commons.io.IOUtils.toByteArray(in))
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** Decode one variable's chunk `ci` into its C-order RAW cell values,
+    * reading through the Hadoop FS; a missing file yields the fill
+    * pattern. */
   private[sources] def chunkValues(fs: org.apache.hadoop.fs.FileSystem, arrayDir: String,
       meta: ZarrSource.ZarrMeta, ci: Seq[Int]): Array[Double] = {
     val bp = ZarrSource.bytesPer(meta.dtype)
     val chunkLen = meta.chunks.product
-    val p = new org.apache.hadoop.fs.Path(arrayDir, ZarrSource.chunkKey(meta, ci))
-    // ONE metadata round-trip per chunk file: open directly and treat
-    // not-found as the fill case — exists + getFileStatus + open would cost
-    // 3 RPCs per chunk per variable on an object store
-    val data =
-      try {
-        val in = fs.open(p)
-        try Some(org.apache.commons.io.IOUtils.toByteArray(in))
-        finally in.close()
-      } catch { case _: java.io.FileNotFoundException => None }
-    data match {
+    chunkBytes(fs, arrayDir, meta, ci) match {
       case None => Array.fill(chunkLen)(meta.fillValue)
       case Some(d) =>
         cellsOf(ZarrSource.decodeChunk(d, meta, chunkLen * bp), meta, chunkLen, bp)
@@ -340,15 +338,7 @@ object ZarrGroup extends Serializable {
     var ci = 0
     while (c0 < n) {
       val take = math.min(cl, n - c0)
-      val p = new org.apache.hadoop.fs.Path(arrayDir,
-        ZarrSource.chunkKey(meta, Seq(ci)))
-      val data =
-        try {
-          val in = fs.open(p)
-          try Some(org.apache.commons.io.IOUtils.toByteArray(in))
-          finally in.close()
-        } catch { case _: java.io.FileNotFoundException => None }
-      data match {
+      chunkBytes(fs, arrayDir, meta, Seq(ci)) match {
         case None =>
           var i = 0
           while (i < take) { out(c0 + i) = meta.fillValue.toLong; i += 1 }
@@ -364,12 +354,15 @@ object ZarrGroup extends Serializable {
     out
   }
 
-  /** Materialize one WHOLE member array into a C-order `Array[Double]` —
-    * for metadata-sized arrays only (coordinate axes, small masks): the
-    * DataSourceV2 group scan resolves coordinate values and lower-rank
-    * variables per-row inside partition readers, where a join is not
-    * expressible, so these load once and ride the task closure. Callers
-    * bound the size BEFORE calling. */
+  /** Materialize one WHOLE array into a C-order `Array[Double]` of RAW
+    * stored values (absent chunks read as `fill_value`; apply
+    * [[ZarrSource.ZarrMeta.cfDecodeAll]] for physical values) — the one
+    * driver-side whole-array decode, for metadata-sized arrays only. It
+    * serves [[ZarrSource.readLocalND]], the append's coordinate merge, and
+    * the group scan's coordinate axes and lower-rank variables: partition
+    * readers resolve those per row, where a join is not expressible, so
+    * they load once and ride the task closure. Callers bound the size
+    * BEFORE calling. */
   private[sources] def readWholeArray(fs: org.apache.hadoop.fs.FileSystem,
       arrayDir: String, meta: ZarrSource.ZarrMeta): Array[Double] = {
     val shape = meta.shape
@@ -401,205 +394,6 @@ object ZarrGroup extends Serializable {
       }
     }
     out
-  }
-
-  /** Keep only chunk indices overlapping the requested per-dim index
-    * ranges — whole chunk FILES outside a range are never opened, the
-    * group-level analogue of the `zarr` scan's pushed-range chunk prune. */
-  private def pruneChunks(chunkIdxs: Seq[Seq[Int]], dims: Seq[String],
-      chunks: Seq[Int], ranges: Map[String, (Int, Int)]): Seq[Seq[Int]] = {
-    if (ranges.isEmpty) chunkIdxs
-    else chunkIdxs.filter { ci =>
-      dims.indices.forall { d =>
-        ranges.get(dims(d)).forall { case (lo, hi) =>
-          ci(d) * chunks(d) <= hi && ci(d) * chunks(d) + chunks(d) - 1 >= lo
-        }
-      }
-    }
-  }
-
-  private def inRanges(dims: Seq[String], ranges: Map[String, (Int, Int)],
-      idx: Array[Any]): Boolean =
-    ranges.isEmpty || dims.indices.forall { d =>
-      ranges.get(dims(d)).forall { case (lo, hi) =>
-        val v = idx(d).asInstanceOf[Int]; v >= lo && v <= hi
-      }
-    }
-
-  /** Distributed long-format read of ONE member: columns
-    * `<dim>_idx INT …, <name> DOUBLE`. Chunk-manifest parallelism (one task
-    * per chunk, direct FS reads — no driver glob, missing chunks read as
-    * fill). Any rank.
-    *
-    * @param ranges optional inclusive index range per DIM NAME; chunk files
-    *               entirely outside a range are never opened. */
-  def readVar(spark: SparkSession, dir: String, g: ZGroup, name: String,
-      ranges: Map[String, (Int, Int)] = Map.empty): DataFrame = {
-    val v = g.members.getOrElse(name,
-      throw new IllegalArgumentException(
-        s"no member '$name' in group $dir (have: ${g.members.keys.toSeq.sorted.mkString(", ")})"))
-    val meta = v.meta
-    require(meta.order == "C", "only C-order zarr supported")
-    val nd = meta.shape.length
-    val arrayDir = s"$dir/$name"
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val dims = v.dims
-    val chunkIdxs = pruneChunks(gridIndices(chunkGridOf(meta)).toSeq,
-      dims, meta.chunks, ranges)
-    val schema = StructType(
-      dims.map(dn => StructField(s"${dn}_idx", IntegerType, nullable = false)) :+
-        StructField(name, DoubleType, nullable = false))
-    val shape = meta.shape
-    val chunks = meta.chunks
-    val rdd = spark.sparkContext
-      .parallelize(chunkIdxs, math.max(1, math.min(chunkIdxs.size,
-        spark.sparkContext.defaultParallelism * 4)))
-      .mapPartitions { it =>
-        val fs = new org.apache.hadoop.fs.Path(arrayDir)
-          .getFileSystem(conf.value)
-        it.flatMap { ci =>
-          val vals = chunkValues(fs, arrayDir, meta, ci)
-          val coords = new Array[Int](nd)
-          (0 until vals.length).iterator.flatMap { i =>
-            var r = i
-            var d = nd - 1
-            while (d >= 0) { coords(d) = r % chunks(d); r /= chunks(d); d -= 1 }
-            var inBounds = true
-            val global = new Array[Any](nd + 1)
-            d = 0
-            while (d < nd && inBounds) {
-              val gidx = ci(d) * chunks(d) + coords(d)
-              if (gidx >= shape(d)) inBounds = false else global(d) = gidx
-              d += 1
-            }
-            if (inBounds && inRanges(dims, ranges, global)) {
-              global(nd) = meta.cfDecode(vals(i)); Some(Row.fromSeq(global.toSeq))
-            } else None
-          }
-        }
-      }
-    spark.createDataFrame(rdd, schema)
-  }
-
-  /** Read a group as ONE wide DataFrame — the engine's `xr.open_zarr`:
-    * `<dim>_idx INT` per primary dimension, the coordinate VALUE column
-    * `<dim>` for every dimension that has a coordinate array, and one
-    * `DOUBLE` column per data variable.
-    *
-    * Variables sharing the primary (maximal-rank) dim tuple must share one
-    * chunk grid and are decoded together — one task per chunk opens each
-    * variable's chunk file and emits wide rows, so the cube is NEVER
-    * shuffled or joined at row level. Lower-rank data variables (masks) and
-    * coordinates broadcast-join on their dim indices; a lower-rank variable
-    * too big to broadcast (> ~64 M cells) falls back to a shuffle join with
-    * a logged note — at that point it is not really a "mask" anymore.
-    *
-    * @param vars   data variables to read (default: all of them)
-    * @param ranges optional inclusive index range per DIM NAME (e.g.
-    *               `Map("time" -> (0, 364))`) — chunk files entirely
-    *               outside a range are never opened, on every variable
-    */
-  def readDataset(spark: SparkSession, dir: String,
-      vars: Seq[String] = Seq.empty,
-      ranges: Map[String, (Int, Int)] = Map.empty): DataFrame = {
-    val g = open(dir, spark.sparkContext.hadoopConfiguration)
-    val wanted = if (vars.nonEmpty) vars else g.dataVarNames
-    require(wanted.nonEmpty, s"zarr group $dir has no data variables")
-    wanted.foreach { n => require(g.members.contains(n), s"no member '$n' in $dir") }
-    val members = wanted.map(g.members)
-    val primaryDims = members.map(_.dims).maxBy(_.length)
-    val (primary, secondary) = members.partition(_.dims == primaryDims)
-    secondary.foreach { v =>
-      require(v.dims.forall(primaryDims.contains),
-        s"variable '${v.name}'(${v.dims.mkString(",")}) shares no dim layout with " +
-          s"primary (${primaryDims.mkString(",")})")
-    }
-    val headMeta = primary.head.meta
-    primary.foreach { v =>
-      require(v.meta.shape == headMeta.shape && v.meta.chunks == headMeta.chunks,
-        s"primary variables must share one chunk grid: '${v.name}' has " +
-          s"shape=${v.meta.shape}/chunks=${v.meta.chunks}, " +
-          s"'${primary.head.name}' has shape=${headMeta.shape}/chunks=${headMeta.chunks}")
-      require(v.meta.order == "C", "only C-order zarr supported")
-    }
-
-    // ── wide read of the primary variables: one task per chunk index ──
-    val nd = primaryDims.length
-    val shape = headMeta.shape
-    val chunks = headMeta.chunks
-    val varNames = primary.map(_.name)
-    val varMetas = primary.map(v => (v.name, v.meta))
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val chunkIdxs = pruneChunks(gridIndices(chunkGridOf(headMeta)).toSeq,
-      primaryDims, chunks, ranges)
-    val rangesB = ranges
-    val schema = StructType(
-      primaryDims.map(dn => StructField(s"${dn}_idx", IntegerType, nullable = false)) ++
-        varNames.map(n => StructField(n, DoubleType, nullable = false)))
-    val rdd = spark.sparkContext
-      .parallelize(chunkIdxs, math.max(1, math.min(chunkIdxs.size,
-        spark.sparkContext.defaultParallelism * 4)))
-      .mapPartitions { it =>
-        val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf.value)
-        val loG = Array.tabulate(nd)(d =>
-          rangesB.get(primaryDims(d)).fold(Int.MinValue)(_._1))
-        val hiG = Array.tabulate(nd)(d =>
-          rangesB.get(primaryDims(d)).fold(Int.MaxValue)(_._2))
-        it.flatMap { ci =>
-          // chunk-local window from the pushed ranges: sharded members
-          // byte-range-read only the inner chunks it intersects
-          val (loL, hiL) = ZarrSource.localWindow(loG, hiG, ci, chunks, nd)
-          val perVar = varMetas.map { case (n, m) =>
-            chunkValuesWindow(fs, s"$dir/$n", m, ci, loL, hiL)
-          }
-          val chunkLen = chunks.product
-          val coords = new Array[Int](nd)
-          (0 until chunkLen).iterator.flatMap { i =>
-            var r = i
-            var d = nd - 1
-            while (d >= 0) { coords(d) = r % chunks(d); r /= chunks(d); d -= 1 }
-            var inBounds = true
-            val cells = new Array[Any](nd + perVar.length)
-            d = 0
-            while (d < nd && inBounds) {
-              val gidx = ci(d) * chunks(d) + coords(d)
-              if (gidx >= shape(d)) inBounds = false else cells(d) = gidx
-              d += 1
-            }
-            if (inBounds && inRanges(primaryDims, rangesB, cells)) {
-              var vi = 0
-              while (vi < perVar.length) {
-                cells(nd + vi) = varMetas(vi)._2.cfDecode(perVar(vi)(i)); vi += 1
-              }
-              Some(Row.fromSeq(cells.toSeq))
-            } else None
-          }
-        }
-      }
-    var out = spark.createDataFrame(rdd, schema)
-
-    // ── lower-rank data variables: broadcast-join on their dim indices ──
-    secondary.foreach { v =>
-      val vdf = readVar(spark, dir, g, v.name,
-        ranges.view.filterKeys(v.dims.contains).toMap)
-      val keys = v.dims.map(dn => s"${dn}_idx")
-      val joined = if (v.meta.shape.map(_.toLong).product <= 64L * 1024 * 1024)
-        broadcast(vdf) else vdf
-      out = out.join(joined, keys, "left")
-    }
-
-    // ── dimension coordinates: broadcast value columns `<dim>` ──
-    primaryDims.filter(g.coordNames).foreach { dn =>
-      val cdf = readVar(spark, dir, g, dn,
-        ranges.view.filterKeys(_ == dn).toMap)
-        .withColumnRenamed(dn, s"${dn}__coord")
-      out = out.join(broadcast(cdf), Seq(s"${dn}_idx"), "left")
-        .withColumnRenamed(s"${dn}__coord", dn)
-    }
-
-    val cols = primaryDims.map(dn => s"${dn}_idx") ++
-      primaryDims.filter(g.coordNames) ++ wanted
-    out.select(cols.map(col): _*)
   }
 
   private def jsonStr(s: String): String =
@@ -822,7 +616,7 @@ object ZarrGroup extends Serializable {
   }
 
   /** Write a DataFrame as a zarr GROUP that xarray opens directly — the
-    * dual of [[readDataset]] and the engine's `ds.to_zarr` (helper.py:505):
+    * dual of the group scan and the engine's `ds.to_zarr` (helper.py:505):
     * one array per value column plus 1-D coordinate arrays, dimension names
     * on every member (`_ARRAY_DIMENSIONS` / `dimension_names`), and
     * consolidated metadata (v2 `.zmetadata` / v3 inline

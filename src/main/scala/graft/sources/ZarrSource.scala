@@ -133,6 +133,16 @@ object ZarrSource extends Serializable {
       case None => raw
       case Some(c) => c.decode(raw)
     }
+    /** [[cfDecode]] over raw values IN PLACE — callers pass an array they
+      * just decoded, so a packed chunk costs no second allocation; returns
+      * `raw`. */
+    def cfDecodeAll(raw: Array[Double]): Array[Double] = {
+      if (cf.nonEmpty) {
+        var i = 0
+        while (i < raw.length) { raw(i) = cfDecode(raw(i)); i += 1 }
+      }
+      raw
+    }
     /** The fill value as a READER should surface it (CF-decoded). */
     def decodedFill: Double = cfDecode(fillValue)
   }
@@ -866,59 +876,15 @@ object ZarrSource extends Serializable {
 
   /** Driver-side dense read of a small N-D zarr array (coordinate axes,
     * masks — things that are broadcast anyway). Returns the shape and the
-    * C-order flat values; missing chunk files read as fill_value. Accepts
-    * both v2 and v3 layouts. */
+    * C-order flat CF-decoded values; missing chunk files read as the
+    * decoded fill. Accepts both v2 and v3 layouts. The raw read plus
+    * [[ZarrMeta.cfDecodeAll]], the same composition the group scan uses. */
   def readLocalND(dir: String): (Seq[Int], Array[Double]) = {
-    val meta = readMetaAny(dir, driverHadoopConf())
+    val conf = driverHadoopConf()
+    val meta = readMetaAny(dir, conf)
     require(meta.order == "C", "only C-order zarr supported")
-    val shape = meta.shape
-    val chunks = meta.chunks
-    val nd = shape.length
-    val bp = bytesPer(meta.dtype)
-    val out = Array.fill(shape.product)(meta.decodedFill)
-    val nChunks = shape.indices.map(d => (shape(d) + chunks(d) - 1) / chunks(d))
-    // iterate the full chunk grid; absent files keep fill_value
-    def gridIndices(dims: Seq[Int]): Iterator[Seq[Int]] =
-      dims.foldLeft(Iterator(Seq.empty[Int])) { (acc, n) =>
-        acc.flatMap(prefix => (0 until n).iterator.map(prefix :+ _))
-      }
-    val dirP = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirP.getFileSystem(driverHadoopConf())
-    for (ci <- gridIndices(nChunks)) {
-      val f = new org.apache.hadoop.fs.Path(dir, chunkKey(meta, ci))
-      val data =
-        try {
-          val in = fs.open(f)
-          try Some(org.apache.commons.io.IOUtils.toByteArray(in))
-          finally in.close()
-        } catch { case _: java.io.FileNotFoundException => None }
-      data.foreach { bytes =>
-        val raw = decodeChunk(bytes, meta, chunks.product * bp)
-        val buf = ByteBuffer.wrap(raw).order(byteOrderOf(meta.dtype))
-        val chunkLen = chunks.product
-        val coords = new Array[Int](nd)
-        var i = 0
-        while (i < chunkLen) {
-          // decompose i (C-order within the chunk) → global flat index
-          var r = i
-          var d = nd - 1
-          while (d >= 0) { coords(d) = r % chunks(d); r /= chunks(d); d -= 1 }
-          var inBounds = true
-          var flat = 0L
-          d = 0
-          while (d < nd && inBounds) {
-            val g = ci(d) * chunks(d) + coords(d)
-            if (g >= shape(d)) inBounds = false
-            else flat = flat * shape(d) + g
-            d += 1
-          }
-          if (inBounds) out(flat.toInt) =
-            meta.cfDecode(cellValue(raw, buf, meta.dtype, i, bp))
-          i += 1
-        }
-      }
-    }
-    (shape, out)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    (meta.shape, meta.cfDecodeAll(ZarrGroup.readWholeArray(fs, dir, meta)))
   }
 
   /** Distributed Zarr v2 writer (sink dual of the `zarr` scan; ≙ the

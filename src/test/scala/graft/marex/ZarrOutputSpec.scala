@@ -26,6 +26,12 @@ class ZarrOutputSpec extends SparkSpec {
     TrackConfig(rFill = 0, tFill = 0, areaFilterQuartile = 0.0,
       dropSmallestObject = false, overlapThreshold = 0.2, allowMerging = true))
 
+  /** One member of a written group through its array scan: rank 3 reads
+    * as (t_idx, y, x, value), rank 2 as (t_idx, cell, value) — the axes in
+    * storage order, whatever the member's dimension names. */
+  private def member(dir: String, v: String) =
+    spark.read.format("zarr").option("var", v).load(dir)
+
   private lazy val outDir = {
     val d = java.nio.file.Files.createTempDirectory("zarr_track_out").toFile
     org.apache.commons.io.FileUtils.deleteQuietly(d)
@@ -54,10 +60,10 @@ class ZarrOutputSpec extends SparkSpec {
 
   test("ID_field round-trips: labeled cells exact, background zero") {
     val g = ZarrGroup.open(outDir, spark.sparkContext.hadoopConfiguration)
-    val cube = ZarrGroup.readVar(spark, outDir, g, "ID_field")
+    val cube = member(outDir, "ID_field") // (t_idx, y, x, value)
     val nt = g.members("time").meta.shape.head
     assert(cube.count() == nt.toLong * ny * nx)
-    val labeled = cube.filter(col("ID_field") > 0)
+    val labeled = cube.filter(col("value") > 0)
     // rebuild (time_idx, y, x, id) from the result for comparison
     val times = res.idField.select("time").distinct().orderBy("time")
       .as[java.sql.Timestamp].collect().zipWithIndex.toSeq
@@ -65,44 +71,41 @@ class ZarrOutputSpec extends SparkSpec {
     val want = res.idField.join(times, "time")
       .select(col("time_idx"), col("y"), col("x"), col("event_id").cast("double"))
     val mismatch = labeled
-      .join(want, labeled("time_idx") === want("time_idx") &&
-        labeled("lat_idx") === want("y") && labeled("lon_idx") === want("x"),
+      .join(want, labeled("t_idx") === want("time_idx") &&
+        labeled("y") === want("y") && labeled("x") === want("x"),
         "full")
-      .filter(want("event_id").isNull || labeled("ID_field").isNull ||
-        want("event_id") =!= labeled("ID_field"))
+      .filter(want("event_id").isNull || labeled("value").isNull ||
+        want("event_id") =!= labeled("value"))
       .count()
     assert(mismatch == 0L, s"$mismatch ID_field cells disagree with idField")
   }
 
   test("per-(time,ID) tables and centroid components round-trip") {
-    val g = ZarrGroup.open(outDir, spark.sparkContext.hadoopConfiguration)
-    val area = ZarrGroup.readVar(spark, outDir, g, "area")
-      .filter(!isnan(col("area")))
+    // (time, ID) members read as (t_idx, cell = ID index, value)
+    val area = member(outDir, "area").filter(!isnan(col("value")))
     assert(area.count() == res.eventProps.count())
-    val presence = ZarrGroup.readVar(spark, outDir, g, "presence")
-    assert(presence.filter(col("presence") === 1.0).count() == res.eventProps.count())
-    // centroid: component 0 = lat, 1 = lon, NaN padding elsewhere
-    val cen = ZarrGroup.readVar(spark, outDir, g, "centroid")
-      .filter(!isnan(col("centroid")))
+    val presence = member(outDir, "presence")
+    assert(presence.filter(col("value") === 1.0).count() == res.eventProps.count())
+    // centroid(component, time, ID): component 0 = lat, 1 = lon, NaN
+    // padding elsewhere; the array scan names its leading axis t_idx
+    val cen = member(outDir, "centroid").filter(!isnan(col("value")))
     assert(cen.count() == 2 * res.eventProps.count())
-    val clat = cen.filter(col("component_idx") === 0)
-      .agg(round(sum("centroid"), 6)).head().getDouble(0)
+    val clat = cen.filter(col("t_idx") === 0)
+      .agg(round(sum("value"), 6)).head().getDouble(0)
     val wantLat = res.eventProps.agg(round(sum("cen_lat"), 6)).head().getDouble(0)
     assert(math.abs(clat - wantLat) < 1e-6)
   }
 
   test("time bounds and merge ledger round-trip with -1 padding") {
-    val g = ZarrGroup.open(outDir, spark.sparkContext.hadoopConfiguration)
-    val ts = ZarrGroup.readVar(spark, outDir, g, "time_start")
-      .filter(!isnan(col("time_start")))
-    assert(ts.count() == res.events.count())
+    val (_, ts) = graft.sources.ZarrSource.readLocalND(s"$outDir/time_start")
+    assert(ts.count(!_.isNaN) == res.events.count())
     // every real sibling id appears; everything else is the -1 pad
-    val led = ZarrGroup.readVar(spark, outDir, g, "merge_ledger")
-    val real = led.filter(col("merge_ledger") >= 0).count()
+    val led = member(outDir, "merge_ledger")
+    val real = led.filter(col("value") >= 0).count()
     val wantSibs = res.mergeLedger
       .select(explode(col("sibling_event_ids"))).count()
     assert(real == wantSibs, s"ledger has $real entries, result has $wantSibs")
-    assert(led.filter(col("merge_ledger") < -1).count() == 0)
+    assert(led.filter(col("value") < -1).count() == 0)
   }
 
   test("writeDetectResult emits the fixture layout; loadExtremesGridded re-opens it") {
@@ -177,8 +180,10 @@ class ZarrOutputSpec extends SparkSpec {
       "thresholds", "time", "lat", "lon"))
     assert(gG.members("thresholds").dims == Seq("lat", "lon"))
     assert(gG.members("dat_anomaly").dims == Seq("time", "lat", "lon"))
-    // threshold values round-trip
-    val thrBack = ZarrGroup.readVar(spark, dG.getAbsolutePath, gG, "thresholds")
+    // threshold values round-trip through the group scan (one time slice)
+    val thrBack = spark.read.format("zarr").load(dG.getAbsolutePath)
+      .filter(col("time_idx") === 0).select("lat_idx", "lon_idx", "thresholds")
+    assert(thrBack.count() == 4 * 6)
     val diff = thrBack.join(thrG.withColumnRenamed("threshold", "want"),
         thrBack("lat_idx") === thrG("y") && thrBack("lon_idx") === thrG("x"))
       .filter(abs(col("thresholds") - col("want")) > 1e-12).count()
@@ -233,13 +238,12 @@ class ZarrOutputSpec extends SparkSpec {
     assert(g.members("ID_field").dims == Seq("time", "ncells"))
     assert(g.members("lat").dims == Seq("ncells"))
     // id cube round-trips cell-exactly
-    val cube = ZarrGroup.readVar(spark, d.getAbsolutePath, g, "ID_field")
-    assert(cube.filter(col("ID_field") > 0).count() == res.idField.count())
+    val cube = member(d.getAbsolutePath, "ID_field")
+    assert(cube.filter(col("value") > 0).count() == res.idField.count())
     assert(cube.count() == 3L * n)
     // derived area matches the flagged-cell count per (t, id) (unit areas)
-    val area = ZarrGroup.readVar(spark, d.getAbsolutePath, g, "area")
-      .filter(!isnan(col("area")))
-    assert(area.agg(sum("area")).head().getDouble(0) == res.idField.count().toDouble)
+    val area = member(d.getAbsolutePath, "area").filter(!isnan(col("value")))
+    assert(area.agg(sum("value")).head().getDouble(0) == res.idField.count().toDouble)
     // mesh arrays written faithfully
     val (_, latArr) = graft.sources.ZarrSource.readLocalND(s"${d.getAbsolutePath}/lat")
     assert(latArr.toSeq == mesh.lat.toSeq)

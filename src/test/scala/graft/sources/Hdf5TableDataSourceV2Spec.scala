@@ -122,6 +122,16 @@ class Hdf5TableDataSourceV2Spec extends SparkSpec {
     assert(got.rdd.getNumPartitions == 3)
   }
 
+  test("a zero-row compound table reads as an empty frame with its schema") {
+    val path = tmpH5()
+    NetCDF4Source.writeCompoundTable(
+      Seq.empty[(String, Double)].toDF("name", "score"), path, "stats")
+    val got = spark.read.format("hdf5table").option("var", "stats").load(path)
+    assert(got.schema.map(f => (f.name, f.dataType.typeName)) ==
+      Seq(("name", "string"), ("score", "double")))
+    assert(got.collect().isEmpty)
+  }
+
   test("ALL chunks elided still writes a valid (empty) chunk index") {
     // every row all-default → zero chunk entries: the B-tree emits one
     // 0-entry leaf (round-11 regression pin — the two-level refactor

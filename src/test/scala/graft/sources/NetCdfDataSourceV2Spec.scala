@@ -284,6 +284,21 @@ class NetCdfDataSourceV2Spec extends SparkSpec {
     assert(win.collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 1, 2, 2, 3, 3))
   }
 
+  test("an NC4 variable with no allocated chunks reads as NaN over its shape") {
+    // all-default cells + chunk elision: every chunk is dropped from the
+    // index, which the writer still emits as one valid 0-entry leaf
+    val img = Hdf5.assemble(Seq(Hdf5.WriteVar("v", Seq(4, 2, 3),
+      Array.fill(4 * 2 * 3)(0.0), chunkDims = Some(Seq(2, 2, 3)),
+      elideDefaultChunks = true)))
+    val path = tmpNc()
+    java.nio.file.Files.write(java.nio.file.Paths.get(path), img)
+    val got = spark.read.format("netcdf").option("var", "v").load(path)
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
+    assert(got.map(r => (r._1, r._2, r._3)).sorted.toSeq ==
+      (for (t <- 0 until 4; y <- 0 until 2; x <- 0 until 3) yield (t, y, x)))
+    assert(got.forall(_._4.isNaN), "unallocated chunks read as NaN fill")
+  }
+
   test("an empty match fails with the pattern named") {
     val e = intercept[Exception](
       spark.read.format("netcdf").option("var", "sst")

@@ -135,7 +135,7 @@ class ZarrAppendSpec extends SparkSpec {
     val g = ZarrGroup.open(dir, spark.sparkContext.hadoopConfiguration)
     assert(g.members("time").meta.shape == Seq(4))
     assert(g.members("sst").meta.shape == Seq(4, 3, 4))
-    val ds = ZarrGroup.readDataset(spark, dir)
+    val ds = spark.read.format("zarr").load(dir)
     val times = ds.select("time").distinct().as[Double].collect().sorted
     assert(times.toSeq == Seq(10.0, 11.0, 12.0, 13.0))
   }
@@ -195,7 +195,7 @@ class ZarrAppendSpec extends SparkSpec {
 
     ZarrGroup.appendDataset(df, dir,
       Seq("time" -> 2, "y" -> 3, "x" -> 4), Seq(2, 3, 4), Seq("sa", "sb"))
-    val back = ZarrGroup.readDataset(spark, dir)
+    val back = spark.read.format("zarr").load(dir)
     assert(back.count() == 4 * 3 * 4)
     assert(back.filter(col("sb") =!= col("sa") * 2).count() == 0,
       "appended chunks of the blosc member must be BLOSC, of the raw member raw")
@@ -213,7 +213,7 @@ class ZarrAppendSpec extends SparkSpec {
     Seq(10.0, 11.0, 12.0, 13.0).foreach(buf.putDouble)
     ZarrSource.putBytes(fs, new org.apache.hadoop.fs.Path(s"$dir/time", "c/0"),
       ZarrSource.v3EncodeChain(buf.array(), Seq(ZarrSource.ZstdC)))
-    val times0 = ZarrGroup.readDataset(spark, dir)
+    val times0 = spark.read.format("zarr").load(dir)
       .select("time").distinct().as[Double].collect().sorted
     assert(times0.toSeq == Seq(10.0, 11.0),
       "before the metadata patch lands the store must read as pre-append")
@@ -221,7 +221,7 @@ class ZarrAppendSpec extends SparkSpec {
     ZarrGroup.appendDataset(cells(2, 3, 4, tBase = 2), dir,
       Seq("time" -> 2, "y" -> 3, "x" -> 4), Seq(2, 3, 4), Seq("sst"),
       newCoords = Map("time" -> Array(12.0, 13.0)))
-    val times1 = ZarrGroup.readDataset(spark, dir)
+    val times1 = spark.read.format("zarr").load(dir)
       .select("time").distinct().as[Double].collect().sorted
     assert(times1.toSeq == Seq(10.0, 11.0, 12.0, 13.0))
   }

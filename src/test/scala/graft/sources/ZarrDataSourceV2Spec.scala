@@ -133,10 +133,12 @@ class ZarrDataSourceV2Spec extends SparkSpec {
     assert(df.schema.fieldNames.toSeq == Seq("time_idx", "lat_idx", "lon_idx",
       "time", "lat", "lon", "extreme_events", "mask"))
     assert(df.count() == 32L * 180 * 360)
-    // cell values match the utility group reader on a slice
-    val util = ZarrGroup.readDataset(spark, groupDir,
-        ranges = Map("time" -> (0, 0)))
-      .withColumnRenamed("extreme_events", "e2").withColumnRenamed("mask", "m2")
+    // cell values match a driver-side decode of both members on a slice
+    import spark.implicits._
+    val (Seq(_, nLat, nLon), ev) = ZarrSource.readLocalND(s"$groupDir/extreme_events")
+    val (_, mask) = ZarrSource.readLocalND(s"$groupDir/mask")
+    val util = (0 until nLat * nLon).map(i => (0, i / nLon, i % nLon, ev(i), mask(i)))
+      .toDF("time_idx", "lat_idx", "lon_idx", "e2", "m2")
     val joined = df.filter(col("time_idx") === 0)
       .join(util, Seq("time_idx", "lat_idx", "lon_idx"))
     assert(joined.count() == 180L * 360)

@@ -49,7 +49,7 @@ class ZarrDimSeparatorSpec extends SparkSpec {
   test("a dimension_separator '/' store reads every chunk (not silent fill)") {
     val dir = tmpDir()
     writeNestedStore(dir)
-    val ds = ZarrGroup.readDataset(spark, dir)
+    val ds = spark.read.format("zarr").load(dir)
     assert(ds.count() == 4 * 2 * 3, "every nested-keyed chunk must be found")
     assert(ds.filter(isnan(col("sst"))).count() == 0,
       "no cell may silently read as fill")
@@ -74,7 +74,7 @@ class ZarrDimSeparatorSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(dir, "sst", "2.0.0")),
       "no '.'-keyed stray chunk may appear")
-    val ds = ZarrGroup.readDataset(spark, dir)
+    val ds = spark.read.format("zarr").load(dir)
     assert(ds.count() == 6 * 2 * 3)
     assert(ds.filter(col("sst") =!= col("time_idx") * 100.0 +
       col("y_idx") * 10.0 + col("x_idx")).count() == 0,

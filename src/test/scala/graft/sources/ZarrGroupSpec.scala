@@ -7,7 +7,8 @@ import graft.SparkSpec
 
 /** Group-level zarr: consolidated/listed discovery on the reference's OWN
   * xarray-written fixture, dimension-name propagation, the wide no-join
-  * dataset read, and v2/v3 group write → read round-trips (including that
+  * group scan (`format("zarr")` on a group dir), and v2/v3 group write →
+  * read round-trips (including that
   * the written layout is exactly what xarray's conventions require:
   * `.zmetadata`, `_ARRAY_DIMENSIONS`, `dimension_names`). */
 class ZarrGroupSpec extends SparkSpec {
@@ -15,6 +16,7 @@ class ZarrGroupSpec extends SparkSpec {
   private val fixture = "/root/reference/tests/data/extremes_gridded.zarr"
   private def haveFixture = new java.io.File(s"$fixture/.zmetadata").exists()
   private def hconf = spark.sparkContext.hadoopConfiguration
+  private def group(dir: String) = spark.read.format("zarr").load(dir)
 
   /** Case-class == is primitive on Double, so NaN fills never compare equal;
     * normalize the fill before comparing metadata. */
@@ -52,26 +54,26 @@ class ZarrGroupSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(tmp)
   }
 
-  test("readVar matches readLocalND on a fixture coordinate") {
+  test("the group scan's coordinate column matches readLocalND on the fixture") {
     assume(haveFixture)
-    val g = ZarrGroup.open(fixture, hconf)
     val (shape, local) = ZarrSource.readLocalND(s"$fixture/lat")
-    val dist = ZarrGroup.readVar(spark, fixture, g, "lat")
-      .orderBy("lat_idx").collect()
+    val dist = group(fixture)
+      .filter(col("time_idx") === 0 && col("lon_idx") === 0)
+      .select("lat_idx", "lat").orderBy("lat_idx").collect()
     assert(dist.length == shape.head)
     dist.foreach(r => assert(r.getDouble(1) == local(r.getInt(0))))
   }
 
-  test("readDataset: wide no-join read reproduces the per-array loaders") {
+  test("group scan: wide no-join read reproduces the per-array loaders") {
     assume(haveFixture)
-    val ds = ZarrGroup.readDataset(spark, fixture).cache()
+    val ds = group(fixture).cache()
     try {
       // flag count == what the driver-side array decoder sees
       val nFlags = ds.filter(col("extreme_events") =!= 0.0).count()
       val expected = ZarrSource.readLocalND(s"$fixture/extreme_events")._2
         .count(_ != 0.0).toLong
       assert(nFlags == expected, s"wide read flags $nFlags != array read $expected")
-      // mask broadcast-attached: constant over time for any fixed cell
+      // mask attached by (lat, lon): constant over time for any fixed cell
       val perCell = ds.groupBy("lat_idx", "lon_idx")
         .agg(countDistinct("mask").as("n")).agg(max("n")).head().getLong(0)
       assert(perCell == 1L)
@@ -107,7 +109,7 @@ class ZarrGroupSpec extends SparkSpec {
     assert(g.members("sst").dims == Seq("time", "y", "x"))
     assert((g.attrs \ "source") == JString("graft-test"))
 
-    val back = ZarrGroup.readDataset(spark, dir.getAbsolutePath)
+    val back = group(dir.getAbsolutePath)
     assert(back.count() == 5 * 6 * 8)
     val errs = back.filter(
       abs(col("sst") - (col("time_idx") * 100 + col("y_idx") * 10 + col("x_idx"))) > 1e-12 ||
@@ -140,7 +142,7 @@ class ZarrGroupSpec extends SparkSpec {
     val chunk = java.nio.file.Files.readAllBytes(new java.io.File(dir, "v/0.0").toPath)
     assert(chunk.length < 10 * 30 * 8, "chunk must actually be compressed")
     assert(((chunk(2) & 0xff) >>> 5) == 1, "codec id must be lz4")
-    val back = ZarrGroup.readDataset(spark, dir.getAbsolutePath)
+    val back = group(dir.getAbsolutePath)
     assert(back.filter(abs(col("v") - (col("y_idx") * 1.5 + col("x_idx"))) > 1e-12)
       .count() == 0L && back.count() == 600)
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
@@ -182,8 +184,8 @@ class ZarrGroupSpec extends SparkSpec {
     for (c <- Seq("2.0", "3.0"))
       java.nio.file.Files.write(new java.io.File(dir, s"v/$c").toPath,
         Array[Byte](1, 2, 3))
-    val got = ZarrGroup.readDataset(spark, dir.getAbsolutePath,
-      ranges = Map("time" -> (1, 3)))
+    val got = group(dir.getAbsolutePath).filter(col("time_idx").between(1, 3))
+    assert(got.queryExecution.executedPlan.toString.contains("time_idx in [1, 3]"))
     assert(got.count() == 3 * 4)
     assert(got.agg(min("time_idx"), max("time_idx")).head() ==
       org.apache.spark.sql.Row(1, 3))
@@ -195,7 +197,7 @@ class ZarrGroupSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
-  test("readDataset ranges over a SHARDED member stay cell-exact") {
+  test("group scan ranges over a SHARDED member stay cell-exact") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("zgroup_shardrange").toFile
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
@@ -206,12 +208,12 @@ class ZarrGroupSpec extends SparkSpec {
       v3 = true, shard = Some(Seq(1, 2)))
     // a range interior to one outer chunk: the windowed shard read decodes
     // only the intersecting 1×2 inner tiles, never the rest of the object
-    val got = ZarrGroup.readDataset(spark, dir.getAbsolutePath,
-      ranges = Map("time" -> (5, 6), "x" -> (2, 3)))
+    val got = group(dir.getAbsolutePath)
+      .filter(col("time_idx").between(5, 6) && col("x_idx").between(2, 3))
     assert(got.count() == 2 * 2)
     assert(got.filter(col("v") =!= col("time_idx") * 10 + col("x_idx")).count() == 0)
     // and an unbounded read of the same store is complete
-    assert(ZarrGroup.readDataset(spark, dir.getAbsolutePath).count() == 8 * 4)
+    assert(group(dir.getAbsolutePath).count() == 8 * 4)
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
@@ -225,7 +227,7 @@ class ZarrGroupSpec extends SparkSpec {
       dims = Seq("time" -> 4, "x" -> 4), chunks = Seq(2, 4), valueCols = Seq("v"))
     // drop the second time-chunk file → those 8 cells must read as NaN fill
     assert(new java.io.File(dir, "v/1.0").delete())
-    val back = ZarrGroup.readDataset(spark, dir.getAbsolutePath)
+    val back = group(dir.getAbsolutePath)
     assert(back.count() == 16)
     assert(back.filter(isnan(col("v"))).count() == 8)
     assert(back.filter(col("time_idx") < 2 && isnan(col("v"))).count() == 0)
@@ -284,7 +286,7 @@ class ZarrGroupSpec extends SparkSpec {
       gCons.members.keySet.filter(_.startsWith("sub/")))
 
     // and the qualified member reads like any other variable
-    val got = ZarrGroup.readDataset(spark, root, vars = Seq("v", "sub/w"))
+    val got = group(root).select("v", "sub/w")
     assert(got.count() == 12)
     assert(got.filter(col("`sub/w`") =!= col("v") * 2).count() == 0)
     org.apache.commons.io.FileUtils.deleteQuietly(dir)

@@ -97,7 +97,7 @@ class ZarrHadoopFsWriteSpec extends SparkSpec {
     assert(new java.io.File(dir, "sst/0.0.0").isFile, "chunk through FS")
     assert(new java.io.File(dir, "time/0").isFile, "coord through FS")
     // and the store also reads BACK through the graftfs scheme end-to-end
-    val back = ZarrGroup.readDataset(spark, s"graftfs:$dir")
+    val back = spark.read.format("zarr").load(s"graftfs:$dir")
     assert(back.count() == 6 * 3 * 4)
     assert(back.filter(col("sst") =!=
       col("time_idx") * 100.0 + col("y_idx") * 10.0 + col("x_idx")).count() == 0)

@@ -195,7 +195,7 @@ class ZarrPackedAppendSpec extends SparkSpec {
     val lb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
     assert((0 until 5).map(i => lb.getLong(i * 8)) ==
       Seq(438000L, 438024L, 438048L, 438072L, 438096L))
-    val ds = ZarrGroup.readDataset(spark, dir)
+    val ds = spark.read.format("zarr").load(dir)
     assert(ds.count() == 5 * 2 * 4)
     val times = ds.select("time").distinct().as[Double].collect().sorted
     assert(times.toSeq == Seq(438000.0, 438024.0, 438048.0, 438072.0, 438096.0))
@@ -340,7 +340,7 @@ class ZarrPackedAppendSpec extends SparkSpec {
       .option("dims", "time:1,y:2,x:4").option("chunks", "2,2,4")
       .option("cols", "sst").option("coords", "time:13:1")
       .mode("append").save(dir)
-    val times = ZarrGroup.readDataset(spark, dir)
+    val times = spark.read.format("zarr").load(dir)
       .select("time").distinct().as[Double].collect().sorted
     assert(times.toSeq == Seq(10.0, 11.0, 12.0, 13.0),
       "recovery must preserve every committed coordinate value")
@@ -384,7 +384,7 @@ class ZarrPackedAppendSpec extends SparkSpec {
     val keys = new java.io.File(dir, "time").list().toSet
     assert(!keys.exists(_.contains("__grow")),
       s"staging keys must be cleaned up, got: $keys")
-    val times = ZarrGroup.readDataset(spark, dir)
+    val times = spark.read.format("zarr").load(dir)
       .select("time").distinct().as[Double].collect().sorted
     assert(times.toSeq == Seq(10.0, 11.0, 12.0))
   }
