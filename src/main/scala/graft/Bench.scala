@@ -23,7 +23,7 @@ object Bench {
     def timedCount(): Double = {
       val t0 = System.nanoTime()
       try { spark.read.parquet(s"$sfDir/lineitem.parquet").count() }
-      catch { case _: Throwable => }
+      catch { case NonFatal(_) => }
       (System.nanoTime() - t0) / 1e9
     }
     // Retry until the page cache is actually HOT (two consecutive reads
@@ -83,33 +83,24 @@ object Bench {
     }
     // a query that throws has no time: it is named, never summed
     val results = runs.collect { case (name, dt, true) => name -> dt }
-    val failed = runs.collect { case (name, _, false) => "\"" + name + "\"" }
+    val failed = runs.collect { case (name, _, false) => name }
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // Two renderings of the SAME measurement (same queries, same values):
-    //  - the PERSISTED file keeps full precision plus the capture-condition
+    //  - the PERSISTED file keeps full names at full precision, the
+    //    id → name map of the printed keys, and the capture-condition
     //    self-annotation flags (the round's durable record);
-    //  - the PRINTED line is minimized — 3-decimal values, contract fields
-    //    only — and emitted as the very LAST stdout line, because the
-    //    driver parses it from a ~2,000-byte log tail (rounds 10 and 11
-    //    both lost the per-query map to tail truncation of the 3.5 KB
-    //    full-precision line; VERDICT r11 "Next round" item 2). With 101
-    //    query names totalling ~1.7 KB the map cannot mathematically fit a
-    //    2,000-byte window whole, but minimizing + printing last maximizes
-    //    the recoverable suffix and parses whole in any larger window.
+    //  - the PRINTED line is [[contractLine]], emitted as the very LAST
+    //    stdout line so a log-tail parse finds it.
     def fullQs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // JSON numbers take a '.' decimal point whatever the JVM locale
-    def num(v: Double, decimals: Int): String = String.format(Locale.ROOT, s"%.${decimals}f", v)
-    def shortQs = results.map { case (k, v) => s""""$k":${num(v, 3)}""" }
+    def ids = results.map { case (k, _) => s""""${queryId(k)}":"$k"""" }
       .mkString("{", ",", "}")
     val fullLine =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"sf":"$sfDir",""" +
-      s""""failed":${failed.mkString("[", ",", "]")},""" +
+      s""""query_ids":$ids,"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
       s""""load_avg_start":${num(loadAvg, 2)},"contended":$contended,""" +
       s""""warmup_first_s":${num(warm1, 3)},"warmup_second_s":${num(warm2, 3)},""" +
       s""""cold_cache":$coldCacheFinal,"degraded_host":$degradedHost}"""
-    val line =
-      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":$shortQs,"sf":"$sfDir"}"""
     // Persist the full line to a file FIRST (its info line must precede the
     // contract line, which the driver tail-parses): the driver's
     // BENCH_r*.json keeps only a truncated log TAIL (round 10's artifact
@@ -126,9 +117,34 @@ object Bench {
       Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(p, (fullLine + "\n").getBytes("UTF-8"))
       println(s"bench json persisted to $outPath")
-    } catch { case e: Throwable => println(s"bench json persist failed: $e") }
+    } catch { case NonFatal(e) => println(s"bench json persist failed: $e") }
     spark.stop()
     // after spark.stop() so no stray INFO/WARN line can land after it
-    println(line)
+    println(contractLine(total, results, sfDir))
+    // a failed query is named and fails the run, as in Verify
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
+  }
+
+  /** The printed key of a query: its registry number, so
+    * `q31_dedup_jaccard` prints as `"31"` (no two registry names share
+    * one); the persisted capture maps each key back to its name. */
+  def queryId(name: String): String =
+    "^q(\\d+)_".r.findFirstMatchIn(name).map(_.group(1)).getOrElse(name)
+
+  // JSON numbers take a '.' decimal point whatever the JVM locale
+  private def num(v: Double, decimals: Int): String =
+    String.format(Locale.ROOT, s"%.${decimals}f", v)
+
+  /** The printed contract line, sized for a ~2,000-byte log tail:
+    * contract fields only, 3-decimal values, queries keyed by
+    * [[queryId]]. Keyed by full name it would not fit: 101 names alone
+    * take ~1.7 KB. */
+  def contractLine(total: Double, results: Seq[(String, Double)], sfDir: String): String = {
+    val qs = results.map { case (k, v) => s""""${queryId(k)}":${num(v, 3)}""" }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
   }
 }

@@ -1840,7 +1840,7 @@ object MarexQueries extends QueryRegistry {
             Seq("time", "ID"), Seq(8, 5), Seq("acc"))),
           newCoords = Map("time" -> Array.tabulate(18)(20013.0 + _)))
         // the two tuples share no primary grid, so each member reads through
-        // its own array scan; the grown time axis is metadata-sized and
+        // its own `var` read; the grown time axis is metadata-sized and
         // joins as a local relation
         def member(v: String) = s.read.format("zarr").option("var", v).load(dir)
           .filter(!isnan(col("value"))).groupBy(col("t_idx").as("time_idx"))

@@ -50,10 +50,10 @@ class NetCdfDataSourceV2 extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     if (options.containsKey("shape") || !options.containsKey("var"))
-      NetCdfTableV2.fullSchema // write intent / var error surfaces in getTable
+      CubeDims.schema(3) // write intent / var error surfaces in getTable
     else if (options.containsKey("rank"))
-      NetCdfTableV2.schemaFor(options.getInt("rank", 3))
-    else NetCdfTableV2.schemaFor(
+      CubeDims.schema(options.getInt("rank", 3))
+    else CubeDims.schema(
       NetCdfTableV2.rankOf(NetCdfTableV2.rawInputs(options), options.get("var")))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -138,7 +138,7 @@ private[sources] class NetCdfWritableTableV2(dir: String, varName: String,
   import org.apache.spark.sql.connector.write._
 
   override def name(): String = s"netcdf-write:$dir#$varName"
-  override def schema(): StructType = NetCdfTableV2.fullSchema
+  override def schema(): StructType = CubeDims.schema(3)
   override def capabilities(): java.util.Set[TableCapability] =
     Set(TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE,
       TableCapability.TRUNCATE).asJava
@@ -222,26 +222,6 @@ private[sources] class NetCdfWritableTableV2(dir: String, varName: String,
 }
 
 private[sources] object NetCdfTableV2 {
-  val fullSchema: StructType = StructType(Seq(
-    StructField("t_idx", IntegerType, nullable = false),
-    StructField("y", IntegerType, nullable = false),
-    StructField("x", IntegerType, nullable = false),
-    StructField("value", DoubleType, nullable = false)))
-
-  /** 2-D (time, cell) variables — the UNSTRUCTURED-grid layout (ICON
-    * meshes, detect.py:18: `extreme_events(time, ncells)`): one flat cell
-    * axis instead of (y, x). Internally cell rides the y machinery with
-    * nx = 1, so file/chunk pruning, metadata aggregates, and streaming all
-    * behave identically; only the schema and pushdown dim names change. */
-  val cellSchema: StructType = StructType(Seq(
-    StructField("t_idx", IntegerType, nullable = false),
-    StructField("cell", IntegerType, nullable = false),
-    StructField("value", DoubleType, nullable = false)))
-
-  def schemaFor(rank: Int): StructType = if (rank == 2) cellSchema else fullSchema
-  def dimsFor(rank: Int): Seq[String] =
-    if (rank == 2) Seq("t_idx", "cell") else Seq("t_idx", "y", "x")
-
   /** Rank of the variable (2 = (time, cell), 3 = (time, y, x)), probed
     * from the FIRST file of the archive; every other file must agree
     * (validated per file in the scan). An archive with no files yet (a
@@ -505,7 +485,7 @@ private[sources] class NetCdfTableV2(rawInputs: Seq[String], varName: String,
   private lazy val enumInfo: Option[Hdf5.EnumType] =
     NetCdfTableV2.enumOf(rawInputs, varName)
   override def schema(): StructType = {
-    val base = NetCdfTableV2.schemaFor(rank)
+    val base = CubeDims.schema(rank)
     // enum variables carry their name map on the value column —
     // df.schema("value").metadata resolves codes to CF flag labels
     enumInfo.fold(base) { e =>
@@ -530,33 +510,18 @@ private[sources] class NetCdfScanBuilder(rawInputs: Seq[String], varName: String
   // chunks), d1 = y — or `cell` on an unstructured 2-D variable — and
   // d2 = x (prune spatial chunks within each file — the reference's
   // regional lat/lon-window mode, track.py:5471)
-  private val dims = NetCdfTableV2.dimsFor(rank)
+  private val dims = CubeDims.names(rank)
   private val lo = Array.fill(3)(Int.MinValue)
   private val hi = Array.fill(3)(Int.MaxValue)
   private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = NetCdfTableV2.schemaFor(rank)
-
-  private def dimOf(attr: String): Int = dims.indexOf(attr)
+  private var required: StructType = CubeDims.schema(rank)
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val accepted = filters.filter {
-      case EqualTo(a, v: Int) if dimOf(a) >= 0 =>
-        val d = dimOf(a); lo(d) = math.max(lo(d), v); hi(d) = math.min(hi(d), v); true
-      case GreaterThan(a, v: Int) if dimOf(a) >= 0 && v != Int.MaxValue =>
-        val d = dimOf(a); lo(d) = math.max(lo(d), v + 1); true
-      case GreaterThanOrEqual(a, v: Int) if dimOf(a) >= 0 =>
-        val d = dimOf(a); lo(d) = math.max(lo(d), v); true
-      case LessThan(a, v: Int) if dimOf(a) >= 0 && v != Int.MinValue =>
-        val d = dimOf(a); hi(d) = math.min(hi(d), v - 1); true
-      case LessThanOrEqual(a, v: Int) if dimOf(a) >= 0 =>
-        val d = dimOf(a); hi(d) = math.min(hi(d), v); true
-      case _ => false
-    }
-    pushed = accepted
     // dim ranges are applied exactly by the readers (file/chunk prune at
     // planning, per-cell bounds at emission); everything else stays a
     // post-scan filter
-    filters.filterNot(accepted.contains)
+    pushed = CubeDims.pushRanges(filters, dims.indexOf, lo, hi)
+    filters.filterNot(pushed.contains)
   }
 
   override def pushedFilters(): Array[Filter] = pushed
@@ -725,7 +690,7 @@ private[sources] class NetCdfScan(rawInputs: Seq[String], varName: String,
       off.toLong <= tHi && off.toLong + m.nt - 1 >= tLo }
 
   override def description(): String = {
-    val dimNames = NetCdfTableV2.dimsFor(rank).padTo(3, "x")
+    val dimNames = CubeDims.names(rank).padTo(3, "x")
     val ranges = (0 until 3).collect {
       case d if lo(d) != Int.MinValue || hi(d) != Int.MaxValue =>
         s"${dimNames(d)} in [${lo(d)}, ${hi(d)}]"

@@ -13,58 +13,60 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-/** Zarr v2/v3 as a first-class Spark DataSourceV2: `spark.read.format("zarr")
-  * .load(dir)` yields `(t_idx INT, y INT, x INT, value DOUBLE)` for a 3-D
-  * (time, y, x) array (v2 `.zarray` or v3 `zarr.json` auto-detected), with
+/** Zarr v2/v3 as a first-class Spark DataSourceV2 — the engine's one
+  * distributed reader of a Zarr store (its `xr.open_zarr`). Every read is
+  * ONE scan, [[ZarrGroupScan]], over a [[ZarrGroupTableV2.Layout]]
+  * resolved once when the table is created:
   *
-  *  - **filter pushdown**: `t_idx` range predicates prune whole chunk FILES
-  *    at planning time — the Zarr analogue of Parquet row-group pruning —
-  *    and the pushed range is visible in `explain()` via the scan
-  *    description;
-  *  - **column pruning**: the reader materializes only the requested
-  *    columns into each `InternalRow`;
-  *  - **one `InputPartition` per chunk file**, so parallelism tracks the
-  *    chunk grid exactly like the reference's Dask graph, on any Hadoop
-  *    filesystem; absent chunk files synthesize `fill_value` cells (Zarr
-  *    writers elide all-fill chunks).
+  *  - a GROUP directory (v2 `.zgroup`/`.zmetadata` or v3 group `zarr.json`)
+  *    loads wide: `<dim>_idx` per primary dimension, the coordinate axes,
+  *    and every data variable as a column;
+  *  - a bare ARRAY directory (v2 `.zarray` or v3 array `zarr.json`), or a
+  *    group member chosen with `.option("var", name)` — the same UX as the
+  *    netcdf source — loads as a one-member group: `(t_idx INT, y INT,
+  *    x INT, value DOUBLE)` for a 3-D (time, y, x) array and `(t_idx INT,
+  *    cell INT, value DOUBLE)` for a 2-D (time, cell) one ([[CubeDims]]).
+  *    Only these stream (`spark.readStream.format("zarr")`,
+  *    [[ZarrMicroBatchStream]]).
   *
-  * A GROUP directory (v2 `.zgroup`/`.zmetadata` or v3 group `zarr.json`)
-  * loads with `.option("var", name)` selecting the member array — the same
-  * UX as the netcdf source — so `spark.read.format("zarr").option("var",
-  * "extreme_events").load(store)` opens an xarray-written dataset member
-  * directly. This scan is the engine's one distributed reader of a Zarr
-  * cube (its `xr.open_zarr`); it decodes chunks through [[ZarrSource]]
+  * The scan pushes range predicates on every dimension column down to
+  * whole-chunk pruning (the Zarr analogue of Parquet row-group pruning,
+  * visible in `explain()` as `<column> in [lo, hi]`), prunes unprojected
+  * member arrays, answers `count(*)`/`min`/`max` of dims from metadata
+  * ([[MetadataAggScan]]), and plans one `InputPartition` per chunk index,
+  * so parallelism tracks the chunk grid like the reference's Dask graph on
+  * any Hadoop filesystem; absent chunk files read as `fill_value` (Zarr
+  * writers elide all-fill chunks). Chunks decode through [[ZarrSource]]
   * ([[Blosc]], zlib, zstd, gzip, crc32c, sharding, raw), whose
   * driver-side `readLocalND` reads small arrays.
   */
 class ZarrDataSourceV2 extends TableProvider with DataSourceRegister {
   override def shortName(): String = "zarr"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val path = Option(options.get("path")).getOrElse(
-      throw new IllegalArgumentException(
-        "zarr source requires a path: spark.read.format(\"zarr\").load(dir)"))
-    // a `dims` option marks WRITE intent (`df.write.format("zarr")`): the
-    // table schema comes from the declared layout, not from store metadata
-    // (the store need not exist yet)
+  // Spark asks one provider instance for inferSchema, then getTable, per
+  // load: a read table (and its layout) is resolved once for both
+  private var lastRead: (java.util.Map[String, String], Table) = (null, null)
+
+  // a `dims` option marks WRITE intent (`df.write.format("zarr")`): the
+  // table schema comes from the declared layout, not from store metadata
+  // (the store need not exist yet); a read's schema is its layout's
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     if (options.containsKey("dims")) ZarrWriteSpec.parse(options).schema
-    else if (ZarrTableV2.isGroupPath(path) && Option(options.get("var")).isEmpty)
-      ZarrGroupTableV2.layout(path).schema
-    else ZarrTableV2.fullSchema
-  }
+    else getTable(null, Array.empty, options.asCaseSensitiveMap()).schema()
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table = {
     val path = Option(properties.get("path")).getOrElse(
       throw new IllegalArgumentException(
         "zarr source requires a path: spark.read.format(\"zarr\").load(dir)"))
-    val varOpt = Option(properties.get("var"))
     if (properties.containsKey("dims"))
       new ZarrWritableTableV2(path,
         ZarrWriteSpec.parse(new CaseInsensitiveStringMap(properties)))
-    else if (ZarrTableV2.isGroupPath(path) && varOpt.isEmpty)
-      new ZarrGroupTableV2(path)
-    else new ZarrTableV2(ZarrTableV2.resolveVar(path, varOpt))
+    else {
+      if (lastRead._1 != properties)
+        lastRead = (properties, ZarrTableV2(path, Option(properties.get("var"))))
+      lastRead._2
+    }
   }
 }
 
@@ -253,32 +255,54 @@ private[sources] class ZarrWritableTableV2(path: String, spec: ZarrWriteSpec)
     }
 }
 
+/** A read table: the layout resolved once from the store's metadata.
+  * Arrays (and `var` members) also stream. */
+private[sources] class ZarrTableV2(lay: ZarrGroupTableV2.Layout, isArray: Boolean)
+    extends Table with SupportsRead {
+  override def name(): String = s"${if (isArray) "zarr" else "zarr-group"}:${lay.dir}"
+  override def schema(): StructType = lay.schema
+  override def capabilities(): java.util.Set[TableCapability] =
+    (if (isArray) Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
+    else Set(TableCapability.BATCH_READ)).asJava
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new ZarrGroupScanBuilder(lay, options.getBoolean("fillMissingTail", false))
+}
+
 private[sources] object ZarrTableV2 {
-  val fullSchema: StructType = StructType(Seq(
-    StructField("t_idx", IntegerType, nullable = false),
-    StructField("y", IntegerType, nullable = false),
-    StructField("x", IntegerType, nullable = false),
-    StructField("value", DoubleType, nullable = false)))
 
-  /** 2-D (time, cell) arrays — the unstructured ICON-mesh layout
-    * (`extreme_events(time, ncells)`): one flat cell axis. Internally the
-    * cell axis rides the y machinery with nx = 1 (shapes/chunks pad), so
-    * chunk pruning, metadata aggregates, and the stream source behave
-    * identically; only the schema and pushdown dim names change. */
-  val cellSchema: StructType = StructType(Seq(
-    StructField("t_idx", IntegerType, nullable = false),
-    StructField("cell", IntegerType, nullable = false),
-    StructField("value", DoubleType, nullable = false)))
+  /** The read table of `path`: a group without `var` reads wide; with
+    * `var`, the named member (validated against the group's metadata for
+    * a listing error) reads as a one-member layout, as does a bare array. */
+  def apply(path: String, varName: Option[String]): ZarrTableV2 = {
+    val conf = org.apache.spark.sql.SparkSession.active
+      .sparkContext.hadoopConfiguration
+    def array(dir: String) =
+      new ZarrTableV2(arrayLayout(dir, ZarrSource.readMetaAny(dir, conf)), isArray = true)
+    varName match {
+      case Some(v) =>
+        val g = ZarrGroup.open(path, conf) // also errors clearly on non-group
+        require(g.members.contains(v),
+          s"no variable '$v' in zarr group $path " +
+            s"(have: ${g.members.keys.toSeq.sorted.mkString(", ")})")
+        array(s"$path/$v")
+      case None if isGroupPath(path) =>
+        new ZarrTableV2(ZarrGroupTableV2.layout(path), isArray = false)
+      case None => array(path)
+    }
+  }
 
-  def schemaFor(rank: Int): StructType = if (rank == 2) cellSchema else fullSchema
-  def dimsFor(rank: Int): Seq[String] =
-    if (rank == 2) Seq("t_idx", "cell") else Seq("t_idx", "y", "x")
-
-  def rankOf(shape: Seq[Int], path: String): Int = {
-    require(shape.length == 2 || shape.length == 3,
+  /** A bare array as a one-member group layout: the [[CubeDims]] columns
+    * index its dimensions and its one data column, `value`, reads the
+    * array directory itself. */
+  def arrayLayout(dir: String, meta: ZarrSource.ZarrMeta): ZarrGroupTableV2.Layout = {
+    require(meta.shape.length == 2 || meta.shape.length == 3,
       s"zarr DSv2 expects a 3-D (time,y,x) or 2-D (time,cell) array at " +
-        s"$path, got shape ${shape.mkString("x")}")
-    shape.length
+        s"$dir, got shape ${meta.shape.mkString("x")}")
+    require(meta.order == "C", "only C-order zarr supported")
+    val dims = CubeDims.names(meta.shape.length)
+    ZarrGroupTableV2.Layout(dir, dims, dims, meta.shape, meta.chunks,
+      coordDims = Nil, dataVars = Seq("value"),
+      members = Map("value" -> ZarrGroupTableV2.Member(dir, meta, dims)))
   }
 
   /** Whether `path` is a zarr GROUP directory (v2 `.zgroup`/`.zmetadata` or
@@ -296,65 +320,29 @@ private[sources] object ZarrTableV2 {
     } else fs.exists(new org.apache.hadoop.fs.Path(path, ".zgroup")) ||
       fs.exists(new org.apache.hadoop.fs.Path(path, ".zmetadata"))
   }
-
-  /** Resolve a load path that may point at a GROUP: with `var`, descend to
-    * that member (validated against the group's metadata for a listing
-    * error); without, require the path to be an array directory (group
-    * paths without `var` route to [[ZarrGroupTableV2]] instead). */
-  def resolveVar(path: String, varName: Option[String]): String = {
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration
-    varName match {
-      case Some(v) =>
-        val g = ZarrGroup.open(path, conf) // also errors clearly on non-group
-        require(g.members.contains(v),
-          s"no variable '$v' in zarr group $path " +
-            s"(have: ${g.members.keys.toSeq.sorted.mkString(", ")})")
-        s"$path/$v"
-      case None =>
-        require(!isGroupPath(path),
-          s"$path is a zarr GROUP — pick a member with .option(\"var\", <name>)")
-        path
-    }
-  }
 }
 
-private[sources] class ZarrTableV2(path: String) extends Table with SupportsRead {
-  private lazy val rank: Int = ZarrTableV2.rankOf(
-    ZarrSource.readMetaAny(path, org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration).shape, path)
-  override def name(): String = s"zarr:$path"
-  override def schema(): StructType = ZarrTableV2.schemaFor(rank)
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ZarrScanBuilder(path, options.getBoolean("fillMissingTail", false), rank)
-}
+/** The cube both array sources expose: a 3-D (time, y, x) variable reads
+  * as `(t_idx, y, x, value)`, a 2-D (time, cell) one — the unstructured
+  * ICON-mesh layout (`extreme_events(time, ncells)`, detect.py:18) — as
+  * `(t_idx, cell, value)`. Range predicates on the dim columns push down
+  * as inclusive per-dim bounds, applied exactly by the readers, so every
+  * scan reports them fully pushed and keeps the rest as post-scan
+  * filters. */
+private[sources] object CubeDims {
+  def names(rank: Int): Seq[String] =
+    if (rank == 2) Seq("t_idx", "cell") else Seq("t_idx", "y", "x")
 
-/** Range predicates on ANY of `t_idx`/`y`/`x` prune whole chunk files on
-  * that dimension — the reference's regional mode (track.py:5471) makes
-  * lat/lon windows a first-class query shape, so a spatial window over a
-  * global archive must not open every spatial chunk. Dim-range predicates
-  * are EXACT at the reader (the cell emitters bound every dimension), so
-  * they are reported fully-pushed — no redundant post-scan filter — which
-  * in turn lets `count(*)` over any dim window collapse to a pure
-  * METADATA answer (grids are dense): zero chunk files are opened. */
-private[sources] class ZarrScanBuilder(path: String, fillMissingTail: Boolean = false,
-    rank: Int = 3)
-    extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
-    with SupportsPushDownAggregates {
-  import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
+  def schema(rank: Int): StructType = StructType(
+    names(rank).map(StructField(_, IntegerType, nullable = false)) :+
+      StructField("value", DoubleType, nullable = false))
 
-  private val dims = ZarrTableV2.dimsFor(rank)
-  private val lo = Array.fill(3)(Int.MinValue)
-  private val hi = Array.fill(3)(Int.MaxValue)
-  private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = ZarrTableV2.schemaFor(rank)
-
-  private def dimOf(attr: String): Int = dims.indexOf(attr)
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val accepted = filters.filter {
+  /** Narrow `lo`/`hi` by every `Int` range predicate on a dim column
+    * (`dimOf(column) >= 0`) and return those accepted. A bound whose
+    * ±1 would overflow is not accepted: it stays a post-scan filter. */
+  def pushRanges(filters: Array[Filter], dimOf: String => Int,
+      lo: Array[Int], hi: Array[Int]): Array[Filter] =
+    filters.filter {
       case EqualTo(a, v: Int) if dimOf(a) >= 0 =>
         val d = dimOf(a); lo(d) = math.max(lo(d), v); hi(d) = math.min(hi(d), v); true
       case GreaterThan(a, v: Int) if dimOf(a) >= 0 && v != Int.MaxValue =>
@@ -366,54 +354,6 @@ private[sources] class ZarrScanBuilder(path: String, fillMissingTail: Boolean = 
       case LessThanOrEqual(a, v: Int) if dimOf(a) >= 0 =>
         val d = dimOf(a); hi(d) = math.min(hi(d), v); true
       case _ => false
-    }
-    pushed = accepted
-    // dim ranges are applied exactly by the readers; everything else
-    // (value predicates, nulls, …) stays a post-scan filter
-    filters.filterNot(accepted.contains)
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
-
-  /** `count(*)`, `min(<dim>)`, and `max(<dim>)` — ungrouped or GROUPED BY
-    * dim columns — over a dense grid are all dataspace facts: the count is
-    * the product of the clamped dim ranges (per group: of the non-group
-    * dims), and a dim's extremes ARE its clamped bounds. */
-  private var pushedAgg: Option[(Seq[Int], Seq[MetaAgg])] = None
-
-  private def clampedBounds(): (Array[Int], Array[Int]) = {
-    val meta = ZarrSource.readMetaAny(path,
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
-    require(meta.shape.length == rank,
-      s"zarr agg scan expects $rank-D, got ${meta.shape}")
-    ((0 until rank).map(d => math.max(lo(d), 0)).toArray,
-      (0 until rank).map(d =>
-        math.min(hi(d).toLong, meta.shape(d) - 1L).toInt).toArray)
-  }
-
-  private def metaAggsOf(agg: Aggregation): Option[(Seq[Int], Seq[MetaAgg])] =
-    MetaAgg.parseGrouped(agg, dims).filter { case (groups, _) =>
-      MetadataAggScan.withinBudget(groups, Seq(clampedBounds()))
-    }
-
-  override def supportCompletePushDown(agg: Aggregation): Boolean =
-    metaAggsOf(agg).isDefined
-
-  override def pushAggregation(agg: Aggregation): Boolean = {
-    pushedAgg = metaAggsOf(agg)
-    pushedAgg.isDefined
-  }
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan =
-    pushedAgg match {
-      case Some((groups, aggs)) =>
-        new MetadataAggScan(s"zarr:$path", groups.map(dims), aggs,
-          () => MetadataAggScan.aggRows(groups, aggs, Seq(clampedBounds())))
-      case None =>
-        new ZarrScan(path, lo.clone(), hi.clone(), required, fillMissingTail, rank)
     }
 }
 
@@ -594,102 +534,6 @@ private[sources] object MetadataAggScan {
   }
 }
 
-private[sources] case class ZarrChunkPartition(
-    ci: Int, cj: Int, ck: Int, filePath: String) extends InputPartition // filePath "" → missing chunk
-
-private[sources] class ZarrScan(path: String, lo: Array[Int], hi: Array[Int],
-    required: StructType, fillMissingTail: Boolean = false, rank: Int = 3)
-    extends Scan with Batch with SupportsReportStatistics {
-
-  private val dimNames = ZarrTableV2.dimsFor(rank).padTo(3, "x")
-
-  override def readSchema(): StructType = required
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ZarrMicroBatchStream(path, required, fillMissingTail, rank)
-
-  /** Post-prune dense cell count + projected width, so Catalyst can
-    * broadcast small windows of huge stores on its own. */
-  override def estimateStatistics(): Statistics = {
-    val meta = readDirMeta(org.apache.spark.sql.SparkSession.active)
-    val shape3 = meta.shape.padTo(3, 1)
-    val rows = (0 until 3).map { d =>
-      math.max(0L, math.min(hi(d).toLong, shape3(d) - 1L) -
-        math.max(lo(d).toLong, 0L) + 1)
-    }.product
-    val bytes = math.max(1L, rows * math.max(required.defaultSize, 1))
-    new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
-      override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(rows)
-    }
-  }
-
-  override def description(): String = {
-    val ranges = (0 until 3).collect {
-      case d if lo(d) != Int.MinValue || hi(d) != Int.MaxValue =>
-        s"${dimNames(d)} in [${lo(d)}, ${hi(d)}]"
-    }
-    s"ZarrScan(path=$path, pushed=${if (ranges.isEmpty) "none" else ranges.mkString(", ")}, " +
-      s"columns=${required.fieldNames.mkString(",")})"
-  }
-
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val meta = readDirMeta(spark)
-    val shape3 = meta.shape.padTo(3, 1)
-    val chunks3 = meta.chunks.padTo(3, 1)
-    // per-dimension chunk prune: a chunk survives only if its index range
-    // intersects the pushed range on EVERY dimension
-    def keep(d: Int, c: Int): Boolean = {
-      val first = c.toLong * chunks3(d)
-      first <= math.min(hi(d).toLong, shape3(d) - 1L) &&
-        first + chunks3(d) - 1 >= math.max(lo(d).toLong, 0L)
-    }
-    val nC = (0 until 3).map(d => (shape3(d) + chunks3(d) - 1) / chunks3(d))
-
-    // chunk KEYS carry the stored rank (a 2-D store names chunks "ci.cj" /
-    // "c/t/c"); indices pad to the 3-axis planner grid like the shape
-    val glob = ZarrSource.chunkGlob(meta, path, rank)
-    val gp = new org.apache.hadoop.fs.Path(glob)
-    val fs = gp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val present = Option(fs.globStatus(gp)).map(_.toSeq).getOrElse(Seq.empty)
-      .flatMap { st =>
-        ZarrSource.parseChunkKey(meta, st.getPath.toString, rank)
-          .map { ci0 =>
-            val ci = ci0.padTo(3, 0)
-            (ci(0), ci(1), ci(2)) -> st.getPath.toString
-          }
-      }.toMap
-
-    val parts = (for {
-      ci <- 0 until nC(0) if keep(0, ci)
-      cj <- 0 until nC(1) if keep(1, cj)
-      ck <- 0 until nC(2) if keep(2, ck)
-    } yield ZarrChunkPartition(ci, cj, ck,
-      present.getOrElse((ci, cj, ck), ""))).toArray[InputPartition]
-    ChunkBundles.bundle(parts,
-      chunks3.map(_.toLong).product * ZarrSource.bytesPer(meta.dtype))
-  }
-
-  private def readDirMeta(spark: org.apache.spark.sql.SparkSession): ZarrSource.ZarrMeta = {
-    val meta = ZarrSource.readMetaAny(path, spark.sparkContext.hadoopConfiguration)
-    require(meta.shape.length == rank,
-      s"zarr DSv2 expects a $rank-D array at $path, got ${meta.shape}")
-    require(meta.order == "C", "only C-order zarr supported")
-    meta
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val meta = readDirMeta(spark)
-    new ZarrReaderFactory(meta, lo, hi, required.fieldNames,
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
-  }
-}
-
 /** Offset = how many leading time slices of the growing array are
   * committed (zarr appends along time by enlarging `shape[0]`). */
 private[sources] case class ZarrNtOffset(nt: Int)
@@ -697,31 +541,25 @@ private[sources] case class ZarrNtOffset(nt: Int)
   override def json(): String = s"""{"nt": $nt}"""
 }
 
-/** A chunk re-planned for one micro-batch, with the batch's time bounds —
-  * a chunk STRADDLING the previous offset is legitimately re-read, and
-  * the bounds confine it to the new slices only. */
-private[sources] case class ZarrStreamChunkPartition(ci: Int, cj: Int, ck: Int,
-    filePath: String, lt0: Int, lt1: Int,
-    meta: ZarrSource.ZarrMeta) extends InputPartition
-
 /** `spark.readStream.format("zarr")` over a growing zarr ARRAY — the
   * reference's production stores append new days by enlarging the time
   * dimension in place (to_zarr(append_dim="time")). Each micro-batch
   * re-reads the array metadata; slices beyond the committed offset are
-  * planned as their covering chunks, bounded to the fresh time range so a
-  * partially-committed edge chunk never re-delivers old slices. */
-private[sources] class ZarrMicroBatchStream(path: String, required: StructType,
-    fillMissingTail: Boolean = false, rank: Int = 3)
+  * planned as their covering chunk indices and read by the batch scan's
+  * reader, bounded to the fresh time range so a partially-committed edge
+  * chunk never re-delivers old slices. */
+private[sources] class ZarrMicroBatchStream(lay: ZarrGroupTableV2.Layout,
+    required: StructType, fillMissingTail: Boolean)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
   private def spark = org.apache.spark.sql.SparkSession.active
+  private val rank = lay.shape.length
 
   private def metaNow(): ZarrSource.ZarrMeta = {
-    val m = ZarrSource.readMetaAny(path, spark.sparkContext.hadoopConfiguration)
+    val m = ZarrSource.readMetaAny(lay.dir, spark.sparkContext.hadoopConfiguration)
     require(m.shape.length == rank,
-      s"zarr stream expects a $rank-D array at $path, got ${m.shape}")
-    require(m.order == "C", "only C-order zarr supported")
+      s"zarr stream expects a $rank-D array at ${lay.dir}, got ${m.shape}")
     m
   }
 
@@ -748,7 +586,9 @@ private[sources] class ZarrMicroBatchStream(path: String, required: StructType,
     * Residual caveat: a store whose FINAL row elides some chunks on
     * purpose holds that one row back until a later append lands — opt out
     * with `.option("fillMissingTail", "true")` to trust the metadata
-    * shape (pre-cap behavior). */
+    * shape (pre-cap behavior). This is the one walk of the present chunk
+    * files: the reader opens each planned chunk and reads an absent one
+    * as fill. */
   override def latestOffset(): Offset = {
     val meta = metaNow()
     val ntMeta = meta.shape.head
@@ -757,7 +597,7 @@ private[sources] class ZarrMicroBatchStream(path: String, required: StructType,
     val Seq(ct, cy, cx) = meta.chunks.padTo(3, 1)
     val nyC = (shape3(1) + cy - 1) / cy
     val nxC = (shape3(2) + cx - 1) / cx
-    val glob = ZarrSource.chunkGlob(meta, path, rank)
+    val glob = ZarrSource.chunkGlob(meta, lay.dir, rank)
     val gp = new org.apache.hadoop.fs.Path(glob)
     val fs = gp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val present: Set[(Int, Int, Int)] =
@@ -788,163 +628,21 @@ private[sources] class ZarrMicroBatchStream(path: String, required: StructType,
     val meta = metaNow()
     require(meta.shape.head >= e,
       s"zarr stream: the array shrank below the committed offset ($e > ${meta.shape.head})")
-    val Seq(_, ny, nx) = meta.shape.padTo(3, 1)
-    val Seq(ct, cy, cx) = meta.chunks.padTo(3, 1)
-    val nyC = (ny + cy - 1) / cy
-    val nxC = (nx + cx - 1) / cx
-    def keepT(ci: Int): Boolean = ci * ct <= e - 1 && ci * ct + ct - 1 >= s
-
-    val glob = ZarrSource.chunkGlob(meta, path, rank)
-    val gp = new org.apache.hadoop.fs.Path(glob)
-    val fs = gp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val present = Option(fs.globStatus(gp)).map(_.toSeq).getOrElse(Seq.empty)
-      .flatMap { st =>
-        ZarrSource.parseChunkKey(meta, st.getPath.toString, rank)
-          .map { ci0 =>
-            val ci = ci0.padTo(3, 0)
-            (ci(0), ci(1), ci(2)) -> st.getPath.toString
-          }
-      }.toMap
-
-    (for {
-      ci <- 0 until (e + ct - 1) / ct if keepT(ci)
-      cj <- 0 until nyC
-      ck <- 0 until nxC
-    } yield ZarrStreamChunkPartition(ci, cj, ck,
-      present.getOrElse((ci, cj, ck), ""), s, e - 1, meta)).toArray[InputPartition]
+    val ct = meta.chunks.head
+    ZarrGroup.gridIndices(ZarrGroup.chunkGridOf(meta).updated(0, (e + ct - 1) / ct))
+      .filter(ci => ci.head * ct + ct - 1 >= s)
+      .map(ci => ZarrGroupChunkPartition(ci, s, e - 1): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val columns = required.fieldNames
-    new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-        val p = partition.asInstanceOf[ZarrStreamChunkPartition]
-        // delegate to the batch chunk reader with the batch's time bounds
-        new ZarrReaderFactory(p.meta,
-          Array(p.lt0, Int.MinValue, Int.MinValue),
-          Array(p.lt1, Int.MaxValue, Int.MaxValue), columns, conf)
-          .createReader(ZarrChunkPartition(p.ci, p.cj, p.ck, p.filePath))
-      }
-    }
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    ZarrGroupScan.readerFactory(ZarrTableV2.arrayLayout(lay.dir, metaNow()),
+      Array.fill(rank)(Int.MinValue), Array.fill(rank)(Int.MaxValue), required)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-private[sources] class ZarrReaderFactory(meta: ZarrSource.ZarrMeta,
-    lo: Array[Int], hi: Array[Int], columns: Array[String],
-    conf: SerializableConfiguration) extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    partition match {
-      case BundledPartition(ps) => return ChunkBundles.reader(ps, createReader)
-      case _ =>
-    }
-    val part = partition.asInstanceOf[ZarrChunkPartition]
-    new PartitionReader[InternalRow] {
-      // a 2-D (time, cell) store pads to the 3-axis loop with nx = cx = 1;
-      // products are unchanged, so decode lengths and flat indexing hold
-      private val Seq(nt, ny, nx) = meta.shape.padTo(3, 1)
-      private val Seq(ct, cy, cx) = meta.chunks.padTo(3, 1)
-      private val bp = ZarrSource.bytesPer(meta.dtype)
-      private val t0 = math.max(lo(0), 0); private val t1 = math.min(hi(0), nt - 1)
-      private val y0 = math.max(lo(1), 0); private val y1 = math.min(hi(1), ny - 1)
-      private val x0 = math.max(lo(2), 0); private val x1 = math.min(hi(2), nx - 1)
-
-      private val raw: Array[Byte] =
-        if (part.filePath.isEmpty) null
-        else {
-          val p = new org.apache.hadoop.fs.Path(part.filePath)
-          val fs = p.getFileSystem(conf.value)
-          val in = fs.open(p)
-          try {
-            val len = fs.getFileStatus(p).getLen
-            meta.shard match {
-              case Some(s) =>
-                // sharded object: positioned reads fetch the index + ONLY
-                // the inner chunks the pushed window intersects — cells of
-                // skipped inner chunks stay fill, and the cell walk below
-                // never leaves the window, so the padding is unobservable
-                val (loL, hiL) = ZarrSource.localWindow(
-                  Array(t0, y0, x0), Array(t1, y1, x1),
-                  Seq(part.ci, part.cj, part.ck), Seq(ct, cy, cx),
-                  s.innerChunks.length)
-                ZarrSource.readShardWindow(ZarrSource.positionedReader(in),
-                  len, meta, s, ct * cy * cx * bp, loL, hiL)
-              case None =>
-                val b = new Array[Byte](len.toInt)
-                in.readFully(0, b, 0, b.length)
-                ZarrSource.decodeChunk(b, meta, ct * cy * cx * bp)
-            }
-          } finally in.close()
-        }
-      private val buf =
-        if (raw == null) null
-        else ByteBuffer.wrap(raw).order(ZarrSource.byteOrderOf(meta.dtype))
-
-      private var i = -1
-      private var t = 0; private var yy = 0; private var xx = 0; private var v = 0.0
-      private val n = ct * cy * cx
-
-      override def next(): Boolean = {
-        while ({ i += 1; i < n }) {
-          t = part.ci * ct + i / (cy * cx)
-          yy = part.cj * cy + (i / cx) % cy
-          xx = part.ck * cx + i % cx
-          if (t >= t0 && t <= t1 && yy >= y0 && yy <= y1 && xx >= x0 && xx <= x1) {
-            // CF decode at emission (scale_factor/add_offset/_FillValue),
-            // exactly like the netcdf scan — raw stored values never leak
-            v =
-              if (raw == null) meta.decodedFill
-              else meta.cfDecode(ZarrSource.cellValue(raw, buf, meta.dtype, i, bp))
-            return true
-          }
-        }
-        false
-      }
-
-      // the scan's inner loop: column dispatch resolved ONCE (no per-row
-      // string matching / Seq allocation) into a reused row buffer —
-      // Spark's scan-exec projection copies each row out, so reuse is the
-      // standard V2 reader pattern
-      private val colCodes: Array[Int] = columns.map {
-        case "t_idx" => 0
-        case "y" | "cell" => 1 // unstructured: flat cell axis rides y
-        case "x" => 2
-        case "value" => 3
-        case other => throw new IllegalStateException(s"unknown column $other")
-      }
-      private val rowVals = new Array[Any](colCodes.length)
-      private val row = new org.apache.spark.sql.catalyst.expressions
-        .GenericInternalRow(rowVals)
-
-      override def get(): InternalRow = {
-        var k = 0
-        while (k < colCodes.length) {
-          rowVals(k) = colCodes(k) match {
-            case 0 => t
-            case 1 => yy
-            case 2 => xx
-            case _ => v
-          }
-          k += 1
-        }
-        row
-      }
-
-      override def close(): Unit = ()
-    }
-  }
-}
-
-// ═══════════════════════════════════════════════════════════════════════════
-// GROUP scan: `spark.read.format("zarr").load(groupDir)` with NO `var`
-// option reads the whole dataset wide — the SQL-facing `xr.open_zarr`.
-// ═══════════════════════════════════════════════════════════════════════════
-
-/** Read plan of a group resolved once at table creation: the primary
+/** Read plan resolved once at table creation. For a GROUP: the primary
   * (maximal-rank) dim tuple and its shared chunk grid, the dimension
   * coordinates, and the variable split. The schema is xarray's Dataset
   * flattened: `<dim>_idx INT …` per primary dimension, `<dim> DOUBLE …`
@@ -953,7 +651,8 @@ private[sources] class ZarrReaderFactory(meta: ZarrSource.ZarrMeta,
   * variable's dims must be a subset of the primary tuple, and the primary
   * variables must share one chunk grid; a group that mixes unrelated dim
   * tuples (a tracker output) is read member by member with
-  * `.option("var", name)` instead. */
+  * `.option("var", name)` instead. A bare ARRAY is the one-member layout
+  * of [[ZarrTableV2.arrayLayout]]. */
 private[sources] object ZarrGroupTableV2 {
 
   /** Driver-side-materialization bound for coordinate axes and lower-rank
@@ -963,14 +662,17 @@ private[sources] object ZarrGroupTableV2 {
     * it with `.option("var", name)` and join it on its dim indices. */
   val SmallArrayCells: Long = 16L * 1024 * 1024
 
-  final case class Layout(dir: String, primaryDims: Seq[String],
+  /** One array the scan reads: its directory, metadata and dim names. */
+  final case class Member(dir: String, meta: ZarrSource.ZarrMeta, dims: Seq[String])
+
+  /** `dimCols` names the column of each primary dimension; `members`
+    * holds every data variable and coordinate axis by column name. */
+  final case class Layout(dir: String, primaryDims: Seq[String], dimCols: Seq[String],
       shape: Seq[Int], chunks: Seq[Int], coordDims: Seq[String],
-      dataVars: Seq[String], varMeta: Map[String, ZarrSource.ZarrMeta],
-      varDims: Map[String, Seq[String]],
-      coordMeta: Map[String, ZarrSource.ZarrMeta]) {
-    def isPrimary(v: String): Boolean = varDims(v) == primaryDims
+      dataVars: Seq[String], members: Map[String, Member]) {
+    def isPrimary(v: String): Boolean = members(v).dims == primaryDims
     def schema: StructType = StructType(
-      primaryDims.map(d => StructField(s"${d}_idx", IntegerType, nullable = false)) ++
+      dimCols.map(StructField(_, IntegerType, nullable = false)) ++
         coordDims.map(d => StructField(d, DoubleType, nullable = true)) ++
         dataVars.map(v => StructField(v, DoubleType, nullable = !isPrimary(v))))
   }
@@ -997,75 +699,54 @@ private[sources] object ZarrGroupTableV2 {
       require(v.meta.order == "C", "only C-order zarr supported")
     }
     val coordDims = primaryDims.filter(g.coordNames)
-    Layout(dir, primaryDims, headMeta.shape, headMeta.chunks, coordDims,
-      wanted, members.map(v => v.name -> v.meta).toMap,
-      members.map(v => v.name -> v.dims).toMap,
-      coordDims.map(d => d -> g.members(d).meta).toMap)
+    Layout(dir, primaryDims, primaryDims.map(d => s"${d}_idx"), headMeta.shape,
+      headMeta.chunks, coordDims, wanted,
+      (members ++ coordDims.map(g.members)).map(v =>
+        v.name -> Member(s"$dir/${v.name}", v.meta, v.dims)).toMap)
   }
 }
 
-private[sources] class ZarrGroupTableV2(path: String) extends Table with SupportsRead {
-  private val lay = ZarrGroupTableV2.layout(path)
-  override def name(): String = s"zarr-group:$path"
-  override def schema(): StructType = lay.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ZarrGroupScanBuilder(lay)
-}
-
-/** Pushdown: range predicates on ANY `<dim>_idx` column prune whole chunk
-  * files on that dimension (the multi-dim generalization of the array
-  * scan's t_idx prune); column pruning drops entire member ARRAYS from the
-  * read — an unprojected variable's chunk files are never opened. Dim
-  * ranges are exact at the reader, so they report fully pushed, and an
-  * ungrouped `count(*)` collapses to a metadata-only answer. */
-private[sources] class ZarrGroupScanBuilder(lay: ZarrGroupTableV2.Layout)
+/** Pushdown: range predicates on ANY dim column prune whole chunk files
+  * on that dimension — the reference's regional mode (track.py:5471) makes
+  * lat/lon windows a first-class query shape, so a spatial window over a
+  * global archive must not open every spatial chunk; column pruning drops
+  * entire member ARRAYS from the read — an unprojected variable's chunk
+  * files are never opened. Dim ranges are exact at the reader, so they
+  * report fully pushed, and `count(*)`, `min(<dim>)` and `max(<dim>)`
+  * over any dim window collapse to a metadata-only answer. */
+private[sources] class ZarrGroupScanBuilder(lay: ZarrGroupTableV2.Layout,
+    fillMissingTail: Boolean)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates {
   import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 
-  private val lo = Array.fill(lay.primaryDims.length)(Int.MinValue)
-  private val hi = Array.fill(lay.primaryDims.length)(Int.MaxValue)
+  private val lo = Array.fill(lay.dimCols.length)(Int.MinValue)
+  private val hi = Array.fill(lay.dimCols.length)(Int.MaxValue)
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = lay.schema
 
-  private def dimOf(attr: String): Int =
-    lay.primaryDims.indexWhere(d => s"${d}_idx" == attr)
-
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val accepted = filters.filter {
-      case EqualTo(a, v: Int) if dimOf(a) >= 0 =>
-        val d = dimOf(a); lo(d) = math.max(lo(d), v); hi(d) = math.min(hi(d), v); true
-      case GreaterThan(a, v: Int) if dimOf(a) >= 0 && v != Int.MaxValue =>
-        val d = dimOf(a); lo(d) = math.max(lo(d), v + 1); true
-      case GreaterThanOrEqual(a, v: Int) if dimOf(a) >= 0 =>
-        val d = dimOf(a); lo(d) = math.max(lo(d), v); true
-      case LessThan(a, v: Int) if dimOf(a) >= 0 && v != Int.MinValue =>
-        val d = dimOf(a); hi(d) = math.min(hi(d), v - 1); true
-      case LessThanOrEqual(a, v: Int) if dimOf(a) >= 0 =>
-        val d = dimOf(a); hi(d) = math.min(hi(d), v); true
-      case _ => false
-    }
-    pushed = accepted
-    // dim ranges are applied exactly by the reader; the rest stays post-scan
-    filters.filterNot(accepted.contains)
+    pushed = CubeDims.pushRanges(filters, lay.dimCols.indexOf, lo, hi)
+    filters.filterNot(pushed.contains)
   }
 
   override def pushedFilters(): Array[Filter] = pushed
 
+  /** `count(*)`, `min(<dim>)`, and `max(<dim>)` — ungrouped or GROUPED BY
+    * dim columns — over a dense grid are all dataspace facts: the count is
+    * the product of the clamped dim ranges (per group: of the non-group
+    * dims), and a dim's extremes ARE its clamped bounds. */
   private var pushedAgg: Option[(Seq[Int], Seq[MetaAgg])] = None
 
   private def clampedBounds(): (Array[Int], Array[Int]) =
-    (lay.primaryDims.indices.map(d => math.max(lo(d), 0)).toArray,
-      lay.primaryDims.indices
+    (lay.dimCols.indices.map(d => math.max(lo(d), 0)).toArray,
+      lay.dimCols.indices
         .map(d => math.min(hi(d).toLong, lay.shape(d) - 1L).toInt).toArray)
 
   private def metaAggsOf(agg: Aggregation): Option[(Seq[Int], Seq[MetaAgg])] =
-    MetaAgg.parseGrouped(agg, lay.primaryDims.map(d => s"${d}_idx"))
-      .filter { case (groups, _) =>
-        MetadataAggScan.withinBudget(groups, Seq(clampedBounds()))
-      }
+    MetaAgg.parseGrouped(agg, lay.dimCols).filter { case (groups, _) =>
+      MetadataAggScan.withinBudget(groups, Seq(clampedBounds()))
+    }
 
   override def supportCompletePushDown(agg: Aggregation): Boolean =
     metaAggsOf(agg).isDefined
@@ -1081,44 +762,53 @@ private[sources] class ZarrGroupScanBuilder(lay: ZarrGroupTableV2.Layout)
   override def build(): Scan =
     pushedAgg match {
       case Some((groups, aggs)) =>
-        val (loC, hiC) = clampedBounds()
-        new MetadataAggScan(s"zarr-group:${lay.dir}",
-          groups.map(d => s"${lay.primaryDims(d)}_idx"), aggs,
-          () => MetadataAggScan.aggRows(groups, aggs, Seq((loC, hiC))))
-      case None => new ZarrGroupScan(lay, lo.clone(), hi.clone(), required)
+        val block = clampedBounds()
+        new MetadataAggScan(s"zarr:${lay.dir}", groups.map(lay.dimCols), aggs,
+          () => MetadataAggScan.aggRows(groups, aggs, Seq(block)))
+      case None =>
+        new ZarrGroupScan(lay, lo.clone(), hi.clone(), required, fillMissingTail)
     }
 }
 
-private[sources] case class ZarrGroupChunkPartition(ci: Seq[Int]) extends InputPartition
+/** One chunk index of the primary grid; a micro-batch narrows its time
+  * range to `[t0, t1]`. */
+private[sources] case class ZarrGroupChunkPartition(ci: Seq[Int],
+    t0: Int = Int.MinValue, t1: Int = Int.MaxValue) extends InputPartition
 
 /** Per-required-column read instruction, resolved once in the factory. */
 private[sources] sealed trait ZGCol extends Serializable
 private[sources] case class ZGDimIdx(d: Int) extends ZGCol
 private[sources] case class ZGCoord(d: Int, values: Array[Double]) extends ZGCol
-private[sources] case class ZGPrimary(k: Int) extends ZGCol // index into decoded list
+private[sources] case class ZGPrimary(k: Int) extends ZGCol // index into the read members
 private[sources] case class ZGSecondary(dimPos: Array[Int], strides: Array[Long],
     shape: Array[Int], values: Array[Double]) extends ZGCol
 
-/** Execution shape: the primary chunk GRID is the task manifest — one
-  * input partition per outer chunk index (bundled when small) opens that
-  * chunk of EVERY projected primary variable through the Hadoop FS API and
-  * emits wide rows directly. Reading V variables therefore costs zero
-  * shuffles and zero row-level joins (vs the naive per-variable read +
-  * V-way join on the dim columns, which shuffles the full corpus V times
-  * at 100 TB). Coordinate axes and lower-rank variables (1-D axes, 2-D
-  * masks) are decoded once on the driver ([[ZarrGroup.readWholeArray]])
-  * and ride the reader factory; rows look them up by dim index. Missing
-  * chunk files read as `fill_value`, matching `write_empty_chunks=False`
-  * writers; every value is CF-decoded per member. */
+/** The one Zarr scan. Execution shape: the primary chunk GRID is the task
+  * manifest — one input partition per chunk index (bundled when small)
+  * opens that chunk of EVERY projected primary variable through the Hadoop
+  * FS API and emits wide rows directly. Reading V variables therefore
+  * costs zero shuffles and zero row-level joins (vs the naive per-variable
+  * read + V-way join on the dim columns, which shuffles the full corpus V
+  * times at 100 TB); a bare array is the V = 1 case. Coordinate axes and
+  * lower-rank variables (1-D axes, 2-D masks) are decoded once at
+  * planning ([[ZarrGroup.readWholeArray]]) and ride the reader factory; rows
+  * look them up by dim index. Missing chunk files read as `fill_value`,
+  * matching `write_empty_chunks=False` writers; every value is CF-decoded
+  * per member. */
 private[sources] class ZarrGroupScan(lay: ZarrGroupTableV2.Layout,
-    lo: Array[Int], hi: Array[Int], required: StructType)
+    lo: Array[Int], hi: Array[Int], required: StructType, fillMissingTail: Boolean)
     extends Scan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
 
-  /** Post-prune dense cell count across every pushed dimension range. */
+  override def toMicroBatchStream(checkpointLocation: String)
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+    new ZarrMicroBatchStream(lay, required, fillMissingTail)
+
+  /** Post-prune dense cell count across every pushed dimension range, so
+    * Catalyst can broadcast small windows of huge stores on its own. */
   override def estimateStatistics(): Statistics = {
-    val rows = lay.primaryDims.indices.map { d =>
+    val rows = lay.dimCols.indices.map { d =>
       math.max(0L, math.min(hi(d).toLong, lay.shape(d) - 1L) -
         math.max(lo(d).toLong, 0L) + 1)
     }.product
@@ -1130,9 +820,9 @@ private[sources] class ZarrGroupScan(lay: ZarrGroupTableV2.Layout,
   }
 
   override def description(): String = {
-    val ranges = lay.primaryDims.indices.collect {
+    val ranges = lay.dimCols.indices.collect {
       case d if lo(d) != Int.MinValue || hi(d) != Int.MaxValue =>
-        s"${lay.primaryDims(d)}_idx in [${math.max(lo(d), 0)}, " +
+        s"${lay.dimCols(d)} in [${math.max(lo(d), 0)}, " +
           s"${math.min(hi(d), lay.shape(d) - 1)}]"
     }
     s"ZarrGroupScan(path=${lay.dir}, " +
@@ -1147,59 +837,68 @@ private[sources] class ZarrGroupScan(lay: ZarrGroupTableV2.Layout,
       (lay.shape(d) + lay.chunks(d) - 1) / lay.chunks(d))
     val parts = ZarrGroup.gridIndices(nChunks)
       .filter { ci =>
-        lay.primaryDims.indices.forall { d =>
+        lay.shape.indices.forall { d =>
           val first = ci(d) * lay.chunks(d)
           first <= hi(d) && first + lay.chunks(d) - 1 >= lo(d)
         }
       }
       .map(ci => ZarrGroupChunkPartition(ci): InputPartition).toArray
-    // decoded bytes per chunk ≈ cells × 8 (doubles) × projected primary vars
-    val nPrimary = math.max(1, required.fieldNames.count(n =>
-      lay.dataVars.contains(n) && lay.isPrimary(n)))
-    ChunkBundles.bundle(parts,
-      lay.chunks.map(_.toLong).product * 8L * nPrimary)
+    // decoded bytes per chunk: one raw chunk per projected primary
+    // variable (the first one's when none is projected)
+    val primary = lay.dataVars.filter(lay.isPrimary)
+    val read = primary.filter(required.fieldNames.contains)
+    ChunkBundles.bundle(parts, lay.chunks.map(_.toLong).product *
+      (if (read.isEmpty) primary.take(1) else read)
+        .map(v => ZarrSource.bytesPer(lay.members(v).meta.dtype).toLong).sum)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(lay.dir).getFileSystem(hconf)
-    def loadSmall(name: String, meta: ZarrSource.ZarrMeta): Array[Double] = {
-      val cells = meta.shape.map(_.toLong).product
+  override def createReaderFactory(): PartitionReaderFactory =
+    ZarrGroupScan.readerFactory(lay, lo, hi, required)
+}
+
+private[sources] object ZarrGroupScan {
+
+  /** The reader factory over `lay` for the `required` columns, bounded to
+    * the pushed `[lo, hi]`: each column is resolved ONCE, so unprojected
+    * variables never load. */
+  def readerFactory(lay: ZarrGroupTableV2.Layout, lo: Array[Int], hi: Array[Int],
+      required: StructType): ZarrGroupReaderFactory = {
+    val hconf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
+    def loadSmall(name: String): Array[Double] = {
+      val m = lay.members(name)
+      val cells = m.meta.shape.map(_.toLong).product
       require(cells <= ZarrGroupTableV2.SmallArrayCells,
-        s"member '$name' (${meta.shape.mkString("×")} cells) is too large to " +
+        s"member '$name' (${m.meta.shape.mkString("×")} cells) is too large to " +
           s"materialize in the zarr group scan — read it on its own with " +
           s"spark.read.format(\"zarr\").option(\"var\", \"$name\") and join")
-      meta.cfDecodeAll(ZarrGroup.readWholeArray(fs, s"${lay.dir}/$name", meta))
+      val fs = new org.apache.hadoop.fs.Path(m.dir).getFileSystem(hconf)
+      m.meta.cfDecodeAll(ZarrGroup.readWholeArray(fs, m.dir, m.meta))
     }
-    // resolve each required column ONCE; unprojected variables never load
     val primaryNeeded = required.fieldNames.filter(n =>
       lay.dataVars.contains(n) && lay.isPrimary(n)).toSeq
     val cols: Array[ZGCol] = required.fieldNames.map { n =>
-      val dimIdx = lay.primaryDims.indexWhere(d => s"${d}_idx" == n)
+      val dimIdx = lay.dimCols.indexOf(n)
       if (dimIdx >= 0) ZGDimIdx(dimIdx)
       else if (lay.coordDims.contains(n))
-        ZGCoord(lay.primaryDims.indexOf(n), loadSmall(n, lay.coordMeta(n)))
+        ZGCoord(lay.primaryDims.indexOf(n), loadSmall(n))
       else if (lay.isPrimary(n)) ZGPrimary(primaryNeeded.indexOf(n))
       else {
-        val meta = lay.varMeta(n)
-        val dims = lay.varDims(n)
-        val strides = new Array[Long](dims.length)
+        val m = lay.members(n)
+        val strides = new Array[Long](m.dims.length)
         var s = 1L
-        for (d <- (dims.length - 1) to 0 by -1) { strides(d) = s; s *= meta.shape(d) }
-        ZGSecondary(dims.map(lay.primaryDims.indexOf).toArray, strides,
-          meta.shape.toArray, loadSmall(n, meta))
+        for (d <- (m.dims.length - 1) to 0 by -1) { strides(d) = s; s *= m.meta.shape(d) }
+        ZGSecondary(m.dims.map(lay.primaryDims.indexOf).toArray, strides,
+          m.meta.shape.toArray, loadSmall(n))
       }
     }
-    new ZarrGroupReaderFactory(lay.dir, lay.shape.toArray, lay.chunks.toArray,
-      primaryNeeded.map(n => (n, lay.varMeta(n))), cols, lo, hi,
-      new SerializableConfiguration(hconf))
+    new ZarrGroupReaderFactory(lay.shape.toArray, lay.chunks.toArray,
+      primaryNeeded.map(lay.members), cols, lo, hi, new SerializableConfiguration(hconf))
   }
 }
 
-private[sources] class ZarrGroupReaderFactory(dir: String, shape: Array[Int],
-    chunks: Array[Int], primaryVars: Seq[(String, ZarrSource.ZarrMeta)],
-    cols: Array[ZGCol], lo: Array[Int], hi: Array[Int],
+private[sources] class ZarrGroupReaderFactory(shape: Array[Int], chunks: Array[Int],
+    primaryVars: Seq[ZarrGroupTableV2.Member], cols: Array[ZGCol],
+    lo: Array[Int], hi: Array[Int],
     conf: SerializableConfiguration) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -1207,18 +906,29 @@ private[sources] class ZarrGroupReaderFactory(dir: String, shape: Array[Int],
       case BundledPartition(ps) => return ChunkBundles.reader(ps, createReader)
       case _ =>
     }
-    val ci = partition.asInstanceOf[ZarrGroupChunkPartition].ci
+    val part = partition.asInstanceOf[ZarrGroupChunkPartition]
+    val ci = part.ci
     new PartitionReader[InternalRow] {
       private val nd = shape.length
-      private val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf.value)
-      // chunk-local window from the pushed dim ranges; sharded members
+      // the pushed ranges, narrowed to a micro-batch's time range
+      private val lo1 = lo.clone(); lo1(0) = math.max(lo(0), part.t0)
+      private val hi1 = hi.clone(); hi1(0) = math.min(hi(0), part.t1)
+      // chunk-local window of those ranges; sharded members
       // byte-range-read only the inner chunks it intersects
-      private val window = ZarrSource.localWindow(lo, hi, ci, chunks.toSeq, nd)
-      private val perVar: Seq[Array[Double]] =
-        primaryVars.map { case (n, m) =>
-          m.cfDecodeAll(ZarrGroup.chunkValuesWindow(fs, s"$dir/$n", m, ci,
-            window._1, window._2))
-        }
+      private val window = ZarrSource.localWindow(lo1, hi1, ci, chunks.toSeq, nd)
+      // each read member's decoded RAW chunk (null: absent, reads as
+      // fill); cells decode at emission, so a task holds one raw chunk per
+      // member and never a chunk-length array of doubles
+      private val metas = primaryVars.map(_.meta).toArray
+      private val raws: Array[Array[Byte]] = primaryVars.map { m =>
+        val fs = new org.apache.hadoop.fs.Path(m.dir).getFileSystem(conf.value)
+        ZarrGroup.chunkRaw(fs, m.dir, m.meta, ci, window._1, window._2).orNull
+      }.toArray
+      private val bufs = raws.indices.map { k =>
+        if (raws(k) == null) null
+        else ByteBuffer.wrap(raws(k)).order(ZarrSource.byteOrderOf(metas(k).dtype))
+      }.toArray
+      private val bps = metas.map(m => ZarrSource.bytesPer(m.dtype))
       private val n = chunks.product
       private val gidx = new Array[Int](nd)
       private var i = -1
@@ -1232,7 +942,7 @@ private[sources] class ZarrGroupReaderFactory(dir: String, shape: Array[Int],
           d = 0
           while (d < nd && ok) {
             val g = ci(d) * chunks(d) + gidx(d)
-            if (g >= shape(d) || g < lo(d) || g > hi(d)) ok = false else gidx(d) = g
+            if (g >= shape(d) || g < lo1(d) || g > hi1(d)) ok = false else gidx(d) = g
             d += 1
           }
           if (ok) return true
@@ -1252,7 +962,12 @@ private[sources] class ZarrGroupReaderFactory(dir: String, shape: Array[Int],
           rowVals(c) = cols(c) match {
             case ZGDimIdx(d) => gidx(d)
             case ZGCoord(d, values) => values(gidx(d))
-            case ZGPrimary(k) => perVar(k)(i)
+            case ZGPrimary(k) =>
+              // CF decode at emission (scale_factor/add_offset/_FillValue),
+              // exactly like the netcdf scan — raw stored values never leak
+              if (raws(k) == null) metas(k).decodedFill
+              else metas(k).cfDecode(
+                ZarrSource.cellValue(raws(k), bufs(k), metas(k).dtype, i, bps(k)))
             case ZGSecondary(dimPos, strides, sshape, values) =>
               var flat = 0L
               var ok = true

@@ -23,11 +23,12 @@ import org.json4s.jackson.JsonMethods
   *     listing of array `zarr.json`s. Dimension names come from
   *     `_ARRAY_DIMENSIONS` (v2 attrs) / `dimension_names` (v3 metadata).
   *
-  * Reads go through the `zarr` DataSourceV2: `format("zarr").load(dir)`
-  * is the group scan ([[ZarrGroupScan]], the wide `xr.open_zarr`), and
-  * `.option("var", name)` the scan of one member array. This object keeps
-  * the metadata walk ([[open]]), the chunk decoders the scans call, the
-  * driver-side whole-array decode ([[readWholeArray]]) and the writers.
+  * Reads go through the `zarr` DataSourceV2's one scan ([[ZarrGroupScan]],
+  * the wide `xr.open_zarr`): `format("zarr").load(dir)` reads every data
+  * variable, and `.option("var", name)` one member as a one-member layout.
+  * This object keeps the metadata walk ([[open]]), the chunk decode the
+  * scan calls ([[chunkRaw]]), the local whole-array decode
+  * ([[readWholeArray]]) and the writers.
   */
 object ZarrGroup extends Serializable {
 
@@ -279,46 +280,40 @@ object ZarrGroup extends Serializable {
     chunkBytes(fs, arrayDir, meta, ci) match {
       case None => Array.fill(chunkLen)(meta.fillValue)
       case Some(d) =>
-        cellsOf(ZarrSource.decodeChunk(d, meta, chunkLen * bp), meta, chunkLen, bp)
+        val raw = ZarrSource.decodeChunk(d, meta, chunkLen * bp)
+        val buf = ByteBuffer.wrap(raw).order(ZarrSource.byteOrderOf(meta.dtype))
+        Array.tabulate(chunkLen)(i => ZarrSource.cellValue(raw, buf, meta.dtype, i, bp))
     }
   }
 
-  /** [[chunkValues]] with a pushed chunk-LOCAL cell window: a SHARDED
-    * member byte-range-reads only its index + the inner chunks the window
-    * intersects ([[ZarrSource.readShardWindow]]); plain members load whole
-    * (the chunk file IS the fetch granularity there). Cells outside the
-    * window may be fill — callers bound their walks by the same window.
-    * Sharded chunks cost TWO round-trips (status for the end-index offset,
-    * then open) vs the plain path's one — the price of locating a tail
-    * index; full-window reads still collapse to one sequential object
-    * fetch inside readShardWindow. */
-  private[sources] def chunkValuesWindow(fs: org.apache.hadoop.fs.FileSystem,
+  /** One variable's chunk `ci` decoded to its C-order RAW cell bytes, or
+    * None when the chunk file is absent (it reads as fill). A SHARDED
+    * member byte-range-reads only its index + the inner chunks the
+    * chunk-LOCAL window `[loL, hiL]` intersects
+    * ([[ZarrSource.readShardWindow]]); cells outside the window may be fill
+    * — callers bound their walks by the same window. Plain members load
+    * whole (the chunk file IS the fetch granularity there). Sharded chunks
+    * cost TWO round-trips (status for the end-index offset, then open) vs
+    * the plain path's one — the price of locating a tail index; full-window
+    * reads still collapse to one sequential object fetch inside
+    * readShardWindow. */
+  private[sources] def chunkRaw(fs: org.apache.hadoop.fs.FileSystem,
       arrayDir: String, meta: ZarrSource.ZarrMeta, ci: Seq[Int],
-      loL: Array[Int], hiL: Array[Int]): Array[Double] =
+      loL: Array[Int], hiL: Array[Int]): Option[Array[Byte]] = {
+    val rawLen = meta.chunks.product * ZarrSource.bytesPer(meta.dtype)
     meta.shard match {
-      case None => chunkValues(fs, arrayDir, meta, ci)
+      case None =>
+        chunkBytes(fs, arrayDir, meta, ci).map(ZarrSource.decodeChunk(_, meta, rawLen))
       case Some(s) =>
-        val bp = ZarrSource.bytesPer(meta.dtype)
-        val chunkLen = meta.chunks.product
         val p = new org.apache.hadoop.fs.Path(arrayDir, ZarrSource.chunkKey(meta, ci))
-        val decoded =
-          try {
-            val len = fs.getFileStatus(p).getLen // FNF here = elided chunk
-            val in = fs.open(p)
-            try Some(ZarrSource.readShardWindow(ZarrSource.positionedReader(in),
-              len, meta, s, chunkLen * bp, loL, hiL))
-            finally in.close()
-          } catch { case _: java.io.FileNotFoundException => None }
-        decoded match {
-          case None => Array.fill(chunkLen)(meta.fillValue)
-          case Some(raw) => cellsOf(raw, meta, chunkLen, bp)
-        }
+        try {
+          val len = fs.getFileStatus(p).getLen // FNF here = elided chunk
+          val in = fs.open(p)
+          try Some(ZarrSource.readShardWindow(ZarrSource.positionedReader(in),
+            len, meta, s, rawLen, loL, hiL))
+          finally in.close()
+        } catch { case _: java.io.FileNotFoundException => None }
     }
-
-  private def cellsOf(raw: Array[Byte], meta: ZarrSource.ZarrMeta,
-      chunkLen: Int, bp: Int): Array[Double] = {
-    val buf = ByteBuffer.wrap(raw).order(ZarrSource.byteOrderOf(meta.dtype))
-    Array.tabulate(chunkLen)(i => ZarrSource.cellValue(raw, buf, meta.dtype, i, bp))
   }
 
   /** Materialize a rank-1 `<i8` axis as LONGS — the int64 dual of

@@ -26,7 +26,7 @@ class ZarrOutputSpec extends SparkSpec {
     TrackConfig(rFill = 0, tFill = 0, areaFilterQuartile = 0.0,
       dropSmallestObject = false, overlapThreshold = 0.2, allowMerging = true))
 
-  /** One member of a written group through its array scan: rank 3 reads
+  /** One member of a written group through its `var` read: rank 3 reads
     * as (t_idx, y, x, value), rank 2 as (t_idx, cell, value) — the axes in
     * storage order, whatever the member's dimension names. */
   private def member(dir: String, v: String) =
@@ -87,7 +87,7 @@ class ZarrOutputSpec extends SparkSpec {
     val presence = member(outDir, "presence")
     assert(presence.filter(col("value") === 1.0).count() == res.eventProps.count())
     // centroid(component, time, ID): component 0 = lat, 1 = lon, NaN
-    // padding elsewhere; the array scan names its leading axis t_idx
+    // padding elsewhere; a `var` read names its leading axis t_idx
     val cen = member(outDir, "centroid").filter(!isnan(col("value")))
     assert(cen.count() == 2 * res.eventProps.count())
     val clat = cen.filter(col("t_idx") === 0)

@@ -231,7 +231,7 @@ class ZarrGroupAppendSpec extends SparkSpec {
       "the MIDDLE axis must have grown")
     assert(g.members("time").meta.shape == Seq(5))
     // every member cell-for-cell equal to the one-shot build: the tuples
-    // share no primary grid, so each member reads through its array scan
+    // share no primary grid, so each member reads through its `var` read
     Seq("ID_field", "area", "centroid").foreach { v =>
       def member(dir: String) = spark.read.format("zarr").option("var", v).load(dir)
       val a = member(one)

@@ -129,4 +129,49 @@ class ZarrStreamSpec extends SparkSpec {
       col("value") =!= col("t_idx") * 10.0 + col("y") + col("x") * 0.5).count() == 0,
       "the late-landing slices must carry their real values, not fill")
   }
+
+  test("a growing 2-D (time, cell) array streams each new slice exactly once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_zstream2d").toFile
+      .getAbsolutePath + "/g"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_zstream2d_ck").toFile
+    val out = java.nio.file.Files.createTempDirectory("graft_zstream2d_out").toFile
+    val nc = 6
+    // block rows carry block-local time indices; the value encodes the
+    // global (time, cell)
+    def block(t0: Int, t1: Int) =
+      (for (t <- t0 until t1; c <- 0 until nc) yield (t - t0, c, t * 100.0 + c))
+        .toDF("time_idx", "cell_idx", "ev")
+    def runOnce(): Unit = {
+      val src = spark.readStream.format("zarr").option("var", "ev").load(dir)
+      assert(src.columns.toSeq == Seq("t_idx", "cell", "value"))
+      val q = src.writeStream.outputMode("append").format("parquet")
+        .option("path", out.getAbsolutePath)
+        .option("checkpointLocation", ckpt.getAbsolutePath)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+    }
+    def sink() = spark.read.parquet(out.getAbsolutePath)
+
+    // 6 slices, time-chunk 4: chunk row 1 holds t 4..5 of 4..7
+    ZarrGroup.writeDataset(block(0, 6), dir, dims = Seq(("time", 6), ("cell", nc)),
+      chunks = Seq(4, 3), valueCols = Seq("ev"))
+    runOnce()
+    assert(sink().count() == 6 * nc)
+
+    // append 5 slices: chunk row 1 straddles the committed offset 6
+    ZarrGroup.appendDataset(block(6, 11), dir, dims = Seq(("time", 5), ("cell", nc)),
+      chunks = Seq(4, 3), valueCols = Seq("ev"))
+    runOnce()
+    val all = sink()
+    assert(all.columns.toSeq == Seq("t_idx", "cell", "value"))
+    assert(all.count() == 11 * nc, "exactly the new slices were appended")
+    assert(all.select("t_idx", "cell").distinct().count() == all.count(),
+      "the straddled chunk must not re-deliver committed slices")
+    assert(all.filter(col("value") =!= col("t_idx") * 100.0 + col("cell")).count() == 0,
+      "values must match the (time, cell)-encoded grid")
+
+    // no growth → empty batch
+    runOnce()
+    assert(sink().count() == 11 * nc)
+  }
 }
